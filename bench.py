@@ -193,8 +193,8 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
     # operators accept walls= and record their OWN eager materialization
     # boundaries (telemetry.py), so the timed wall here IS the black-box
     # entry-query wall (ADVICE r4: the old staged minhash twin added two
-    # checkpoints that exact_overlap_metrics re-materialized, making the
-    # bench row incomparable round-over-round). The un-marked remainder
+    # checkpoints that its verify step re-materialized, making the bench
+    # row incomparable round-over-round). The un-marked remainder
     # (lazy candidate join + verify executing at the noop write) is derived
     # as rest_s = total − Σ(marked walls).
     import facematch_spark.operators.dedup as D

@@ -96,24 +96,23 @@ def snm_pairs(
     key_prefix: int = 12,
 ) -> DataFrame:
     """SNM near-dup pairs: sorted-neighborhood candidates verified with
-    exact char-k-gram Jaccard ≥ threshold (same verify tier as the PPJoin
-    path, so scores are bit-identical across candidate generators).
+    exact char-k-gram Jaccard ≥ threshold (``verify.exact_overlap``, the
+    tier every exact check uses, so scores are bit-identical across
+    candidate generators).
 
     Returns (id_a, id_b, jaccard) — a RECALL-limited but shuffle-minimal
     dedup: what SNM's window misses is the method's documented trade, not
     a bug; the exact-Jaccard entry is the recall oracle.
     """
-    from facematch_spark.operators.dedup import _verify_exact_jaccard, char_shingles
+    from facematch_spark.operators.dedup import char_shingles
+    from facematch_spark.operators.verify import exact_overlap
 
     base = docs.filter(F.length("text") >= k)
     cands = snm_candidates(base, window=window, key_prefix=key_prefix)
-    # multi-consumer (count + groupBy inside the verify tier) → one pin
-    sh = (
-        char_shingles(base, k)
-        .select("doc_id", F.xxhash64("shingle").alias("sh"))
-        .localCheckpoint()
+    sh = char_shingles(base, k).select(
+        F.col("doc_id").alias("file_id"), F.xxhash64("shingle").alias("shingle")
     )
-    return _verify_exact_jaccard(cands, sh, threshold)
+    return exact_overlap(cands, sh, threshold).drop("containment")
 
 
 def edit_distance_pairs(

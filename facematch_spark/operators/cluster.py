@@ -228,18 +228,3 @@ def _star_contraction(pairs: DataFrame, max_iter: int) -> DataFrame:
         "cluster_id", F.col("file_id")
     )
     return labels.unionByName(loners)
-
-
-def cluster_exemplars(clusters: DataFrame, signatures: DataFrame) -> DataFrame:
-    """Pick one exemplar per cluster: the longest-content member, ties by id
-    (deterministic). Window-based top-1 per group — the reference's analog is
-    the report's visual grouping (``report.html:116-121``)."""
-    from pyspark.sql import Window as W
-
-    joined = clusters.join(signatures.select("file_id", "content_len"), "file_id")
-    w = W.partitionBy("cluster_id").orderBy(F.desc("content_len"), F.asc("file_id"))
-    return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("cluster_id", F.col("file_id").alias("exemplar_id"))
-    )

@@ -3,17 +3,20 @@
 generalization of the core engine (SURVEY.md §2 + driver brief):
 
   * exact dedup        — hash groupBy (md5 key), pure SQL
-  * n-gram Jaccard     — exact char-k-gram Jaccard via shingle equi-join,
-                         pure built-in expressions (sequence/transform/
-                         array_distinct/explode), SQL-oracle-checkable
+  * n-gram Jaccard     — exact char- or token-k-gram Jaccard: PPJoin prefix
+                         candidates, within one corpus or across two
   * MinHash + LSH      — the scale path (signatures → bands → join)
   * SimHash            — Hamming-ball near-dup pairs
   * containment        — substring dups via prefix-shingle candidate join
   * connected comps    — cluster ids over any of the pair relations
 
-Exact-Jaccard here uses *string* shingles through Spark built-ins (no UDF, no
-hashing) so the DuckDB oracle can reproduce values bit-for-bit; the MinHash
-path reuses the engine's vectorized kernels.
+Every exact-Jaccard operator here verifies its candidates in
+``verify.exact_overlap``, the tier the shipped ``run_dedupe`` pipeline uses,
+so scores are the same doubles whichever generator found the pair. The
+n-gram operators shingle through Spark built-ins (sequence / transform /
+array_distinct / explode — no UDF) so the DuckDB oracle reproduces their
+values from the same string k-grams; the MinHash operators reuse the
+engine's vectorized shingle kernels.
 """
 
 from __future__ import annotations
@@ -24,13 +27,8 @@ from pyspark.sql import functions as F
 from facematch_spark.config import DedupeConfig
 from facematch_spark.operators import lsh as L
 from facematch_spark.operators import signatures as SIG
+from facematch_spark.operators import verify as V
 from facematch_spark.telemetry import mark, start
-
-# Shingle-relation size under which the exact-Jaccard verify tier broadcasts
-# the per-doc sorted hash arrays (one flat int64 buffer, ≈ 40 MB at the
-# gate) instead of joining them through the shuffle. Module-level so tests
-# can force the fallback tier.
-BROADCAST_SHINGLE_LIMIT = 5_000_000
 
 # Rows per partition for the PPJoin prefix self-join's shuffled-hash build:
 # a prefix row is 4 longs but its LongToUnsafeRowMap entry is ~100-300 B
@@ -153,9 +151,10 @@ def ngram_jaccard_pairs(
          (the skew risk — sum over shingles of count² explodes on word-soup
          corpora) sit at the END of the frequency order and never enter the
          join;
-      3. exact verification: per candidate pair, intersect the full sorted
-         hash arrays in an Arrow-batched NumPy stage (np.intersect1d),
-         compute jaccard = |∩| / (n_a + n_b - |∩|), filter.
+      3. exact verification: the candidates go through the shared
+         ``verify.exact_overlap`` tier, which intersects the full sorted
+         hash arrays in an Arrow-batched NumPy stage and keeps
+         jaccard = |∩| / (n_a + n_b - |∩|) ≥ threshold.
 
     Exactness: step 2 is a lossless filter (prefix-filter theorem), step 3
     is exact set intersection — output matches the naive all-shared-shingle
@@ -165,9 +164,9 @@ def ngram_jaccard_pairs(
 
     shingler = {"char": char_shingles, "token": token_shingles}[shingle_kind]
     t0 = start()
-    # materialize once: the shingle relation feeds five consumers (freq,
-    # rank, cardinality, broadcast collect, fallback arrays) — without a
-    # checkpoint each one would re-run the explode+hash lineage
+    # materialize once: the shingle relation feeds the frequency / rank
+    # windows and the verify tier — without a checkpoint each one would
+    # re-run the explode+hash lineage
     sh = (
         shingler(docs, k)
         .select("doc_id", F.xxhash64("shingle").alias("sh"))
@@ -196,7 +195,7 @@ def ngram_jaccard_pairs(
         .select("doc_id", "sh", "rnk", "n_sh")
         .localCheckpoint()  # feeds both sides of the self-join
     )
-    t0 = mark(walls, "prefix_s", t0)
+    mark(walls, "prefix_s", t0)
 
     # candidate join with the lossless PPJoin filters:
     #   length filter:   t·n_a ≤ n_b ≤ n_a/t  (else J < t regardless);
@@ -250,130 +249,8 @@ def ngram_jaccard_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
 
-    return _verify_exact_jaccard(cands, sh, threshold, walls=walls, t0=t0)
-
-
-def _verify_exact_jaccard(
-    cands: DataFrame, sh: DataFrame, threshold: float, walls: dict | None = None, t0=None
-) -> DataFrame:
-    """Exact-Jaccard verification tier shared by the self-join and
-    cross-corpus PPJoin operators — JVM-only (guide §4.1: the previous
-    row-at-a-time Python verify walked every candidate pair through a
-    mapInPandas loop; on word-soup corpora the PPJoin prefix filter leaves
-    ~10³× more candidates than matches, so the boundary dominated):
-
-      * per-doc sorted shingle-hash arrays are built distributed (one
-        groupBy, pinned once — both join sides consume it);
-      * candidates attach both arrays via hash joins — BROADCAST when the
-        shingle relation is small enough (≤ 5M rows ≈ 40 MB of array
-        payload — candidates never shuffle at all), shuffled-hash past the
-        gate (same results, the arrays ride the exchange);
-      * ``jaccard = |A∩B| / (n_a + n_b − |A∩B|)`` — integer-ratio doubles,
-        identical values in both tiers (a JVM ``array_intersect`` form was
-        tried and rejected: its per-row hash-set build is ~5× slower than
-        the searchsorted kernel at this candidate volume).
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    n_shingle_rows = sh.count()
-
-    def _merge_intersect(flat: np.ndarray, sa: int, ea: int, sb: int, eb: int) -> float:
-        # sorted-merge intersection via one searchsorted of the smaller set
-        # into the larger — O(m log n), no per-pair concat+sort allocation
-        # (np.intersect1d sorts the 2n-element concatenation every call)
-        if ea - sa < eb - sb:
-            sa, ea, sb, eb = sb, eb, sa, ea
-        big, small = flat[sa:ea], flat[sb:eb]
-        idx = np.searchsorted(big, small)
-        idx[idx == big.size] = 0
-        inter = int(np.count_nonzero(big[idx] == small))
-        return inter / ((ea - sa) + (eb - sb) - inter)
-
-    if n_shingle_rows <= BROADCAST_SHINGLE_LIMIT:
-        # Raw Arrow collect of the flat (doc_id, sh) relation — no groupBy
-        # shuffle, no per-doc sort_array: ONE driver-side lexsort orders the
-        # whole buffer by (doc_id, sh), which IS the concatenation of every
-        # doc's sorted array. The broadcast payload is that single int64
-        # block + an id→(start,end) offset dict: a dict of n_docs separate
-        # NumPy arrays would pickle and unpickle per-object in every verify
-        # worker; the flat buffer moves as one zero-copy block.
-        sh_pdf = sh.toPandas()
-        ids_all = sh_pdf["doc_id"].to_numpy()
-        vals_all = sh_pdf["sh"].to_numpy()
-        order = np.lexsort((vals_all, ids_all))
-        flat = np.ascontiguousarray(vals_all[order], dtype=np.int64)
-        ids_sorted = ids_all[order]
-        uniq, starts = np.unique(ids_sorted, return_index=True)
-        bounds = np.append(starts, len(ids_sorted))
-        offsets: dict[int, tuple[int, int]] = {
-            int(d): (int(bounds[i]), int(bounds[i + 1])) for i, d in enumerate(uniq)
-        }
-        bc = sh.sparkSession.sparkContext.broadcast((flat, offsets))
-        if t0 is not None:
-            mark(walls, "bcast_collect_s", t0)
-
-        def verify_bc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            bflat, boff = bc.value
-            _absent = (0, 0)
-            for pdf in it:
-                n = len(pdf)
-                jac = np.full(n, -1.0, dtype=np.float64)
-                ids_a, ids_b = pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy()
-                for i in range(n):
-                    # an id with NO shingle rows (possible when candidates
-                    # come from a different generator than the shingle
-                    # relation, e.g. MinHash bands) drops the pair — same
-                    # semantics as the distributed tier's inner array joins
-                    sa, ea = boff.get(ids_a[i], _absent)
-                    sb, eb = boff.get(ids_b[i], _absent)
-                    if ea > sa and eb > sb:
-                        jac[i] = _merge_intersect(bflat, sa, ea, sb, eb)
-                out = pdf.assign(jaccard=jac)
-                yield out[out["jaccard"] >= threshold]
-
-        # candidates are (long, long) rows: spread them to full cluster
-        # width before the Python stage (AQE coalesces the upstream dedup
-        # exchange to a handful of partitions by byte size, which would cap
-        # verify at that many tasks — the repartition costs a ~16 B/row
-        # shuffle and restores the parallelism)
-        cands = cands.repartition(sh.sparkSession.sparkContext.defaultParallelism)
-        return cands.mapInPandas(verify_bc, schema="id_a long, id_b long, jaccard double")
-
-    # Past-the-gate tier: reduce the shingle relation to candidate docs
-    # before building arrays (guide §3.2's semi-join reduction — at scale
-    # most docs have no candidate pair, and their arrays would otherwise
-    # ride the groupBy and both attach exchanges for nothing). cands gains
-    # a second consumer (the id projection) → pin it once.
-    cands = cands.localCheckpoint()
-    ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .union(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    sh = sh.join(ids, "doc_id", "left_semi")
-    arrays = sh.groupBy("doc_id").agg(F.sort_array(F.collect_list("sh")).alias("arr"))
-    paired = (
-        cands.join(arrays.select(F.col("doc_id").alias("id_a"), F.col("arr").alias("arr_a")), "id_a")
-        .join(arrays.select(F.col("doc_id").alias("id_b"), F.col("arr").alias("arr_b")), "id_b")
-    )
-
-    def verify(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            jac = np.empty(n, dtype=np.float64)
-            aa, bb = pdf["arr_a"].to_numpy(), pdf["arr_b"].to_numpy()
-            for i in range(n):
-                x = np.asarray(aa[i], dtype=np.int64)
-                y = np.asarray(bb[i], dtype=np.int64)
-                inter = np.intersect1d(x, y, assume_unique=True).size
-                jac[i] = inter / (x.size + y.size - inter)
-            out = pd.DataFrame({"id_a": pdf["id_a"], "id_b": pdf["id_b"], "jaccard": jac})
-            yield out[out["jaccard"] >= threshold]
-
-    return paired.mapInPandas(verify, schema="id_a long, id_b long, jaccard double")
+    shingles = sh.select(F.col("doc_id").alias("file_id"), F.col("sh").alias("shingle"))
+    return V.exact_overlap(cands, shingles, threshold, walls=walls).drop("containment")
 
 
 def docs_as_source_files(docs: DataFrame) -> DataFrame:
@@ -420,24 +297,16 @@ def minhash_lsh_exact_pairs(
     1.5e-4), the output equals the brute-force Jaccard join over the same
     normalized text, which DuckDB can reproduce.
 
-    Verification rides the shared ``_verify_exact_jaccard`` tier (broadcast
-    flat-buffer kernel under the 5M-row gate, distributed array join past
-    it) — same |A∩B| / (n_a + n_b − |A∩B|) integer-ratio doubles the old
-    ``exact_overlap_metrics`` form produced, but as ONE collect + ONE
-    mapInPandas instead of a 7-join dataflow (guide §2.4: the semi-join,
-    cardinality agg and three attach joins all disappear; measured ~2×
-    on the bench row)."""
+    Verification is the shared ``verify.exact_overlap`` tier, the one
+    ``run_dedupe`` uses — |A∩B| / (n_a + n_b − |A∩B|) integer-ratio
+    doubles from one sorted-array intersection kernel."""
     sigs = doc_signatures(docs, cfg)
     t0 = start()
     cands = L.candidate_pairs(sigs, cfg).localCheckpoint()
     t0 = mark(walls, "cand_s", t0)
-    sh = (
-        doc_shingles(docs, cfg)
-        .select(F.col("file_id").alias("doc_id"), F.col("shingle").alias("sh"))
-        .localCheckpoint()
-    )
-    t0 = mark(walls, "shingle_s", t0)
-    return _verify_exact_jaccard(cands, sh, cfg.jaccard_threshold, walls=walls, t0=t0)
+    sh = doc_shingles(docs, cfg).localCheckpoint()
+    mark(walls, "shingle_s", t0)
+    return V.exact_overlap(cands, sh, cfg.jaccard_threshold, walls=walls).drop("containment")
 
 
 def minhash_lsh_exact_pairs_between(
@@ -452,8 +321,8 @@ def minhash_lsh_exact_pairs_between(
     groups on the held-out side are salted, train probes replicated), so
     boilerplate bands cannot concentrate a reducer. Same disjoint-doc_id
     requirement as the exact cross form. Recall vs the exact operator is
-    pytest-gated at the planted-dup Jaccard level. Verification rides the
-    shared ``_verify_exact_jaccard`` tier (see the self-join form)."""
+    pytest-gated at the planted-dup Jaccard level. Verification is the
+    shared ``verify.exact_overlap`` tier (see the self-join form)."""
     bands_l = (
         L.band_explode(doc_signatures(left, cfg), cfg)
         .withColumnRenamed("file_id", "id_a")
@@ -473,14 +342,9 @@ def minhash_lsh_exact_pairs_between(
         n_build=bands_r.count(),  # pinned: block-manager scan
     ).dropDuplicates(["id_a", "id_b"]).localCheckpoint()
     t0 = mark(walls, "cand_s", t0)
-    sh = (
-        doc_shingles(left, cfg)
-        .unionByName(doc_shingles(right, cfg))
-        .select(F.col("file_id").alias("doc_id"), F.col("shingle").alias("sh"))
-        .localCheckpoint()
-    )
-    t0 = mark(walls, "shingle_s", t0)
-    return _verify_exact_jaccard(cands, sh, cfg.jaccard_threshold, walls=walls, t0=t0)
+    sh = doc_shingles(left, cfg).unionByName(doc_shingles(right, cfg)).localCheckpoint()
+    mark(walls, "shingle_s", t0)
+    return V.exact_overlap(cands, sh, cfg.jaccard_threshold, walls=walls).drop("containment")
 
 
 def minhash_lsh_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
@@ -491,9 +355,7 @@ def minhash_lsh_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
     # sigs feed candidate generation AND metric attachment — sign once
     sigs = doc_signatures(docs, cfg).localCheckpoint()
     cands = L.candidate_pairs(sigs, cfg)
-    from facematch_spark.operators.verify import attach_signature_metrics
-
-    m = attach_signature_metrics(cands, sigs)
+    m = V.attach_signature_metrics(cands, sigs)
     return m.filter(F.col("minhash_est") >= F.lit(cfg.jaccard_threshold)).select(
         "id_a", "id_b", "minhash_est"
     )
@@ -841,7 +703,7 @@ def ngram_jaccard_pairs_between(
     the selectivity heuristic, exactly as in the self-join form.
 
     Requires the two corpora's ``doc_id`` spaces to be disjoint (the
-    verification tier keys its broadcast arrays by doc_id alone); callers
+    verification tier keys its shingle arrays by doc_id alone); callers
     with overlapping id spaces must re-key one side first.
     """
     from pyspark.sql import Window as W
@@ -886,7 +748,8 @@ def ngram_jaccard_pairs_between(
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _verify_exact_jaccard(cands, sh_tagged.drop("_side"), threshold)
+    shingles = sh_tagged.select(F.col("doc_id").alias("file_id"), F.col("sh").alias("shingle"))
+    return V.exact_overlap(cands, shingles, threshold).drop("containment")
 
 
 def decontaminate(

@@ -44,9 +44,9 @@ from pyspark.sql import functions as F
 
 # Vertex count under which per-vertex relations (degrees, PageRank
 # contributions) are broadcast instead of shuffled — same order as the
-# engine's other broadcast gates (verify.ATTACH_BROADCAST_IDS_MAX, the
-# ngram 5M shingle tier): 2M vertices ≈ 32 MB of (id, long) pairs. Past
-# it the shuffled-hash joins below are the scale-correct plan.
+# engine's other broadcast gates (verify.ATTACH_BROADCAST_IDS_MAX,
+# verify.BROADCAST_SHINGLE_LIMIT): 2M vertices ≈ 32 MB of (id, long)
+# pairs. Past it the shuffled-hash joins below are the scale-correct plan.
 BROADCAST_VERTEX_MAX = 2_000_000
 
 

@@ -231,7 +231,7 @@ def salted_probe_join(
     right_id: str,
     cap: int,
     salt_buckets: int,
-    n_build: int | None = None,
+    n_build: int,
 ) -> DataFrame:
     """Skew-safe ASYMMETRIC equi-join on ``keys`` → ``(left_id, right_id)``
     rows — the probe→build sibling of ``tiered_self_join`` for candidate
@@ -254,19 +254,19 @@ def salted_probe_join(
     # its broadcast is what lets the big probe side stream un-shuffled.
     normal_p = probes_sized.filter(F.col("g") <= cap).drop("g")
     normal_b = build_sized.filter(F.col("g") <= cap).drop("g")
-    # ``n_build`` (callers holding a pinned build relation pass its count)
-    # SIZE-DERIVES the join partitioning so the un-spillable hash build
-    # stays bounded per task (same pattern as tiered_self_join / the PPJoin
-    # prefix join; the run-E failure sequence was auto-broadcast abort →
-    # hint-only SHJ build OOM → this). Explicit partition counts also stop
-    # AQE from coalescing the build exchange past the build's memory bound.
-    if n_build is not None:
-        parts = max(
-            build.sparkSession.sparkContext.defaultParallelism,
-            int(n_build // TIER_ROWS_PER_PARTITION) + 1,
-        )
-        normal_p = normal_p.repartition(parts, *keys)
-        normal_b = normal_b.repartition(parts, *keys)
+    # ``n_build`` (the build relation's row count — callers pin the build
+    # side and pass its count) SIZE-DERIVES the join partitioning so the
+    # un-spillable hash build stays bounded per task (same pattern as
+    # tiered_self_join / the PPJoin prefix join; the run-E failure sequence
+    # was auto-broadcast abort → hint-only SHJ build OOM → this). Explicit
+    # partition counts also stop AQE from coalescing the build exchange past
+    # the build's memory bound.
+    parts = max(
+        build.sparkSession.sparkContext.defaultParallelism,
+        int(n_build // TIER_ROWS_PER_PARTITION) + 1,
+    )
+    normal_p = normal_p.repartition(parts, *keys)
+    normal_b = normal_b.repartition(parts, *keys)
     normal = normal_p.join(normal_b.hint("shuffle_hash"), keys).select(left_id, right_id)
 
     s = salt_buckets
@@ -276,19 +276,7 @@ def salted_probe_join(
     hot_p = probes_sized.filter(F.col("g") > cap).drop("g").withColumn(
         "bkt", F.explode(F.sequence(F.lit(0), F.lit(s - 1)))
     )
-    if n_build is not None:
-        hot_p = hot_p.repartition(parts, *keys, "bkt")
-        hot_b = hot_b.repartition(parts, *keys, "bkt")
+    hot_p = hot_p.repartition(parts, *keys, "bkt")
+    hot_b = hot_b.repartition(parts, *keys, "bkt")
     hot = hot_p.join(hot_b.hint("shuffle_hash"), [*keys, "bkt"]).select(left_id, right_id)
     return normal.unionByName(hot)
-
-
-def crossjoin_pairs(signatures: DataFrame) -> DataFrame:
-    """O(N^2) all-pairs fallback — the faithful analog of the reference's
-    nested loop (``utils.py:228-246``), kept for tiny inputs and as the
-    recall oracle in tests. Never use at scale."""
-    ok = signatures.filter(F.col("status") == "ok").select("file_id")
-    a, b = ok.alias("a"), ok.alias("b")
-    return a.join(b, F.col("a.file_id") < F.col("b.file_id")).select(
-        F.col("a.file_id").alias("id_a"), F.col("b.file_id").alias("id_b")
-    )

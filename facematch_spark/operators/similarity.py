@@ -40,12 +40,6 @@ def _norm(a):
     )
 
 
-def with_unit_norm(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Attach the L2 norm; keeps raw vectors (normalizing in place would lose
-    the magnitude some downstream scoring wants)."""
-    return vectors.withColumn("l2norm", _norm(F.col(vec_col)))
-
-
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,

@@ -1,26 +1,32 @@
-"""Candidate verification: exact Jaccard / Hamming / containment.
+"""Candidate verification: the paper's third stage, which checks each
+candidate pair against a threshold (reference ``utils.py:243-246``).
 
-Replaces the reference's per-pair ``DeepFace.verify`` call + threshold
-(``utils.py:243-246``). Three verification signals:
+There is one exact tier, ``exact_overlap``. The shipped pipeline reaches it
+through ``verify_candidates``; the dedup queries call it directly with their
+own candidates (PPJoin prefixes, MinHash bands, SNM windows). The signals:
 
-  * ``minhash_est`` — estimated Jaccard = fraction of equal signature
-    positions. Computed JVM-side with ``zip_with`` + ``filter``+``size`` —
-    stays in whole-stage codegen, no Python.
-  * ``hamming`` — SimHash bit distance, ``bit_count(simhash_a ^ simhash_b)``,
-    pure SQL.
   * ``jaccard`` / ``containment`` — exact values over the distinct shingle
-    sets, via a distributed shingle equi-join (no content re-reads, no
-    stored shingle arrays in the signatures table). ``containment`` is
-    ``|A∩B| / min(|A|,|B|)`` — 1.0 when the smaller file's shingles are a
-    subset of the larger's (the "file embedded verbatim in a bigger file"
-    case). Borderline containment candidates can be settled exactly with the
-    suffix-automaton longest-common-substring check (``lcs_coverage``).
+    sets, from one sorted-array intersection kernel in an Arrow-batched
+    NumPy stage. ``containment`` is ``|A∩B| / min(|A|,|B|)`` — 1.0 when the
+    smaller file's shingles are a subset of the larger's (the "file
+    embedded verbatim in a bigger file" case).
+  * ``minhash_est`` — estimated Jaccard = fraction of equal signature
+    positions, computed JVM-side with ``zip_with`` + ``filter`` + ``size``.
+  * ``hamming`` — SimHash bit distance, ``bit_count(simhash_a ^ simhash_b)``.
+
+Both metric paths first cut their per-file relation to the files that
+appear in a candidate pair (``_semi_to_candidates``). Size gates pick
+broadcast or shuffle plans; both sides of every gate give the same rows
+and the same doubles. Borderline containment candidates can be settled
+exactly with the suffix-automaton longest-common-substring check
+(``lcs_coverage``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,12 +36,11 @@ from facematch_spark.telemetry import mark, start
 
 
 # Candidate volume under which the distinct candidate-id set is broadcast to
-# semi-join the signature relation down to participating files before the two
-# metric joins. 2M pairs → ≤4M distinct ids ≈ 32 MB broadcast — the same
-# order as the ngram broadcast tier (dedup.py) and ANN corpus gate
-# (similarity.py). Past it the reduction is skipped: at 10^12-file scale the
-# id set no longer fits a broadcast and the full-shuffle joins below are the
-# scale-correct plan.
+# semi-join a per-file relation (signatures, shingles) down to participating
+# files. 2M pairs → ≤4M distinct ids ≈ 32 MB broadcast — the same order as
+# the shingle broadcast below and the ANN corpus gate (similarity.py). Past
+# it the semi-join shuffles: at 10^12-file scale the id set no longer fits a
+# broadcast.
 ATTACH_BROADCAST_IDS_MAX = 2_000_000
 
 # Candidate volume under which the semi-reduced SIGNATURE relation itself is
@@ -45,6 +50,35 @@ ATTACH_BROADCAST_IDS_MAX = 2_000_000
 # array payload outgrows a broadcast and the shuffled-hash joins below are
 # the scale-correct plan.
 ATTACH_BROADCAST_SIGS_MAX_PAIRS = 25_000
+
+# Shingle rows, after the cut to candidate files, under which
+# ``exact_overlap`` broadcasts one flat sorted int64 buffer (≈ 40 MB at the
+# gate) instead of grouping per-file sorted arrays through the shuffle.
+# Module-level so tests can force the other branch.
+BROADCAST_SHINGLE_LIMIT = 5_000_000
+
+_OVERLAP_SCHEMA = "id_a long, id_b long, jaccard double, containment double"
+
+
+def _pin(pairs: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize the candidate relation once — it feeds the id cut and
+    the metric joins — and count it: the count picks the gates."""
+    pairs = pairs.localCheckpoint()
+    return pairs, pairs.count()
+
+
+def _semi_to_candidates(rel: DataFrame, pairs: DataFrame, n_pairs: int) -> DataFrame:
+    """``rel`` (keyed by ``file_id``) left-semi reduced to the files of a
+    candidate pair. Under ``ATTACH_BROADCAST_IDS_MAX`` the distinct id set is
+    broadcast, a shuffle-free cut; past it the semi-join shuffles."""
+    ids = (
+        pairs.select(F.col("id_a").alias("file_id"))
+        .union(pairs.select(F.col("id_b").alias("file_id")))
+        .distinct()
+    )
+    if n_pairs <= ATTACH_BROADCAST_IDS_MAX:
+        ids = F.broadcast(ids)
+    return rel.join(ids, "file_id", "left_semi")
 
 
 def attach_signature_metrics(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
@@ -57,34 +91,20 @@ def attach_signature_metrics(pairs: DataFrame, signatures: DataFrame) -> DataFra
     sort-merge join would SORT the candidate side with those arrays
     attached — a multi-GB spill at 10M+ candidates. Hash join builds on
     the (much smaller) signature relation and streams the candidates
-    through unsorted.
+    through unsorted. The signatures are cut to candidate files first
+    (``_semi_to_candidates``), which drops the array shuffle by the
+    non-candidate fraction of the corpus."""
+    return _signature_metrics(*_pin(pairs), signatures)
 
-    The signature relation is the heaviest thing this operator moves (~1 KB
-    of minhash per row, shuffled TWICE — once per pair side). When the
-    candidate set is small enough to enumerate (≤ ``ATTACH_BROADCAST_IDS_MAX``
-    pairs), its distinct ids are broadcast and the signatures are left-semi
-    reduced to participating files first — a shuffle-free cut that typically
-    drops the array shuffle by the non-candidate fraction of the corpus.
-    ``pairs`` is localCheckpointed here because it feeds the id enumeration
-    and both metric joins; callers that already materialized it pay one
-    cheap re-checkpoint of a KB-scale pair relation."""
-    pairs = pairs.localCheckpoint()
-    n_pairs = pairs.count()
-    sig = signatures.select("file_id", "minhash", "simhash")
-    if n_pairs <= ATTACH_BROADCAST_IDS_MAX:
-        ids = (
-            pairs.select(F.col("id_a").alias("file_id"))
-            .union(pairs.select(F.col("id_b").alias("file_id")))
-            .distinct()
-        )
-        sig = sig.join(F.broadcast(ids), "file_id", "left_semi")
+
+def _signature_metrics(pairs: DataFrame, n_pairs: int, signatures: DataFrame) -> DataFrame:
+    sig = _semi_to_candidates(signatures.select("file_id", "minhash", "simhash"), pairs, n_pairs)
     if n_pairs <= ATTACH_BROADCAST_SIGS_MAX_PAIRS:
         # The semi-reduced signature relation has ≤ 2·n_pairs rows; under
         # this (much lower) gate it fits a broadcast outright, so BOTH
         # metric joins run map-side and the candidate relation never
         # crosses an exchange at all (guide §3.1; measured ~25% off the
-        # headline dedupe_e2e wall at sf0.1). The gates are ordered: the
-        # semi reduction above is what makes this relation enumerable.
+        # headline dedupe_e2e wall at sf0.1).
         a = F.broadcast(sig.alias("sa"))
         b = F.broadcast(sig.alias("sb"))
     else:
@@ -108,60 +128,121 @@ def attach_signature_metrics(pairs: DataFrame, signatures: DataFrame) -> DataFra
     )
 
 
-def exact_overlap_metrics(
-    pairs: DataFrame, shingles: DataFrame, walls: dict | None = None
+def _intersect_size(x: np.ndarray, y: np.ndarray) -> int:
+    """|x ∩ y| of two non-empty sorted distinct int64 arrays: one
+    searchsorted of the smaller into the larger, O(m log n)."""
+    if x.size < y.size:
+        x, y = y, x
+    idx = np.searchsorted(x, y)
+    idx[idx == x.size] = 0
+    return int(np.count_nonzero(x[idx] == y))
+
+
+def _score(
+    ids_a: np.ndarray, ids_b: np.ndarray, xs: list, ys: list, threshold: float
+) -> pd.DataFrame:
+    """Exact metrics of pairs whose sorted shingle arrays are ``xs``/``ys``.
+    Integer-ratio doubles: the same values as the SQL ``inter / (n_a + n_b
+    - inter)`` over counts."""
+    n_a = np.array([x.size for x in xs], dtype=np.int64)
+    n_b = np.array([y.size for y in ys], dtype=np.int64)
+    inter = np.array([_intersect_size(x, y) for x, y in zip(xs, ys)], dtype=np.int64)
+    out = pd.DataFrame({
+        "id_a": ids_a,
+        "id_b": ids_b,
+        "jaccard": inter / (n_a + n_b - inter),
+        "containment": inter / np.minimum(n_a, n_b),
+    })
+    return out[out["jaccard"] >= threshold]
+
+
+def exact_overlap(
+    pairs: DataFrame,
+    shingles: DataFrame,
+    threshold: float = 0.0,
+    walls: dict | None = None,
 ) -> DataFrame:
-    """Exact Jaccard + containment for candidate pairs via shingle equi-join.
+    """Candidate ``(id_a, id_b)`` rows + distinct ``(file_id, shingle)`` rows
+    → ``(id_a, id_b, jaccard, containment)`` for every pair with
+    ``jaccard ≥ threshold``. A pair with an id that has no shingle rows is
+    dropped.
 
-    ``shingles`` is the exploded ``(file_id, shingle)`` relation (distinct).
-    The intersection count is computed PER CANDIDATE PAIR: pairs pick up
-    id_a's shingles, then equi-join on ``(id_b, shingle)`` — a row survives
-    iff the shingle is in both docs, so the count per (id_a, id_b) is
-    |A ∩ B|. Cost is Σ over pairs of |A| join rows, i.e. proportional to
-    candidate volume × doc size — NOT to shingle co-occurrence. (The naive
-    shingle self-join is a skew trap: a boilerplate shingle shared by f docs
-    emits f²/2 join rows regardless of how many of those docs are candidate
-    pairs.) Only shingles of candidate ids participate (semi-join pushdown).
+    The candidates are pinned, the shingles are cut to candidate files and
+    pinned, and ``BROADCAST_SHINGLE_LIMIT`` picks the branch:
+
+      * under the gate, one driver-side lexsort turns the collected rows
+        into a flat int64 buffer that is the concatenation of every file's
+        sorted array, plus the sorted file ids and their offsets; it moves
+        to the workers as one broadcast block and the candidates stream
+        past it in Arrow batches — no join, no per-file objects;
+      * past the gate, per-file sorted arrays are grouped through the
+        shuffle and joined to both pair sides.
+
+    Both branches run the same intersection kernel, so they produce the
+    same rows and the same doubles (a JVM ``array_intersect`` form was
+    measured ~5× slower than the kernel at PPJoin candidate volumes, where
+    candidates outnumber matches ~10³×). ``walls`` gets ``bcast_collect_s`` when
+    the broadcast branch is taken (telemetry.py).
     """
-    # materialize both multi-consumer relations once: `pairs` feeds the id
-    # projection, the intersection join and the final output join; the
-    # semi-joined shingle relation feeds the cardinality agg and both sides
-    # of the intersection join — without the cuts the upstream candidate /
-    # explode DAGs would execute 2-3x
+    return _overlap(*_pin(pairs), shingles, threshold, walls)
+
+
+def _overlap(
+    pairs: DataFrame,
+    n_pairs: int,
+    shingles: DataFrame,
+    threshold: float = 0.0,
+    walls: dict | None = None,
+) -> DataFrame:
     t0 = start()
-    pairs = pairs.localCheckpoint()
-    t0 = mark(walls, "cand_s", t0)  # includes the whole upstream pairs DAG
-    ids = pairs.select(F.col("id_a").alias("file_id")).union(
-        pairs.select(F.col("id_b").alias("file_id"))
-    ).distinct()
-    sh = shingles.join(ids, "file_id", "left_semi").localCheckpoint()
-    t0 = mark(walls, "shingle_semi_s", t0)
+    spark = pairs.sparkSession
+    sh = _semi_to_candidates(shingles.select("file_id", "shingle"), pairs, n_pairs).localCheckpoint()
+    if sh.count() <= BROADCAST_SHINGLE_LIMIT:
+        pdf = sh.toPandas()
+        ids = pdf["file_id"].to_numpy(dtype=np.int64)
+        vals = pdf["shingle"].to_numpy(dtype=np.int64)
+        order = np.lexsort((vals, ids))
+        flat = np.ascontiguousarray(vals[order])
+        uniq, starts = np.unique(ids[order], return_index=True)
+        bounds = np.append(starts, flat.size)
+        bc = spark.sparkContext.broadcast((flat, uniq, bounds))
+        mark(walls, "bcast_collect_s", t0)
 
-    card = sh.groupBy("file_id").agg(F.count("*").alias("n_sh"))
+        def score_flat(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            bflat, buniq, bbounds = bc.value
+            index = pd.Index(buniq)
+            for pdf in it:
+                ids_a = pdf["id_a"].to_numpy(dtype=np.int64)
+                ids_b = pdf["id_b"].to_numpy(dtype=np.int64)
+                pa, pb = index.get_indexer(ids_a), index.get_indexer(ids_b)
+                keep = (pa >= 0) & (pb >= 0)  # -1: no shingle rows
+                xs = [bflat[bbounds[p]:bbounds[p + 1]] for p in pa[keep]]
+                ys = [bflat[bbounds[p]:bbounds[p + 1]] for p in pb[keep]]
+                yield _score(ids_a[keep], ids_b[keep], xs, ys, threshold)
 
-    sh_a = sh.select(F.col("file_id").alias("id_a"), "shingle")
-    sh_b = sh.select(F.col("file_id").alias("id_b"), "shingle")
-    inter = (
-        pairs.select("id_a", "id_b")
-        .join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
+        # candidates are (long, long) rows: spread them to full cluster
+        # width before the Python stage (AQE coalesces upstream exchanges
+        # to a handful of partitions by byte size, which would cap the
+        # stage at that many tasks)
+        pairs = pairs.repartition(spark.sparkContext.defaultParallelism)
+        return pairs.mapInPandas(score_flat, schema=_OVERLAP_SCHEMA)
+
+    arrays = sh.groupBy("file_id").agg(F.sort_array(F.collect_list("shingle")).alias("arr"))
+    paired = (
+        pairs.join(arrays.select(F.col("file_id").alias("id_a"), F.col("arr").alias("arr_a")), "id_a")
+        .join(arrays.select(F.col("file_id").alias("id_b"), F.col("arr").alias("arr_b")), "id_b")
     )
-    ca = card.select(F.col("file_id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    cb = card.select(F.col("file_id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .join(ca, "id_a")
-        .join(cb, "id_b")
-        .na.fill({"inter": 0})
-    )
-    return out.select(
-        "id_a",
-        "id_b",
-        (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))).alias("jaccard"),
-        (F.col("inter") / F.least("n_a", "n_b")).alias("containment"),
-    )
+
+    def score_arrays(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            xs = [np.asarray(a, dtype=np.int64) for a in pdf["arr_a"]]
+            ys = [np.asarray(b, dtype=np.int64) for b in pdf["arr_b"]]
+            yield _score(
+                pdf["id_a"].to_numpy(dtype=np.int64), pdf["id_b"].to_numpy(dtype=np.int64),
+                xs, ys, threshold,
+            )
+
+    return paired.mapInPandas(score_arrays, schema=_OVERLAP_SCHEMA)
 
 
 def verify_candidates(
@@ -174,13 +255,14 @@ def verify_candidates(
 
     Threshold semantics mirror the reference's hard dedupe threshold
     (``utils.py:245-246``); the ``method`` column records which test(s)
-    admitted the pair.
+    admitted the pair. The candidates are pinned and counted once for both
+    metric paths; ``exact_overlap`` keeps every pair (threshold 0) because
+    containment or SimHash alone may admit it.
     """
-    # the candidate relation feeds both metric paths — materialize once
-    pairs = pairs.localCheckpoint()
-    sigm = attach_signature_metrics(pairs, signatures)
-    exact = exact_overlap_metrics(pairs, shingles)
-    both = sigm.join(exact, ["id_a", "id_b"])
+    pairs, n_pairs = _pin(pairs)
+    both = _signature_metrics(pairs, n_pairs, signatures).join(
+        _overlap(pairs, n_pairs, shingles), ["id_a", "id_b"]
+    )
     jac_ok = F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
     ham_ok = F.col("hamming") <= F.lit(cfg.simhash_hamming_max)
     con_ok = F.col("containment") >= F.lit(cfg.containment_threshold)

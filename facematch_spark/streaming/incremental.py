@@ -19,6 +19,8 @@ Two streaming capabilities still belong in the engine:
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -327,9 +329,10 @@ def streaming_merge_apply(
     a transactional MERGE commit and the state read a snapshot read; the
     dataflow inside the loop is unchanged.
     """
+    import atexit
     import os
+    import shutil
     import tempfile
-    import time as _time
 
     from facematch_spark.operators.merge import merge_upsert
 
@@ -338,59 +341,55 @@ def streaming_merge_apply(
         tempfile.mkdtemp(prefix="fm_stream_merge_state_"), "state"
     )
     ckpt_dir = tempfile.mkdtemp(prefix="fm_stream_merge_ckpt_")
-
-    change_schema = change_waves[0].schema
-    for i, wave in enumerate(change_waves):
-        wdir = os.path.join(stage_dir, f"w{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(wdir)
-        part = next(
-            f for f in sorted(os.listdir(wdir)) if f.endswith(".parquet")
-        )
-        dst = os.path.join(stage_dir, f"{i:03d}.parquet")
-        os.rename(os.path.join(wdir, part), dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-        import shutil
-
-        shutil.rmtree(wdir)  # keep the listing to exactly the wave files
-
-    base.write.mode("overwrite").parquet(state_dir)
-
-    def _apply(batch_df, _bid):
-        state = spark.read.parquet(state_dir)
-        nxt = merge_upsert(state, batch_df, key).localCheckpoint()
-        nxt.write.mode("overwrite").parquet(state_dir)
-
-    q = (
-        spark.readStream.schema(change_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    deadline = _time.time() + 300
-    while q.isActive and _time.time() < deadline:
-        _time.sleep(0.2)
-    if q.isActive:
-        # ADVICE r5: returning the snapshot here would silently yield a
-        # partially-applied state. Stop the stream and fail loudly instead.
-        q.stop()
-        raise TimeoutError(
-            "streaming_merge_apply: availableNow stream still active after "
-            "300 s deadline — state is partially applied"
-        )
-    q.awaitTermination(5)
-    # ADVICE r5: the three mkdtemp dirs leaked on every invocation. The
-    # staged waves and the stream checkpoint are dead once the stream has
-    # terminated; the state dir must outlive this call (the returned
-    # DataFrame reads it lazily), so defer it to interpreter exit.
-    import atexit
-    import shutil
-
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    shutil.rmtree(ckpt_dir, ignore_errors=True)
+    # the state dir must outlive this call (the returned DataFrame reads it
+    # lazily), so it goes at interpreter exit
     atexit.register(
         shutil.rmtree, os.path.dirname(state_dir), ignore_errors=True
     )
+    try:
+        change_schema = change_waves[0].schema
+        for i, wave in enumerate(change_waves):
+            wdir = os.path.join(stage_dir, f"w{i}")
+            wave.coalesce(1).write.mode("overwrite").parquet(wdir)
+            part = next(
+                f for f in sorted(os.listdir(wdir)) if f.endswith(".parquet")
+            )
+            dst = os.path.join(stage_dir, f"{i:03d}.parquet")
+            os.rename(os.path.join(wdir, part), dst)
+            os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+            shutil.rmtree(wdir)  # keep the listing to exactly the wave files
+
+        base.write.mode("overwrite").parquet(state_dir)
+
+        def _apply(batch_df, _bid):
+            state = spark.read.parquet(state_dir)
+            nxt = merge_upsert(state, batch_df, key).localCheckpoint()
+            nxt.write.mode("overwrite").parquet(state_dir)
+
+        q = (
+            spark.readStream.schema(change_schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage_dir)
+            .writeStream.foreachBatch(_apply)
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        deadline = time.time() + 300
+        while q.isActive and time.time() < deadline:
+            time.sleep(0.2)
+        if q.isActive:
+            # ADVICE r5: returning the snapshot here would silently yield a
+            # partially-applied state. Stop the stream and fail loudly.
+            q.stop()
+            raise TimeoutError(
+                "streaming_merge_apply: availableNow stream still active after "
+                "300 s deadline — state is partially applied"
+            )
+        q.awaitTermination(5)
+    finally:
+        # the staged waves and the stream checkpoint are dead once the
+        # stream has stopped — on success, timeout or error alike
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return spark.read.parquet(state_dir)

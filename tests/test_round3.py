@@ -156,7 +156,7 @@ def test_salted_probe_join_lossless(spark):
         (r.qid, r.nid)
         for r in salted_probe_join(
             probes, build, keys=["key"], left_id="qid", right_id="nid",
-            cap=50, salt_buckets=4,
+            cap=50, salt_buckets=4, n_build=build.count(),
         ).collect()
     }
     want = {

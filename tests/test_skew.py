@@ -92,7 +92,8 @@ def test_size_derived_partitioning_is_lossless(spark):
     probes = spark.range(300).select((F.col("id") % 15).alias("k"), F.col("id").alias("q"))
     build = spark.range(300).select((F.col("id") % 15).alias("k"), F.col("id").alias("b"))
     p_base = L.salted_probe_join(
-        probes, build, keys=["k"], left_id="q", right_id="b", cap=10, salt_buckets=4
+        probes, build, keys=["k"], left_id="q", right_id="b", cap=10, salt_buckets=4,
+        n_build=build.count(),
     )
     p_forced = L.salted_probe_join(
         probes, build, keys=["k"], left_id="q", right_id="b", cap=10,

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from facematch_spark import schema as S
@@ -229,6 +230,32 @@ def test_streaming_merge_apply_equals_one_shot(spark, tmp_path):
     assert got[2] == "w3"      # deleted in wave 2, reinserted in wave 3
     assert 3 not in got        # delete sticks
     assert got[11] == "new"    # insert via change stream
+
+
+def test_streaming_merge_apply_timeout_removes_dirs(spark, tmp_path, monkeypatch):
+    """An expired deadline raises TimeoutError and still removes the staged
+    waves and the stream checkpoint."""
+    import tempfile
+    import time
+    import types
+
+    from facematch_spark.streaming import incremental
+
+    # the first reading sets the deadline; every later one is past it
+    readings = iter([0.0])
+    clock = types.SimpleNamespace(time=lambda: next(readings, 1e9), sleep=time.sleep)
+    monkeypatch.setattr(incremental, "time", clock)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    base = spark.createDataFrame([(1, "v1")], "k long, payload string")
+    waves = [
+        spark.createDataFrame([(i, "w", "U", i)], "k long, payload string, op string, seq long")
+        for i in range(1, 4)
+    ]
+    with pytest.raises(TimeoutError):
+        incremental.streaming_merge_apply(spark, base, waves, "k")
+    left = [p.name for p in tmp_path.iterdir()]
+    assert not [n for n in left if n.startswith(("fm_stream_merge_in_", "fm_stream_merge_ckpt_"))]
+    assert [n for n in left if n.startswith("fm_stream_merge_state_")]  # made here, so tempdir took
 
 
 def test_watermark_drops_late_event_in_append_mode(spark, tmp_path):

@@ -1,16 +1,22 @@
-"""Parity of the exact-Jaccard verify tiers (round-6 optimization pin).
+"""Both sides of every verify gate give the same rows.
 
-The round-6 rework gave the broadcast tier a flat-buffer payload and a
-searchsorted merge kernel; the fallback tier (shingle relation past
-``BROADCAST_SHINGLE_LIMIT``) kept the array-join + ``np.intersect1d`` form.
-Both must produce identical pairs AND identical jaccard doubles — the
-fallback is the 100 TB path and is otherwise never exercised at test scale.
+``verify.exact_overlap`` is the one exact tier; ``attach_signature_metrics``
+adds the MinHash / SimHash metrics. Each case forces one size gate to the
+branch the test fixtures never reach on their own (at scale, the shuffle
+plans) and asserts bit-identical rows — pairs AND metric doubles — against
+the default plans, for the PPJoin query and for ``run_dedupe``.
 """
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+
+from facematch_spark.config import DedupeConfig
+
+# a high Jaccard bar and exact-SimHash only, so part of the run_dedupe
+# output is admitted by containment alone
+PIPELINE_CFG = DedupeConfig(jaccard_threshold=0.97, simhash_hamming_max=0)
 
 
 @pytest.fixture(scope="module")
@@ -28,17 +34,40 @@ def docs_df(spark):
     ).filter(F.col("text").isNotNull())
 
 
-def _collect_pairs(df):
-    return sorted(
-        (r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()
-    )
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
 
-def test_broadcast_and_fallback_tiers_agree(spark, docs_df, monkeypatch):
+def _ngram(docs_df, walls=None):
     from facematch_spark.operators import dedup as D
 
-    bc = _collect_pairs(D.ngram_jaccard_pairs(docs_df, 9, 0.5))
-    assert len(bc) > 0  # fixture plants near-dups; empty would test nothing
-    monkeypatch.setattr(D, "BROADCAST_SHINGLE_LIMIT", 0)
-    fb = _collect_pairs(D.ngram_jaccard_pairs(docs_df, 9, 0.5))
-    assert bc == fb  # pairs AND jaccard doubles bit-identical
+    return _rows(D.ngram_jaccard_pairs(docs_df, 9, 0.5, walls=walls))
+
+
+def _pipeline(spark, tiny_df):
+    from facematch_spark.plans.pipeline import run_dedupe
+
+    return _rows(run_dedupe(spark, tiny_df, PIPELINE_CFG).pairs)
+
+
+@pytest.fixture(scope="module")
+def default_rows(spark, docs_df, tiny_df):
+    ngram, pipeline = _ngram(docs_df), _pipeline(spark, tiny_df)
+    # the fixtures plant near-dups; empty outputs would test nothing
+    assert ngram
+    assert any(r[-1] == "containment" for r in pipeline)
+    return ngram, pipeline
+
+
+@pytest.mark.parametrize(
+    "gate",
+    ["BROADCAST_SHINGLE_LIMIT", "ATTACH_BROADCAST_IDS_MAX", "ATTACH_BROADCAST_SIGS_MAX_PAIRS"],
+)
+def test_broadcast_and_fallback_tiers_agree(spark, docs_df, tiny_df, default_rows, monkeypatch, gate):
+    from facematch_spark.operators import verify as V
+
+    monkeypatch.setattr(V, gate, 0)
+    walls: dict = {}
+    assert (_ngram(docs_df, walls), _pipeline(spark, tiny_df)) == default_rows
+    # bcast_collect_s is marked only by the broadcast branch
+    assert ("bcast_collect_s" in walls) == (gate != "BROADCAST_SHINGLE_LIMIT")

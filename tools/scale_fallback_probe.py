@@ -6,13 +6,15 @@ the "does the past-gate plan actually complete and scale" evidence.
 
 Branches exercised:
   A. e2e dedup on the FULL 1M-doc corpus with the attach broadcast/semi
-     gates forced OFF (full-shuffle metric joins — the 10^12-file plan);
+     gates forced OFF (shuffled id semi-join and metric joins — the
+     10^12-file plan);
   B. distributed connected components on a >1M-edge graph (the sf0.1
      co-purchase graph, 1.196M edges — naturally past the 1M driver
      union-find gate): BOTH min-label propagation and star contraction;
   C. MinHash→exact-Jaccard verification on a 150k-doc slice (shingle rows
-     ≈ 30x the 5M broadcast gate → the _verify_exact_jaccard FALLBACK
-     tier: candidate-id semi-join + distributed array join);
+     ≈ 30x the 5M broadcast gate; the gate counts only the candidate
+     files' rows, and past it verify.exact_overlap groups per-file sorted
+     arrays and joins them through the shuffle);
   D. PPJoin n-gram Jaccard on a 50k-doc slice (shingle rows >> 5M gate →
      same fallback verify tier via the candidate join);
   E. hyperplane-LSH ANN top-k on 1M synthetic vectors (the prescribed
