@@ -7,7 +7,7 @@ idiomatic Spark DataFrame pipeline over source-code / document corpora:
     scan → signature (shingle + MinHash + SimHash, Arrow-vectorized)
          → LSH band candidate generation (equi self-join, skew-handled)
          → verification (exact Jaccard / Hamming / containment)
-         → clustering (distributed union-find via label propagation)
+         → clustering (connected components: driver union-find or star contraction)
          → checkpointed stage tables, reports, metrics.
 
 The reference's O(N^2) nested Python loop (utils.py:210-251), multiprocessing

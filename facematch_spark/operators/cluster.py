@@ -1,43 +1,37 @@
-"""Distributed union-find: connected components over the verified pair graph.
+"""Connected components over the verified pair graph.
 
 The reference has no transitive closure at all — its only "clustering" is a
 per-file defaultdict grouping for the report (``utils.py:223-250``,
 ``report.html:116-121``). Here clusters are proper connected components,
-computed with iterative min-label propagation over DataFrame joins:
+labelled by the minimum member id, on one of two paths chosen by edge count:
 
-    labels(v) ← min( labels(v), min over neighbors u of labels(u) )
-
-repeated to fixpoint, with ``localCheckpoint()`` per iteration to truncate
-lineage (the driver loop is the only imperative part; every step is a
-Catalyst-planned join + groupBy-min).
-
-Convergence: iterations = graph diameter. Near-dup clusters from LSH are
-dense (quasi-cliques around a shared source), so diameter is small (2-4) and
-the loop ends after a handful of shuffles; for adversarial long-chain graphs
-the alternating large-star/small-star variant (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) bounds iterations at O(log n) —
-``connected_components(..., algorithm="star")`` selects it.
+* up to ``DRIVER_EDGES_MAX`` edges, one Arrow collect and ``union_find``, a
+  NumPy min-hooking / pointer-jumping kernel on the driver;
+* past it, alternating large-star / small-star contraction (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14) over DataFrame
+  joins, which converges in O(log n) rounds. A run that has not converged
+  after ``MAX_ROUNDS`` raises instead of returning partial labels.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from facematch_spark.telemetry import mark, start
 
-
-def _symmetric_edges(pairs: DataFrame) -> DataFrame:
-    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    return e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+# edge count up to which the closure runs on the driver; 0 forces the
+# distributed path (tests flip it)
+DRIVER_EDGES_MAX = 1_000_000
+# star-contraction rounds before the distributed path gives up loudly
+MAX_ROUNDS = 50
 
 
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
-    max_iter: int = 50,
-    algorithm: str = "propagate",
-    driver_threshold: int = 1_000_000,
     walls: dict | None = None,
 ) -> DataFrame:
     """(id_a, id_b) edge list → (file_id, cluster_id), cluster_id = min
@@ -45,26 +39,17 @@ def connected_components(
     as singleton clusters; pass ``signatures.select("file_id")`` for the
     reference-parity behavior where every scanned file appears.
 
-    Size-tiered execution: the verified-pair graph is usually tiny relative
-    to the corpus (dups are rare), so when the edge count is below
-    ``driver_threshold`` the transitive closure runs as an in-driver
-    union-find over one collect — O(E α(E)) with zero shuffle — while bigger
-    graphs take the iterative distributed path. Pass ``driver_threshold=0``
-    to force the distributed algorithms (tests exercise both).
-
     The edge relation is materialized once (eager ``localCheckpoint``) before
-    the size probe: both the probe and the chosen algorithm consume ``pairs``,
+    the size probe: both the probe and the chosen path consume ``pairs``,
     and without the cut the upstream candidate+verify DAG would execute twice.
     """
     t0 = start()
     pairs = pairs.select("id_a", "id_b").localCheckpoint()
     t0 = mark(walls, "edges_s", t0)  # includes the whole upstream pairs DAG
-    if driver_threshold and pairs.limit(driver_threshold + 1).count() <= driver_threshold:
-        labels = _driver_union_find(pairs)
-    elif algorithm == "star":
-        labels = _star_contraction(pairs, max_iter)
+    if DRIVER_EDGES_MAX and pairs.limit(DRIVER_EDGES_MAX + 1).count() <= DRIVER_EDGES_MAX:
+        labels = _driver_labels(pairs)
     else:
-        labels = _min_label_propagation(pairs, max_iter)
+        labels = _star_contraction(pairs)
     t0 = mark(walls, "label_s", t0)
 
     if nodes is not None:
@@ -75,83 +60,58 @@ def connected_components(
     return labels
 
 
-def _driver_union_find(pairs: DataFrame) -> DataFrame:
-    """Path-compressed union-find on the driver for small edge lists.
+def union_find(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Components of the graph with edges ``a[i]–b[i]`` (any int64 ids).
 
-    Both boundary crossings ride Arrow: ``toPandas`` for the edges in (vs
-    row-at-a-time ``collect`` — measured 12 s → <1 s at 140k edges) and a
-    pandas frame for the labels out (vs per-tuple Python→JVM pickling —
-    measured 8 s → <1 s at 250k labels)."""
-    pdf = pairs.select("id_a", "id_b").toPandas()
-    parent: dict[int, int] = {}
+    Returns ``(ids, roots)``: the sorted distinct endpoint ids and, aligned
+    with them, the minimum id of each one's component. Works on the dense
+    indices from ``np.unique``, so index order is id order: each round hooks
+    every root that has an edge to a smaller root onto the smallest such
+    root, then pointer-jumps until every node points at its root. A root
+    only ever hooks onto a smaller index, so the component minimum is never
+    hooked and ends as the root."""
+    a = np.asarray(a, dtype=np.int64)
+    ids, inv = np.unique(np.concatenate([a, np.asarray(b, dtype=np.int64)]), return_inverse=True)
+    ia, ib = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        cross = ra != rb
+        if not cross.any():
+            return ids, ids[parent]
+        ra, rb = ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
 
-    def find(x: int) -> int:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
 
-    for ia, ib in zip(pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy()):
-        ra, rb = find(int(ia)), find(int(ib))
-        if ra != rb:
-            # union by min id so cluster_id == component minimum
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    spark = pairs.sparkSession
-    if not parent:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [], T.StructType([
-                T.StructField("file_id", T.LongType(), False),
-                T.StructField("cluster_id", T.LongType(), False),
-            ]),
-        )
-    import numpy as np
-    import pandas as pd
-
-    ids = list(parent)
-    out = pd.DataFrame(
-        {
-            "file_id": np.fromiter(ids, dtype=np.int64, count=len(ids)),
-            "cluster_id": np.fromiter((find(x) for x in ids), dtype=np.int64, count=len(ids)),
-        }
+def _driver_labels(pairs: DataFrame) -> DataFrame:
+    """``union_find`` over one collect. Both boundary crossings ride Arrow:
+    ``toPandas`` for the edges in (vs row-at-a-time ``collect`` — measured
+    12 s → <1 s at 140k edges) and a pandas frame for the labels out (vs
+    per-tuple Python→JVM pickling — measured 8 s → <1 s at 250k labels)."""
+    pdf = pairs.toPandas()
+    ids, roots = union_find(pdf["id_a"].to_numpy(), pdf["id_b"].to_numpy())
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"file_id": ids, "cluster_id": roots}), "file_id long, cluster_id long"
     )
-    return spark.createDataFrame(out)
 
 
-def _min_label_propagation(pairs: DataFrame, max_iter: int) -> DataFrame:
-    edges = _symmetric_edges(pairs).dropDuplicates(["src", "dst"]).localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("file_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("file_id"))
-        .localCheckpoint()
+def _same_edges(prev: DataFrame, new: DataFrame) -> bool:
+    """Both sides are distinct canonical (src, dst) sets, so they are equal
+    exactly when a full-outer join leaves no row unmatched."""
+    unmatched = (
+        prev.withColumn("in_prev", F.lit(True))
+        .join(new.withColumn("in_new", F.lit(True)), ["src", "dst"], "full_outer")
+        .filter(F.col("in_prev").isNull() | F.col("in_new").isNull())
     )
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.src == labels.file_id)
-            .groupBy(F.col("dst").alias("file_id"))
-            .agg(F.min("cluster_id").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "file_id", "left")
-            .select(
-                "file_id",
-                F.least(F.col("cluster_id"), F.coalesce("nbr_label", "cluster_id")).alias("cluster_id"),
-                F.col("cluster_id").alias("old"),
-            )
-        ).localCheckpoint()
-        changed = new_labels.filter(F.col("cluster_id") != F.col("old")).limit(1).count()
-        labels = new_labels.select("file_id", "cluster_id").localCheckpoint()
-        if changed == 0:
-            break
-    return labels
+    return unmatched.isEmpty()
 
 
-def _star_contraction(pairs: DataFrame, max_iter: int) -> DataFrame:
+def _star_contraction(pairs: DataFrame) -> DataFrame:
     """Alternating large-star / small-star (Kiveris et al. SoCC'14).
 
     Edge set converges to a star around each component's minimum node in
@@ -159,22 +119,12 @@ def _star_contraction(pairs: DataFrame, max_iter: int) -> DataFrame:
     roots themselves.
     """
     edges = (
-        _symmetric_edges(pairs)
-        .filter(F.col("src") < F.col("dst"))  # keep canonical u<v
+        pairs.select(F.least("id_a", "id_b").alias("src"), F.greatest("id_a", "id_b").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
         .localCheckpoint()
     )
-
-    def _fingerprint(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: ANSI mode would overflow a long sum of 64-bit hashes
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("chk"),
-        ).collect()[0]
-        return (row["n"], row["chk"])
-
-    prev_fp = _fingerprint(edges)
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # large-star: for every node u, link each strictly-larger neighbor v
         # to m = min(N(u) ∪ {u}).
         sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -205,12 +155,14 @@ def _star_contraction(pairs: DataFrame, max_iter: int) -> DataFrame:
             .select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
             .dropDuplicates(["src", "dst"])
         ).localCheckpoint()
-        # fixpoint: edge multiset stable (count + order-insensitive checksum)
-        fp = _fingerprint(small)
+        converged = _same_edges(edges, small)
         edges = small
-        if fp == prev_fp:
+        if converged:
             break
-        prev_fp = fp
+    else:
+        raise RuntimeError(
+            f"star contraction did not converge in MAX_ROUNDS={MAX_ROUNDS} rounds"
+        )
     # edges now form stars rooted at component minima
     roots = edges.select(F.col("src").alias("file_id")).distinct().withColumn(
         "cluster_id", F.col("file_id")
@@ -218,7 +170,7 @@ def _star_contraction(pairs: DataFrame, max_iter: int) -> DataFrame:
     members = edges.select(F.col("dst").alias("file_id"), F.col("src").alias("cluster_id"))
     labels = members.unionByName(roots).groupBy("file_id").agg(F.min("cluster_id").alias("cluster_id"))
     # nodes whose only incidences were self-loops were dropped by the
-    # src<dst canonicalization — restore them as their own singleton cluster
+    # src != dst filter — restore them as their own singleton cluster
     all_nodes = (
         pairs.select(F.col("id_a").alias("file_id"))
         .union(pairs.select(F.col("id_b").alias("file_id")))

@@ -5,7 +5,8 @@ Celery):
   job 1  scan → left-anti(resume) → sign → write signatures
   job 2  signatures → band explode → hot-band prune → self-join →
          verify (exact Jaccard / Hamming / containment) → write pairs
-  job 3  pairs → union-find label propagation → write clusters
+  job 3  pairs → connected components (driver union-find / star contraction)
+         → write clusters
   job 4  report = read(pairs) → filter/top-k (no recompute — §3.3 analog)
 
 Process/node boundaries are shuffles instead of Pool forks / Celery chords;

@@ -4,16 +4,17 @@ clustering, silenced suppression, sha256 invariant (SURVEY.md §5.1-5.2)."""
 from __future__ import annotations
 
 import hashlib
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from facematch_spark import schema as S
 from facematch_spark.config import DedupeConfig
+from facematch_spark.operators import cluster as C
 from facematch_spark.operators import lsh as L
 from facematch_spark.operators import signatures as SIG
 from facematch_spark.operators import verify as V
-from facematch_spark.operators.cluster import connected_components
 from facematch_spark.plans.pipeline import run_dedupe
 
 CFG = DedupeConfig(jaccard_threshold=0.5, hot_band_cap=200, max_band_group=5000)
@@ -123,41 +124,64 @@ def test_containment_pair_found(spark, tiny_df, sigs, tiny_corpus):
     assert by_contain >= 1
 
 
-def test_clusters_known_graphs(spark):
-    """Union-find on known graphs: chain, star, two components, self-loop —
-    on every execution tier (driver fast path + both distributed
-    algorithms)."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4),        # chain 1-2-3-4
-         (10, 11), (10, 12), (10, 13),  # star at 10
-         (20, 21),                      # separate component
-         (30, 30)],                     # self-loop
-        "id_a long, id_b long",
-    )
-    expect = {
-        (1, 1), (2, 1), (3, 1), (4, 1),
-        (10, 10), (11, 10), (12, 10), (13, 10),
-        (20, 20), (21, 20),
-        (30, 30),
-    }
-    for kwargs in (
-        {},  # driver fast path
-        {"driver_threshold": 0, "algorithm": "propagate"},
-        {"driver_threshold": 0, "algorithm": "star"},
-    ):
-        got = {(r.file_id, r.cluster_id) for r in connected_components(edges, **kwargs).collect()}
-        assert got == expect, f"tier {kwargs}"
+def _path_case():
+    """A 200-node path over shuffled ids of both signs, plus 60 isolated
+    nodes: 61 clusters, one of them with diameter 199."""
+    rng = random.Random(8)
+    ids = rng.sample(range(-(2**61), 2**61), 260)
+    path, isolated = ids[:200], ids[200:]
+    edges = list(zip(path, path[1:]))
+    expect = [(i, min(path)) for i in path] + [(i, i) for i in isolated]
+    return edges, ids, expect
 
 
-def test_clusters_star_algorithm_matches(spark):
-    edges = spark.createDataFrame(
+CC_CASES = {
+    # chain 1-2-3-4, star at 10, a separate pair, a self-loop
+    "mixed": (
+        [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (10, 13), (20, 21), (30, 30)],
+        None,
+        [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (12, 10), (13, 10),
+         (20, 20), (21, 20), (30, 30)],
+    ),
+    # a 12-node chain and a vee whose minimum is not the shared vertex
+    "chain_and_vee": (
         [(i, i + 1) for i in range(1, 12)] + [(100, 101), (102, 101)],
-        "id_a long, id_b long",
-    )
-    a = sorted(connected_components(edges, driver_threshold=0, algorithm="propagate").collect())
-    b = sorted(connected_components(edges, driver_threshold=0, algorithm="star").collect())
-    c = sorted(connected_components(edges).collect())
-    assert a == b == c
+        None,
+        [(i, 1) for i in range(1, 13)] + [(100, 100), (101, 100), (102, 100)],
+    ),
+    "long_path": _path_case(),
+    "empty_with_nodes": ([], [5, -3, 9], [(5, 5), (-3, -3), (9, 9)]),
+    "duplicate_and_reversed": (
+        [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (7, 8), (8, 7), (8, 8)],
+        None,
+        [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)],
+    ),
+}
+
+
+def _components(spark, edges, nodes=None):
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    if nodes is not None:
+        nodes = spark.createDataFrame([(n,) for n in nodes], "file_id long")
+    return sorted(tuple(r) for r in C.connected_components(pairs, nodes=nodes).collect())
+
+
+@pytest.mark.parametrize("gate", [C.DRIVER_EDGES_MAX, 0], ids=["driver", "star"])
+@pytest.mark.parametrize("case", list(CC_CASES))
+def test_clusters_known_graphs(spark, monkeypatch, case, gate):
+    """Components of known graphs, labelled by their minimum id, on both
+    sides of the CC gate: the driver union-find and star contraction."""
+    monkeypatch.setattr(C, "DRIVER_EDGES_MAX", gate)
+    edges, nodes, expect = CC_CASES[case]
+    assert _components(spark, edges, nodes) == sorted(expect)
+
+
+def test_star_contraction_raises_when_rounds_run_out(spark, monkeypatch):
+    monkeypatch.setattr(C, "DRIVER_EDGES_MAX", 0)
+    monkeypatch.setattr(C, "MAX_ROUNDS", 3)
+    edges, nodes, _ = _path_case()
+    with pytest.raises(RuntimeError, match="MAX_ROUNDS"):
+        _components(spark, edges, nodes)
 
 
 def test_end_to_end_planted_recall(spark, tiny_df, tiny_corpus):

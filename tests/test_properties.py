@@ -9,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from facematch_spark.functions import hashing as H
+from facematch_spark.operators.cluster import union_find
 from facematch_spark.operators.signatures import normalize_content
 from facematch_spark.operators.verify import lcs_coverage
 
@@ -76,16 +77,20 @@ def test_lcs_symmetric_and_bounded(a, b):
     assert abs(c - lcs_coverage(b, a)) < 1e-12
 
 
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(min_value=0, max_value=40), st.integers(min_value=0, max_value=40)),
-        max_size=60,
-    )
+# a small pool of signed 64-bit ids, so random edges share endpoints
+id_pool_st = st.lists(
+    st.integers(min_value=-(2**63), max_value=2**63 - 1), min_size=1, max_size=40, unique=True
 )
+edges_st = id_pool_st.flatmap(
+    lambda pool: st.lists(st.tuples(st.sampled_from(pool), st.sampled_from(pool)), max_size=60)
+)
+
+
+@settings(max_examples=50, deadline=None)
+@given(edges_st)
 def test_driver_union_find_matches_reference(edges):
-    """The path-compressed union-find agrees with a naive O(V·E)
-    fixpoint label propagation on random graphs."""
+    """``cluster.union_find`` agrees with a naive O(V·E) fixpoint label
+    propagation on random graphs."""
     # naive reference
     nodes = {n for e in edges for n in e}
     label = {n: n for n in nodes}
@@ -103,21 +108,7 @@ def test_driver_union_find_matches_reference(edges):
                 label[n] = label[label[n]]
                 changed = True
 
-    # engine's driver union-find, exercised directly (no Spark)
-    parent: dict[int, int] = {}
-
-    def find(x):
-        r = x
-        while parent.setdefault(r, r) != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    got = {n: find(n) for n in nodes}
-    assert got == label
+    a = np.array([e[0] for e in edges], dtype=np.int64)
+    b = np.array([e[1] for e in edges], dtype=np.int64)
+    ids, roots = union_find(a, b)
+    assert dict(zip(ids.tolist(), roots.tolist())) == label

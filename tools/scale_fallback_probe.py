@@ -10,7 +10,7 @@ Branches exercised:
      10^12-file plan);
   B. distributed connected components on a >1M-edge graph (the sf0.1
      co-purchase graph, 1.196M edges — naturally past the 1M driver
-     union-find gate): BOTH min-label propagation and star contraction;
+     union-find gate, so star contraction runs);
   C. MinHash→exact-Jaccard verification on a 150k-doc slice (shingle rows
      ≈ 30x the 5M broadcast gate; the gate counts only the candidate
      files' rows, and past it verify.exact_overlap groups per-file sorted
@@ -127,20 +127,17 @@ def main() -> None:
     # ---- B: distributed CC on >1M edges (past the driver union-find gate)
     if "B" in runs:
         li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-        for algo in ("propagate", "star"):
-            # re-pin the edge relation per algorithm: drop() between runs
-            # unpersists localCheckpoint blocks, which cannot be recomputed
-            edges = copurchase_edges(li).select(
-                F.col("u").alias("id_a"), F.col("v").alias("id_b")
-            ).localCheckpoint()
-            n_edges = edges.count()
-            st = {}
-            t0 = time.perf_counter()
-            cc = connected_components(edges, algorithm=algo, walls=st)
-            n_comp = cc.select("cluster_id").distinct().count()
-            st["total_s"] = round(time.perf_counter() - t0, 1)
-            emit(f"B_cc_{algo}_{n_edges}edges", st, n_edges=n_edges, n_components=n_comp)
-            drop()
+        edges = copurchase_edges(li).select(
+            F.col("u").alias("id_a"), F.col("v").alias("id_b")
+        ).localCheckpoint()
+        n_edges = edges.count()
+        st = {}
+        t0 = time.perf_counter()
+        cc = connected_components(edges, walls=st)
+        n_comp = cc.select("cluster_id").distinct().count()
+        st["total_s"] = round(time.perf_counter() - t0, 1)
+        emit(f"B_cc_star_{n_edges}edges", st, n_edges=n_edges, n_components=n_comp)
+        drop()
 
     # ---- C: MinHash exact verify, fallback tier (150k docs >> 5M shingles)
     if "C" in runs:
