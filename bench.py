@@ -1,12 +1,18 @@
 """Benchmark harness. Runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric", "value" (sec), "unit", "queries": {name: sec}, "sf",
-"files_per_sec", ...}.
+"files_per_sec", "stages", ...}.
 
 The headline metric is the end-to-end dedup dataflow (sign → MinHash/LSH →
 verify → cluster) over the documents corpus — the BASELINE.json target is
 files/sec for exactly this dataflow. Scaling evidence (local[8] vs local[32])
 is produced by bench/scaling.py into BENCH/BASELINE.md.
+
+"stages" is measured from outside the operators with perfbench's span
+tracer (perfbench/spans.py): each traced step runs under a Spark job group
+of its own, and its entry holds the wall seconds plus the jobs, tasks,
+shuffle and spill bytes, task CPU seconds and GC seconds of the jobs it
+started, read back from Spark's status store.
 """
 
 from __future__ import annotations
@@ -16,7 +22,27 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+# span counters copied into the "stages" map
+SPAN_COUNTERS = ("wall_s", "jobs", "tasks", "shuffle_bytes", "spill_bytes", "cpu_s", "gc_s")
+# rows whose one span lands in "stages" (the heavy dedup and graph rows)
+TRACED_ROWS = (
+    "dedup_ngram_jaccard", "dedup_simhash", "dedup_clusters", "dedup_minhash_lsh",
+    "dedup_duplicate_spans", "q_triangle_count", "q_pagerank", "q_link_prediction",
+)
+
+
+def _load(name: str, relpath: str):
+    """Import a repo script by path (bench/ and perfbench/ are not packages)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(name, os.path.join(ROOT, relpath))
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[name] = mod
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
@@ -42,15 +68,7 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
     health = {"pinned_cpus": None, "excluded_cpus": {}}
     if os.environ.get("SPARK_GRAFT_PIN", "1") != "0" and hasattr(os, "sched_setaffinity"):
         try:
-            import importlib.util as _ilu
-
-            _spec = _ilu.spec_from_file_location(
-                "fm_bench_scaling",
-                os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench", "scaling.py"),
-            )
-            _scaling = _ilu.module_from_spec(_spec)
-            sys.modules["fm_bench_scaling"] = _scaling
-            _spec.loader.exec_module(_scaling)
+            _scaling = _load("fm_bench_scaling", "bench/scaling.py")
             scan = _scaling.fault_scan(sorted(os.sched_getaffinity(0)))
             healthy = [c for c, ms in scan.items() if ms <= _scaling.FAULT_MS_GATE]
             vals = sorted(scan.values())
@@ -83,8 +101,16 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
         app_name="facematch_bench",
         master=f"local[{cpus}]",
         shuffle_partitions=max(int(cpus) if cpus.isdigit() else 32, 8),
-        extra_conf={"spark.local.dir": local_dir},
+        # the span counters are read from the status store after each span;
+        # at the session's default retention a row with many jobs would see
+        # its stages evicted first (perfbench keeps the same retention)
+        extra_conf={
+            "spark.local.dir": local_dir,
+            "spark.ui.retainedJobs": "10000",
+            "spark.ui.retainedStages": "10000",
+        },
     )
+    tracer = _load("fm_perfbench_spans", "perfbench/spans.py").Tracer(spark, "bench")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -96,8 +122,8 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
     # cluster's executors are warm long-lived processes, so the first
     # mapInPandas paying 32 Python-worker spawns (~5 s at local[32]) is a
     # local-harness artifact, not operator cost. Measured: the e2e sign
-    # stage drops 5.6 s → ~1 s with the warmup; stage telemetry in the
-    # "stages" map keeps the split auditable.
+    # stage drops 5.6 s → ~1 s with the warmup; the "stages" map keeps the
+    # split auditable.
     cfg = DedupeConfig(jaccard_threshold=0.5)
     timings: dict[str, float] = {}
 
@@ -121,40 +147,38 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
         timings[name] = round(time.perf_counter() - t0, 3)
         _drop_leaked_blocks()
 
+    def counters(name: str) -> dict:
+        # the span's wall stops before its status-store read
+        rec = tracer.get(name)
+        return {k: round(rec[k], 3) if k.endswith("_s") else rec[k] for k in SPAN_COUNTERS}
+
     warm_sigs = doc_signatures(docs.limit(256), cfg).localCheckpoint()
     attach_signature_metrics(L.candidate_pairs(warm_sigs, cfg), warm_sigs).count()
     _drop_leaked_blocks()
 
     # ---- headline: end-to-end dedup dataflow over documents ----
-    # Inlines minhash_lsh_pairs' own materialization boundaries (the sigs /
-    # pairs localCheckpoints already exist inside the operator) so the bench
-    # records per-stage walls at zero extra work — a regression in any later
-    # round is attributable to a stage from the BENCH_rN artifact alone.
-    stage_walls: dict[str, dict[str, float]] = {}
-
-    def e2e():
-        st: dict[str, float] = {}
-        t0 = time.perf_counter()
+    # Three spans at the dataflow's own materialization boundaries (the
+    # sigs / pairs localCheckpoints already exist inside minhash_lsh_pairs),
+    # so a regression in any later round is attributable to a step from
+    # the BENCH_rN artifact alone. The headline is the sum of their walls.
+    with tracer.span("dedupe_e2e/sign"):
         sigs = doc_signatures(docs, cfg).localCheckpoint()  # eager: materializes
-        st["sign_s"] = round(time.perf_counter() - t0, 3)
-        t1 = time.perf_counter()
-        cands = L.candidate_pairs(sigs, cfg)
+    with tracer.span("dedupe_e2e/pairs"):
         pairs = (
-            attach_signature_metrics(cands, sigs)
+            attach_signature_metrics(L.candidate_pairs(sigs, cfg), sigs)
             .filter(F.col("minhash_est") >= F.lit(cfg.jaccard_threshold))
             .select("id_a", "id_b")
             .localCheckpoint()
         )
-        st["pairs_s"] = round(time.perf_counter() - t1, 3)
-        t2 = time.perf_counter()
-        clusters = connected_components(
+    with tracer.span("dedupe_e2e/cluster"):
+        connected_components(
             pairs, nodes=docs.select(F.col("doc_id").alias("file_id"))
-        )
-        clusters.count()
-        st["cluster_s"] = round(time.perf_counter() - t2, 3)
-        stage_walls["dedupe_e2e"] = st
-
-    timed("dedupe_e2e", e2e)
+        ).count()
+    e2e = {step: counters(f"dedupe_e2e/{step}") for step in ("sign", "pairs", "cluster")}
+    stages: dict[str, dict] = {"dedupe_e2e": e2e}
+    timings["dedupe_e2e"] = round(sum(c["wall_s"] for c in e2e.values()), 3)
+    del sigs, pairs
+    _drop_leaked_blocks()
 
     # ---- per-query timings over the full contract surface ----
     qs = E.queries()
@@ -189,71 +213,20 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
         "q_regression_slope", "q_link_prediction", "q_gini_diversity",
         "q_kmeans", "q_intersect_all",
     ]
-    # Per-stage walls for the heavy dedup rows WITHOUT changing their plans:
-    # operators accept walls= and record their OWN eager materialization
-    # boundaries (telemetry.py), so the timed wall here IS the black-box
-    # entry-query wall (ADVICE r4: the old staged minhash twin added two
-    # checkpoints that its verify step re-materialized, making the bench
-    # row incomparable round-over-round). The un-marked remainder
-    # (lazy candidate join + verify executing at the noop write) is derived
-    # as rest_s = total − Σ(marked walls).
-    import facematch_spark.operators.dedup as D
-
-    staged_builders = {
-        "dedup_ngram_jaccard": lambda st: D.ngram_jaccard_pairs(docs, E.K, E.JT, walls=st),
-        "dedup_simhash": lambda st: D.simhash_md5_pairs(docs, k=E.K, hamming_max=8, walls=st),
-        "dedup_clusters": lambda st: D.dedup_clusters(docs, E.K, E.JT, walls=st),
-        "dedup_minhash_lsh": lambda st: D.minhash_lsh_exact_pairs(docs, E.DOC_CFG, walls=st),
-        "dedup_duplicate_spans": lambda st: D.duplicate_spans(docs, k=E.SPAN_K, walls=st),
-    }
-    # graph rows: same entry dataflow, with the operators' own pin
-    # boundaries marked (edges pin / orientation pin / wedge pin).
-    import facematch_spark.operators.graph as G
-
-    _lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-
-    def _capped_edges():
-        from pyspark.sql import functions as F
-
-        ip = _lineitem.select("l_orderkey", "l_partkey").distinct()
-        ok = (
-            ip.groupBy("l_orderkey").agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= 5).select("l_orderkey")
-        )
-        ip2 = ip.join(ok, "l_orderkey", "left_semi")
-        a, b = ip2.alias("a"), ip2.alias("b")
-        return (
-            a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                   & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-            .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-            .distinct()
-        )
-
-    staged_builders.update({
-        "q_triangle_count": lambda st: G.local_triangle_counts(
-            G.copurchase_edges(_lineitem), walls=st),
-        "q_pagerank": lambda st: G.pagerank_int(
-            G.copurchase_edges(_lineitem), iterations=3, walls=st),
-        "q_link_prediction": lambda st: G.link_prediction_ra(
-            _capped_edges(), top_k=10, walls=st),
-    })
-
-    def timed_staged(name: str) -> None:
-        st: dict[str, float] = {}
-        t0 = time.perf_counter()
-        staged_builders[name](st).write.format("noop").mode("overwrite").save()
-        total = round(time.perf_counter() - t0, 3)
-        st["rest_s"] = round(total - sum(st.values()), 3)
-        timings[name] = total
-        stage_walls[name] = st
-        _drop_leaked_blocks()
-
     for name in bench_queries:
-        if name in staged_builders:
-            timed_staged(name)
-            continue
         fn = qs[name]
-        timed(name, lambda fn=fn: fn(spark, sf_dir).write.format("noop").mode("overwrite").save())
+
+        def row(fn=fn):
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+        if name in TRACED_ROWS:
+            with tracer.span(name):
+                row()
+            stages[name] = counters(name)
+            timings[name] = stages[name]["wall_s"]
+            _drop_leaked_blocks()
+        else:
+            timed(name, row)
 
     total = round(sum(timings.values()), 3)
     result = {
@@ -266,7 +239,7 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
         "files_per_sec": round(n_files / timings["dedupe_e2e"], 2),
         "total_sec": total,
         "cpus": cpus,
-        "stages": stage_walls,
+        "stages": stages,
         "cpu_health": health,
     }
     spark.stop()

@@ -20,8 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from facematch_spark.telemetry import mark, start
-
 # edge count up to which the closure runs on the driver; 0 forces the
 # distributed path (tests flip it)
 DRIVER_EDGES_MAX = 1_000_000
@@ -32,7 +30,6 @@ MAX_ROUNDS = 50
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
-    walls: dict | None = None,
 ) -> DataFrame:
     """(id_a, id_b) edge list → (file_id, cluster_id), cluster_id = min
     member id. ``nodes`` (single column ``file_id``) adds isolated vertices
@@ -43,14 +40,11 @@ def connected_components(
     the size probe: both the probe and the chosen path consume ``pairs``,
     and without the cut the upstream candidate+verify DAG would execute twice.
     """
-    t0 = start()
     pairs = pairs.select("id_a", "id_b").localCheckpoint()
-    t0 = mark(walls, "edges_s", t0)  # includes the whole upstream pairs DAG
     if DRIVER_EDGES_MAX and pairs.limit(DRIVER_EDGES_MAX + 1).count() <= DRIVER_EDGES_MAX:
         labels = _driver_labels(pairs)
     else:
         labels = _star_contraction(pairs)
-    t0 = mark(walls, "label_s", t0)
 
     if nodes is not None:
         singletons = nodes.select(F.col("file_id")).join(

@@ -28,9 +28,9 @@ from facematch_spark.config import DedupeConfig
 from facematch_spark.operators import lsh as L
 from facematch_spark.operators import signatures as SIG
 from facematch_spark.operators import verify as V
-from facematch_spark.telemetry import mark, start
 
-# Rows per partition for the PPJoin prefix self-join's shuffled-hash build:
+# Rows per partition for the PPJoin prefix join's shuffled-hash build (self
+# and cross-corpus forms):
 # a prefix row is 4 longs but its LongToUnsafeRowMap entry is ~100-300 B
 # with map overhead, and every core builds one relation CONCURRENTLY, so
 # the bound must hold cores × build inside the execution pool: 250k rows ≈
@@ -134,7 +134,6 @@ def ngram_jaccard_pairs(
     k: int,
     threshold: float,
     shingle_kind: str = "char",
-    walls: dict | None = None,
 ) -> DataFrame:
     """Exact k-gram Jaccard pairs ≥ threshold — char k-grams by default,
     k-token shingles with ``shingle_kind="token"`` — via a prefix-filtered
@@ -160,10 +159,7 @@ def ngram_jaccard_pairs(
     is exact set intersection — output matches the naive all-shared-shingle
     join bit for bit (integer-ratio doubles).
     """
-    from pyspark.sql import Window as W
-
     shingler = {"char": char_shingles, "token": token_shingles}[shingle_kind]
-    t0 = start()
     # materialize once: the shingle relation feeds the frequency / rank
     # windows and the verify tier — without a checkpoint each one would
     # re-run the explode+hash lineage
@@ -172,7 +168,18 @@ def ngram_jaccard_pairs(
         .select("doc_id", F.xxhash64("shingle").alias("sh"))
         .localCheckpoint()
     )
-    t0 = mark(walls, "shingle_s", t0)
+    cands = _ppjoin_candidates(sh, threshold)
+    shingles = sh.select(F.col("doc_id").alias("file_id"), F.col("sh").alias("shingle"))
+    return V.exact_overlap(cands, shingles, threshold).drop("containment")
+
+
+def _ppjoin_candidates(sh: DataFrame, threshold: float, cross: bool = False) -> DataFrame:
+    """Pinned distinct ``(doc_id, sh)`` shingle-hash rows → PPJoin candidate
+    pairs ``(id_a, id_b)``, a lossless superset of the pairs with
+    Jaccard ≥ ``threshold``. The self form pairs ``id_a < id_b``; with
+    ``cross`` the rows carry ``_side`` (0 or 1) and side-0 docs pair with
+    side-1 docs only (``id_a`` from side 0)."""
+    from pyspark.sql import Window as W
 
     # frequency + cardinality + rank as WINDOW counts — two shuffles total
     # (one by sh, one by doc_id with a shared exchange for both doc_id
@@ -192,10 +199,9 @@ def ngram_jaccard_pairs(
         with_n.filter(
             F.col("rnk") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
         )
-        .select("doc_id", "sh", "rnk", "n_sh")
-        .localCheckpoint()  # feeds both sides of the self-join
+        .select("doc_id", *(["_side"] if cross else []), "sh", "rnk", "n_sh")
+        .localCheckpoint()  # feeds both sides of the join
     )
-    mark(walls, "prefix_s", t0)
 
     # candidate join with the lossless PPJoin filters:
     #   length filter:   t·n_a ≤ n_b ≤ n_a/t  (else J < t regardless);
@@ -210,9 +216,9 @@ def ngram_jaccard_pairs(
     # passes, so the filter applies per-row BEFORE the dedup shuffle
     # (map-side pruning; the groupBy-max formulation would shuffle every
     # shared-prefix row first).
-    # shuffled-hash self-join (guide §3.1): the auto plan broadcasts one
-    # side of the prefix relation — a driver collect + per-query hash-table
-    # build that measured 2× slower than hashing per partition, and a
+    # shuffled-hash join (guide §3.1): the auto plan broadcasts one side of
+    # the prefix relation — a driver collect + per-query hash-table build
+    # that measured 2× slower than hashing per partition, and a
     # non-starter once the prefix relation outgrows the broadcast cap.
     # Partition count is SIZE-DERIVED, not the session constant: shuffled-
     # hash builds a per-partition hash relation and (unlike sort-merge)
@@ -222,35 +228,36 @@ def ngram_jaccard_pairs(
     # per partition keeps the build ~tens of MB at ANY corpus size; the
     # explicit repartitions are absorbed by the join (same key, same
     # count → no extra exchange), and at bench scale parts ==
-    # defaultParallelism so the local plan is unchanged.
-    n_prefix = prefix.count()
+    # defaultParallelism.
     parts = max(
         prefix.sparkSession.sparkContext.defaultParallelism,
-        int(n_prefix // PREFIX_ROWS_PER_PARTITION) + 1,
+        int(prefix.count() // PREFIX_ROWS_PER_PARTITION) + 1,
     )
-    a = prefix.repartition(parts, "sh").alias("a")
-    b = prefix.repartition(parts, "sh").alias("b").hint("shuffle_hash")
+    if cross:
+        a, b = prefix.filter(F.col("_side") == 0), prefix.filter(F.col("_side") == 1)
+    else:
+        a, b = prefix, prefix
+    a = a.repartition(parts, "sh").alias("a")
+    b = b.repartition(parts, "sh").alias("b").hint("shuffle_hash")
     alpha = F.ceil(
         F.lit(threshold) / (1 + threshold) * (F.col("a.n_sh") + F.col("b.n_sh"))
     )
     slack = F.least(
         F.col("a.n_sh") - F.col("a.rnk"), F.col("b.n_sh") - F.col("b.rnk")
     )
-    cands = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.n_sh") * F.lit(threshold) <= F.col("a.n_sh"))
-            & (F.col("a.n_sh") * F.lit(threshold) <= F.col("b.n_sh"))
-            & (slack + 1 >= alpha),
-        )
+    cond = (
+        (F.col("a.sh") == F.col("b.sh"))
+        & (F.col("b.n_sh") * F.lit(threshold) <= F.col("a.n_sh"))
+        & (F.col("a.n_sh") * F.lit(threshold) <= F.col("b.n_sh"))
+        & (slack + 1 >= alpha)
+    )
+    if not cross:
+        cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
+    return (
+        a.join(b, cond)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    shingles = sh.select(F.col("doc_id").alias("file_id"), F.col("sh").alias("shingle"))
-    return V.exact_overlap(cands, shingles, threshold, walls=walls).drop("containment")
 
 
 def docs_as_source_files(docs: DataFrame) -> DataFrame:
@@ -282,9 +289,7 @@ def doc_shingles(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
     return SIG.explode_shingles(src, cfg)
 
 
-def minhash_lsh_exact_pairs(
-    docs: DataFrame, cfg: DedupeConfig, walls: dict | None = None
-) -> DataFrame:
+def minhash_lsh_exact_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """Scale-path near-dup pairs with EXACT verification: MinHash → banding
     LSH candidates → exact Jaccard over the cfg shingle sets → threshold.
     Returns (id_a, id_b, jaccard).
@@ -301,16 +306,13 @@ def minhash_lsh_exact_pairs(
     ``run_dedupe`` uses — |A∩B| / (n_a + n_b − |A∩B|) integer-ratio
     doubles from one sorted-array intersection kernel."""
     sigs = doc_signatures(docs, cfg)
-    t0 = start()
     cands = L.candidate_pairs(sigs, cfg).localCheckpoint()
-    t0 = mark(walls, "cand_s", t0)
     sh = doc_shingles(docs, cfg).localCheckpoint()
-    mark(walls, "shingle_s", t0)
-    return V.exact_overlap(cands, sh, cfg.jaccard_threshold, walls=walls).drop("containment")
+    return V.exact_overlap(cands, sh, cfg.jaccard_threshold).drop("containment")
 
 
 def minhash_lsh_exact_pairs_between(
-    left: DataFrame, right: DataFrame, cfg: DedupeConfig, walls: dict | None = None
+    left: DataFrame, right: DataFrame, cfg: DedupeConfig
 ) -> DataFrame:
     """Cross-corpus form of :func:`minhash_lsh_exact_pairs` — the
     decontamination scale path when BOTH corpora are too large for the
@@ -333,7 +335,6 @@ def minhash_lsh_exact_pairs_between(
         .withColumnRenamed("file_id", "id_b")
         .localCheckpoint()
     )
-    t0 = start()
     cands = L.salted_probe_join(
         bands_l, bands_r,
         keys=["band_id", "band_hash"],
@@ -341,10 +342,8 @@ def minhash_lsh_exact_pairs_between(
         cap=cfg.hot_band_cap, salt_buckets=cfg.salt_buckets,
         n_build=bands_r.count(),  # pinned: block-manager scan
     ).dropDuplicates(["id_a", "id_b"]).localCheckpoint()
-    t0 = mark(walls, "cand_s", t0)
     sh = doc_shingles(left, cfg).unionByName(doc_shingles(right, cfg)).localCheckpoint()
-    mark(walls, "shingle_s", t0)
-    return V.exact_overlap(cands, sh, cfg.jaccard_threshold, walls=walls).drop("containment")
+    return V.exact_overlap(cands, sh, cfg.jaccard_threshold).drop("containment")
 
 
 def minhash_lsh_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
@@ -423,7 +422,6 @@ def _pigeonhole_hamming_pairs(
     hot_cap: int = 200,
     salt_buckets: int = 16,
     n_chunks: int | None = None,
-    walls: dict | None = None,
 ) -> DataFrame:
     """(file_id, fp) fingerprints → (id_a, id_b, hamming ≤ hamming_max).
     Exact (recall = 1.0 within the radius) via MULTI-CHUNK pigeonhole keys
@@ -439,9 +437,7 @@ def _pigeonhole_hamming_pairs(
     ``bit_count(xor)`` verification."""
     from facematch_spark.operators.lsh import tiered_self_join
 
-    t0 = start()
     fps = fps.localCheckpoint()  # feeds chunk explode + two verify joins
-    t0 = mark(walls, "fingerprint_s", t0)
     chunks = pigeonhole_chunk_keys(fps, hamming_max, total_bits, n_chunks)
     # chunk-row count is analytic: n_fps × C(c, m) combination keys per
     # fingerprint (fps is pinned, so the count is a block-manager scan)
@@ -496,7 +492,6 @@ def simhash_md5_pairs(
     k: int = 9,
     hamming_max: int = 8,
     n_hex: int = 15,
-    walls: dict | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs over an md5 hash family — every step
     bit-for-bit SQL-reproducible, so a DuckDB oracle can verify the whole
@@ -534,7 +529,7 @@ def simhash_md5_pairs(
         ],
     )
     fps = sums.select(F.col("doc_id").alias("file_id"), fp.alias("fp"))
-    return _pigeonhole_hamming_pairs(fps, hamming_max, n_bits, walls=walls).select(
+    return _pigeonhole_hamming_pairs(fps, hamming_max, n_bits).select(
         F.col("id_a"), F.col("id_b"), F.col("hamming")
     )
 
@@ -632,17 +627,15 @@ def containment_pairs(
     return verbatim.unionByName(settled)
 
 
-def dedup_clusters(
-    docs: DataFrame, k: int, threshold: float, walls: dict | None = None
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, k: int, threshold: float) -> DataFrame:
     """Cluster assignment over exact n-gram-Jaccard edges: every doc gets a
     cluster_id = min doc_id of its connected component (singletons = self)."""
     from facematch_spark.operators.cluster import connected_components
 
-    edges = ngram_jaccard_pairs(docs, k, threshold, walls=walls).select("id_a", "id_b")
+    edges = ngram_jaccard_pairs(docs, k, threshold).select("id_a", "id_b")
     nodes = docs.select(F.col("doc_id").alias("file_id"))
     return (
-        connected_components(edges, nodes=nodes, walls=walls)
+        connected_components(edges, nodes=nodes)
         .select(F.col("file_id").alias("doc_id"), "cluster_id")
     )
 
@@ -652,7 +645,6 @@ def cluster_representatives(
     k: int,
     threshold: float,
     score: F.Column | None = None,
-    walls: dict | None = None,
 ) -> DataFrame:
     """The "which copy survives" step of training-data dedup: per duplicate
     cluster, elect one representative document and report the cluster size.
@@ -673,7 +665,7 @@ def cluster_representatives(
     the score join is by doc_id on relations that already exist.
     """
     score = F.length("text").cast("long") if score is None else score
-    clusters = dedup_clusters(docs, k, threshold, walls=walls)
+    clusters = dedup_clusters(docs, k, threshold)
     scored = clusters.join(docs.select("doc_id", score.alias("score")), "doc_id")
     # max_by over (score, -doc_id): highest score wins, lowest doc_id on ties
     return scored.groupBy("cluster_id").agg(
@@ -706,8 +698,6 @@ def ngram_jaccard_pairs_between(
     verification tier keys its shingle arrays by doc_id alone); callers
     with overlapping id spaces must re-key one side first.
     """
-    from pyspark.sql import Window as W
-
     shingler = {"char": char_shingles, "token": token_shingles}[shingle_kind]
     # shingle each side, tag, union — row-local, no join back to the docs
     sh_tagged = (
@@ -716,38 +706,7 @@ def ngram_jaccard_pairs_between(
         .select("doc_id", "_side", F.xxhash64("shingle").alias("sh"))
         .localCheckpoint()
     )
-    with_n = (
-        sh_tagged.withColumn("freq", F.count("*").over(W.partitionBy("sh")))
-        .withColumn("n_sh", F.count("*").over(W.partitionBy("doc_id")))
-        .withColumn("rnk", F.row_number().over(W.partitionBy("doc_id").orderBy("freq", "sh")))
-    )
-    prefix = (
-        with_n.filter(
-            F.col("rnk") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-        )
-        .select("doc_id", "_side", "sh", "rnk", "n_sh")
-        .localCheckpoint()
-    )
-    # shuffled-hash for the same reason as the self-join form (guide §3.1)
-    a = prefix.filter(F.col("_side") == 0).alias("a")
-    b = prefix.filter(F.col("_side") == 1).alias("b").hint("shuffle_hash")
-    alpha = F.ceil(
-        F.lit(threshold) / (1 + threshold) * (F.col("a.n_sh") + F.col("b.n_sh"))
-    )
-    slack = F.least(
-        F.col("a.n_sh") - F.col("a.rnk"), F.col("b.n_sh") - F.col("b.rnk")
-    )
-    cands = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("b.n_sh") * F.lit(threshold) <= F.col("a.n_sh"))
-            & (F.col("a.n_sh") * F.lit(threshold) <= F.col("b.n_sh"))
-            & (slack + 1 >= alpha),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cands = _ppjoin_candidates(sh_tagged, threshold, cross=True)
     shingles = sh_tagged.select(F.col("doc_id").alias("file_id"), F.col("sh").alias("shingle"))
     return V.exact_overlap(cands, shingles, threshold).drop("containment")
 
@@ -797,7 +756,6 @@ def duplicate_spans(
     docs: DataFrame,
     k: int = 30,
     hash_grams: bool = False,
-    walls: dict | None = None,
 ) -> DataFrame:
     """Exact-substring duplicate SPANS — the "remove the duplicated span,
     not the document" operator of Lee et al. 2022 ("Deduplicating Training
@@ -837,15 +795,14 @@ def duplicate_spans(
     """
     from pyspark.sql import Window as W
 
-    t0 = start()
     eligible = docs.filter(F.length("text") >= k).select("doc_id", "text")
     grams = char_shingles(docs, k)
     key = (F.xxhash64("shingle") if hash_grams else F.col("shingle")).alias("g")
     gk = grams.select("doc_id", key)
     # small (duplicated grams only) but consumed by TWO semi-joins — the
     # checkpoint stops the full shingle groupBy from running twice, and is
-    # the operator's one eager boundary (walls: dup_grams_s = shingle +
-    # dedup-detection; everything after is the lazy positional tail).
+    # the operator's one eager boundary (shingle + dedup-detection;
+    # everything after is the lazy positional tail).
     dup_grams = (
         gk.groupBy("g")
         .agg(F.count("*").alias("n_docs"))  # per-doc-distinct → count == doc count
@@ -854,7 +811,6 @@ def duplicate_spans(
         .localCheckpoint()
     )
     hit_docs = gk.join(dup_grams, "g", "left_semi").select("doc_id").distinct()
-    mark(walls, "dup_grams_s", t0)
 
     pos_key = (F.xxhash64("gram") if hash_grams else F.col("gram")).alias("g")
     positions = (

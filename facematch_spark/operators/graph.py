@@ -116,7 +116,7 @@ def oriented_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def local_triangle_counts(edges: DataFrame, walls: dict | None = None) -> DataFrame:
+def local_triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation counts: (part_id, n_triangles) for
     every vertex in at least one triangle.
 
@@ -129,18 +129,13 @@ def local_triangle_counts(edges: DataFrame, walls: dict | None = None) -> DataFr
     guide §2.3) is HALF of the emit-both-orders form (measured same
     counts, r6).
     """
-    from facematch_spark import telemetry as T
-
-    t0 = T.start()
     # The edge list arrives as an arbitrary (possibly expensive) plan and
     # is consumed three times upstream of orientation (twice by the degree
     # union, once by the orientation join) → pin it once at the boundary:
     # (u, v) longs only, ~16 B/row.
     edges = edges.localCheckpoint()
-    t0 = T.mark(walls, "edges_s", t0)
     # wedges + closing join both consume the oriented relation → pin once.
     o = oriented_edges(edges).localCheckpoint()
-    T.mark(walls, "orient_s", t0)
     o1 = o.select(F.col("src").alias("a"), F.col("dst").alias("b"), F.col("ddst").alias("db"))
     o2 = o.select(F.col("src").alias("a"), F.col("dst").alias("c"), F.col("ddst").alias("dc"))
     # Shuffled-hash joins, build = the oriented-edge relation (O(m) rows of
@@ -175,7 +170,6 @@ def pagerank_int(
     edges: DataFrame,
     iterations: int = 3,
     unit: int = 1_000_000,
-    walls: dict | None = None,
 ) -> DataFrame:
     """Integer-quantized PageRank over the undirected graph (both
     directions propagate). Returns (part_id, pr_micro) after ``iterations``
@@ -187,13 +181,9 @@ def pagerank_int(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    from facematch_spark import telemetry as T
-
-    t0 = T.start()
     # pin the (possibly expensive) edge plan before the two-way union
     # evaluates it twice; then pin the directed relation for the rounds.
     edges = edges.localCheckpoint()
-    t0 = T.mark(walls, "edges_s", t0)
     # ed (directed both ways) + deg are consumed every iteration → pin once.
     ed = (
         edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
@@ -223,7 +213,6 @@ def pagerank_int(
             )
             .localCheckpoint()  # cut lineage per round (cf. cluster.py)
         )
-    T.mark(walls, "iters_s", t0)
     return pr.select(F.col("p").alias("part_id"), F.col("pr").alias("pr_micro"))
 
 
@@ -231,7 +220,6 @@ def link_prediction_ra(
     edges: DataFrame,
     top_k: int = 10,
     unit: int = 1_000_000,
-    walls: dict | None = None,
 ) -> DataFrame:
     """Link prediction by the Resource-Allocation index (Zhou, Lü &
     Zhang, Eur. Phys. J. B 2009): score(u, v) = Σ_{w ∈ N(u)∩N(v)} 1/deg(w)
@@ -252,11 +240,7 @@ def link_prediction_ra(
     or sample N(w) first (documented, cf. the basket-size note on
     copurchase_edges).
     """
-    from facematch_spark import telemetry as T
-
-    t0 = T.start()
     edges = edges.localCheckpoint()
-    t0 = T.mark(walls, "edges_s", t0)
     deg = _degrees(edges)
     ed = (
         edges.select(F.col("u").alias("w"), F.col("v").alias("n"))
@@ -269,7 +253,6 @@ def link_prediction_ra(
         ),
         "w",
     ).localCheckpoint()
-    T.mark(walls, "wedge_pin_s", t0)
     a = wed.select("w", F.col("n").alias("u"), "wt")
     b = wed.select("w", F.col("n").alias("v"))
     # shuffled-hash: the wedge fan-out (Σ deg(w)² rows) is generated and

@@ -136,8 +136,8 @@ def tiered_self_join(
     id_col: str,
     cap: int,
     salt_buckets: int,
+    n_rows: int,
     drop_above: int | None = None,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Size-tiered self equi-join on ``keys`` → distinct canonical pairs
     ``(id_a, id_b)`` with ``id_a < id_b``. The shared skew machinery for
@@ -165,9 +165,9 @@ def tiered_self_join(
     relation in the job through shuffle storage. Semantics are identical
     (``count(*) over (partition by keys)`` ≡ joined groupBy count).
 
-    ``n_rows`` (optional; callers holding a pinned relation pass its count)
-    SIZE-DERIVES the key exchange's partition count instead of taking the
-    session constant: the normal tier's shuffled-hash build cannot spill
+    ``n_rows`` (the row count; callers pin ``rows`` and count it) SIZE-DERIVES
+    the key exchange's partition count instead of taking the session
+    constant: the normal tier's shuffled-hash build cannot spill
     (guide §3.1 risk — the analogous PPJoin prefix build OOM'd at 60M rows
     on cores-count partitions, caught by tools/scale_fallback_probe.py),
     so rows-per-partition is bounded at ``TIER_ROWS_PER_PARTITION``; the
@@ -175,12 +175,11 @@ def tiered_self_join(
     """
     from pyspark.sql.window import Window
 
-    if n_rows is not None:
-        parts = max(
-            rows.sparkSession.sparkContext.defaultParallelism,
-            int(n_rows // TIER_ROWS_PER_PARTITION) + 1,
-        )
-        rows = rows.repartition(parts, *keys)
+    parts = max(
+        rows.sparkSession.sparkContext.defaultParallelism,
+        int(n_rows // TIER_ROWS_PER_PARTITION) + 1,
+    )
+    rows = rows.repartition(parts, *keys)
     sized = rows.withColumn("g", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
 
     normal = sized.filter((F.col("g") > 1) & (F.col("g") <= cap)).drop("g")

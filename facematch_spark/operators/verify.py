@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from facematch_spark.config import DedupeConfig
-from facematch_spark.telemetry import mark, start
 
 
 # Candidate volume under which the distinct candidate-id set is broadcast to
@@ -160,7 +159,6 @@ def exact_overlap(
     pairs: DataFrame,
     shingles: DataFrame,
     threshold: float = 0.0,
-    walls: dict | None = None,
 ) -> DataFrame:
     """Candidate ``(id_a, id_b)`` rows + distinct ``(file_id, shingle)`` rows
     → ``(id_a, id_b, jaccard, containment)`` for every pair with
@@ -181,10 +179,9 @@ def exact_overlap(
     Both branches run the same intersection kernel, so they produce the
     same rows and the same doubles (a JVM ``array_intersect`` form was
     measured ~5× slower than the kernel at PPJoin candidate volumes, where
-    candidates outnumber matches ~10³×). ``walls`` gets ``bcast_collect_s`` when
-    the broadcast branch is taken (telemetry.py).
+    candidates outnumber matches ~10³×).
     """
-    return _overlap(*_pin(pairs), shingles, threshold, walls)
+    return _overlap(*_pin(pairs), shingles, threshold)
 
 
 def _overlap(
@@ -192,9 +189,7 @@ def _overlap(
     n_pairs: int,
     shingles: DataFrame,
     threshold: float = 0.0,
-    walls: dict | None = None,
 ) -> DataFrame:
-    t0 = start()
     spark = pairs.sparkSession
     sh = _semi_to_candidates(shingles.select("file_id", "shingle"), pairs, n_pairs).localCheckpoint()
     if sh.count() <= BROADCAST_SHINGLE_LIMIT:
@@ -206,7 +201,6 @@ def _overlap(
         uniq, starts = np.unique(ids[order], return_index=True)
         bounds = np.append(starts, flat.size)
         bc = spark.sparkContext.broadcast((flat, uniq, bounds))
-        mark(walls, "bcast_collect_s", t0)
 
         def score_flat(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             bflat, buniq, bbounds = bc.value

@@ -1,6 +1,5 @@
-"""Round-5 regression tests: brute-force ANN collect gate, near-containment
-LCS settle wired into the containment operator, and operator-owned stage
-telemetry."""
+"""Round-5 regression tests: brute-force ANN collect gate and the
+near-containment LCS settle wired into the containment operator."""
 
 from __future__ import annotations
 
@@ -62,41 +61,6 @@ def test_near_containment_lcs_settle(spark):
     }
     assert near[(1, 3)] == 1.0
     assert (1, 2) in near and near[(1, 2)] >= 0.95  # settled by LCS coverage
-
-
-def test_operator_stage_walls(spark, tiny_df):
-    """Operators record their own eager materialization boundaries into a
-    caller-supplied walls dict; without one, behavior is unchanged (the
-    bench's per-stage telemetry contract, ADVICE r4)."""
-    from facematch_spark.config import DedupeConfig
-    from facematch_spark.operators.dedup import (
-        dedup_clusters,
-        minhash_lsh_exact_pairs,
-        simhash_md5_pairs,
-    )
-
-    docs = tiny_df.select(
-        F.xxhash64("repo", "path", "commit").alias("doc_id"),
-        F.col("content").alias("text"),
-        F.col("lang"),
-        F.lit("s").alias("source"),
-        F.length("content").alias("n_chars"),
-    ).localCheckpoint()
-
-    st: dict[str, float] = {}
-    dedup_clusters(docs, 9, 0.5, walls=st).count()
-    assert {"shingle_s", "prefix_s", "edges_s", "label_s"} <= set(st)
-    assert all(v >= 0 for v in st.values())
-
-    st2: dict[str, float] = {}
-    minhash_lsh_exact_pairs(docs, DedupeConfig(jaccard_threshold=0.5), walls=st2).count()
-    # r6: verification rides the shared exact-Jaccard tier — the semi-join
-    # stage is gone; the shingle pin and broadcast collect are marked instead
-    assert {"cand_s", "shingle_s"} <= set(st2)
-
-    st3: dict[str, float] = {}
-    simhash_md5_pairs(docs, k=9, hamming_max=8, walls=st3).count()
-    assert "fingerprint_s" in st3
 
 
 def test_fixture_generator_cross_process_determinism():

@@ -6,6 +6,14 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from facematch_spark.operators import graph as G
+
+# both sides of the vertex gate: the default broadcasts the per-vertex
+# relations, 0 sends oriented_edges and pagerank_int down the shuffled-hash joins
+vertex_gate = pytest.mark.parametrize(
+    "vertex_max", [G.BROADCAST_VERTEX_MAX, 0], ids=["broadcast", "shuffled"]
+)
+
 
 def _random_edges(spark, n_vertices=30, n_edges=90, seed=11):
     rng = random.Random(seed)
@@ -18,11 +26,11 @@ def _random_edges(spark, n_vertices=30, n_edges=90, seed=11):
     return df, sorted(es)
 
 
-def test_triangle_counts_match_brute_force(spark):
-    from facematch_spark.operators.graph import local_triangle_counts
-
+@vertex_gate
+def test_triangle_counts_match_brute_force(spark, monkeypatch, vertex_max):
+    monkeypatch.setattr(G, "BROADCAST_VERTEX_MAX", vertex_max)
     df, es = _random_edges(spark)
-    got = {r.part_id: r.n_triangles for r in local_triangle_counts(df).collect()}
+    got = {r.part_id: r.n_triangles for r in G.local_triangle_counts(df).collect()}
 
     adj = {}
     for u, v in es:
@@ -52,13 +60,13 @@ def test_triangle_orientation_counts_each_once(spark):
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
 
 
-def test_pagerank_int_matches_python_replay(spark):
+@vertex_gate
+def test_pagerank_int_matches_python_replay(spark, monkeypatch, vertex_max):
     # engine-independent oracle: replay the exact integer recurrence in
     # plain Python dicts — same floor divisions, same damping arithmetic.
-    from facematch_spark.operators.graph import pagerank_int
-
+    monkeypatch.setattr(G, "BROADCAST_VERTEX_MAX", vertex_max)
     df, es = _random_edges(spark, n_vertices=25, n_edges=60, seed=3)
-    got = {r.part_id: r.pr_micro for r in pagerank_int(df, iterations=3).collect()}
+    got = {r.part_id: r.pr_micro for r in G.pagerank_int(df, iterations=3).collect()}
 
     out = {}
     for u, v in es:

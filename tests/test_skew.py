@@ -64,7 +64,7 @@ def test_max_band_group_drop_bounds_pairs(spark, skew_df):
 
 
 def test_size_derived_partitioning_is_lossless(spark):
-    """r6: passing n_rows/n_build derives the key-exchange partition count
+    """r6: n_rows/n_build derive the key-exchange partition count
     (bounding the un-spillable shuffled-hash builds at scale — see
     SCALE_r06.md) without changing a single output pair, and the derived
     count lands in the physical plan."""
@@ -74,7 +74,9 @@ def test_size_derived_partitioning_is_lossless(spark):
     rows = spark.range(400).select(
         (F.col("id") % 20).alias("k"), F.col("id").alias("fid")
     )
-    base = L.tiered_self_join(rows, keys=["k"], id_col="fid", cap=50, salt_buckets=4)
+    base = L.tiered_self_join(
+        rows, keys=["k"], id_col="fid", cap=50, salt_buckets=4, n_rows=rows.count()
+    )
     forced = L.tiered_self_join(
         rows, keys=["k"], id_col="fid", cap=50, salt_buckets=4, n_rows=50_000_000
     )
@@ -100,3 +102,63 @@ def test_size_derived_partitioning_is_lossless(spark):
         salt_buckets=4, n_build=50_000_000,
     )
     assert sorted(map(tuple, p_base.collect())) == sorted(map(tuple, p_forced.collect()))
+
+
+def test_ppjoin_partitioning_is_size_derived_and_lossless(spark, tiny_df, monkeypatch):
+    """Both PPJoin forms size their prefix join's shuffled-hash build from
+    the prefix row count (``PREFIX_ROWS_PER_PARTITION``): with the bound
+    lowered so the derived count exceeds ``defaultParallelism``, the
+    candidate plan of each form carries that count and the rows of both
+    forms are unchanged."""
+    import io
+    import math
+    import re
+    from contextlib import redirect_stdout
+
+    from facematch_spark.operators import dedup as D
+
+    k, t = 9, 0.5
+    docs = (
+        tiny_df.select(
+            F.xxhash64("repo", "path", "commit").alias("doc_id"), F.col("content").alias("text")
+        )
+        .filter(F.col("text").isNotNull())
+        .localCheckpoint()
+    )
+    left, right = docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 != 0)
+
+    def rows():
+        return (
+            sorted(map(tuple, D.ngram_jaccard_pairs(docs, k, t).collect())),
+            sorted(map(tuple, D.ngram_jaccard_pairs_between(left, right, k, t).collect())),
+        )
+
+    default = rows()
+    assert default[0] and default[1], "the fixture must give pairs in both forms"
+
+    # prefix rows: n - ceil(t·n) + 1 per doc with n distinct k-grams; both
+    # forms rank the same docs, so both derive the same count
+    sizes = D.char_shingles(docs, k).groupBy("doc_id").count().collect()
+    n_prefix = sum(r[1] - math.ceil(t * r[1]) + 1 for r in sizes)
+    dp = spark.sparkContext.defaultParallelism
+    per_part = n_prefix // (3 * dp)
+    expect = n_prefix // per_part + 1
+    assert expect > dp
+    monkeypatch.setattr(D, "PREFIX_ROWS_PER_PARTITION", per_part)
+
+    assert rows() == default
+
+    def hashed(df, *cols):
+        return df.select("doc_id", *cols, F.xxhash64("shingle").alias("sh")).localCheckpoint()
+
+    grams = D.char_shingles(docs, k)
+    side = (F.col("doc_id") % 2 != 0).cast("int")  # left = 0, right = 1
+    for cands in (
+        D._ppjoin_candidates(hashed(grams), t),
+        D._ppjoin_candidates(hashed(grams.withColumn("_side", side), "_side"), t, cross=True),
+    ):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            cands.explain()
+        counts = re.findall(r"hashpartitioning\(sh#\d+L?, (\d+)\)", buf.getvalue())
+        assert counts and set(counts) == {str(expect)}

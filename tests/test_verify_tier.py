@@ -38,10 +38,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _ngram(docs_df, walls=None):
+def _ngram(docs_df):
     from facematch_spark.operators import dedup as D
 
-    return _rows(D.ngram_jaccard_pairs(docs_df, 9, 0.5, walls=walls))
+    return _rows(D.ngram_jaccard_pairs(docs_df, 9, 0.5))
 
 
 def _pipeline(spark, tiny_df):
@@ -67,7 +67,19 @@ def test_broadcast_and_fallback_tiers_agree(spark, docs_df, tiny_df, default_row
     from facematch_spark.operators import verify as V
 
     monkeypatch.setattr(V, gate, 0)
-    walls: dict = {}
-    assert (_ngram(docs_df, walls), _pipeline(spark, tiny_df)) == default_rows
-    # bcast_collect_s is marked only by the broadcast branch
-    assert ("bcast_collect_s" in walls) == (gate != "BROADCAST_SHINGLE_LIMIT")
+    # on these paths exact_overlap's broadcast branch is the only caller of
+    # SparkContext.broadcast, so counting the calls shows the branch taken
+    sc = spark.sparkContext
+    calls = []
+
+    def counted(value):
+        calls.append(value)
+        return type(sc).broadcast(sc, value)
+
+    monkeypatch.setattr(sc, "broadcast", counted)
+    ngram = _ngram(docs_df)
+    ngram_calls = len(calls)
+    assert (ngram, _pipeline(spark, tiny_df)) == default_rows
+    broadcast = gate != "BROADCAST_SHINGLE_LIMIT"
+    assert (ngram_calls > 0) == broadcast
+    assert (len(calls) > ngram_calls) == broadcast

@@ -1,8 +1,9 @@
 """Round-6 scale-fallback exercise (VERDICT r05 item 5): run the gated
 operators' DISTRIBUTED fallback branches — the plans that execute past the
-driver-fast-path gates — on a generated ≥1M-doc corpus, and record stage
-walls. The gates themselves are pytest-pinned at toy scale; this probe is
-the "does the past-gate plan actually complete and scale" evidence.
+driver-fast-path gates — on a generated ≥1M-doc corpus, and record each
+run's wall seconds (run A split by step). The gates themselves are
+pytest-pinned at toy scale; this probe is the "does the past-gate plan
+actually complete and scale" evidence.
 
 Branches exercised:
   A. e2e dedup on the FULL 1M-doc corpus with the attach broadcast/semi
@@ -24,7 +25,7 @@ Branches exercised:
 Usage:  python tools/scale_fallback_probe.py [corpus.parquet] [--runs A,B,C,D,E]
         (corpus default /tmp/fm_corpus_1m.parquet — FIXTURES.md generator,
          n_base=700000, seed=42, edge_rows=False)
-Prints one JSON line per run with walls + row counts; window health is
+Prints one JSON line per run with wall seconds + row counts; window health is
 recorded so sick-host runs are auditable.
 """
 
@@ -133,7 +134,7 @@ def main() -> None:
         n_edges = edges.count()
         st = {}
         t0 = time.perf_counter()
-        cc = connected_components(edges, walls=st)
+        cc = connected_components(edges)
         n_comp = cc.select("cluster_id").distinct().count()
         st["total_s"] = round(time.perf_counter() - t0, 1)
         emit(f"B_cc_star_{n_edges}edges", st, n_edges=n_edges, n_components=n_comp)
@@ -145,7 +146,7 @@ def main() -> None:
         n_c = slice_c.count()
         st = {}
         t0 = time.perf_counter()
-        out = minhash_lsh_exact_pairs(slice_c, cfg, walls=st)
+        out = minhash_lsh_exact_pairs(slice_c, cfg)
         n_out = out.count()
         st["total_s"] = round(time.perf_counter() - t0, 1)
         emit("C_minhash_verify_fallback", st, n_docs=n_c, n_pairs=n_out)
@@ -166,7 +167,7 @@ def main() -> None:
         n_d = slice_d.count()
         st = {}
         t0 = time.perf_counter()
-        out = ngram_jaccard_pairs(slice_d, k=9, threshold=0.8, walls=st)
+        out = ngram_jaccard_pairs(slice_d, k=9, threshold=0.8)
         n_out = out.count()
         st["total_s"] = round(time.perf_counter() - t0, 1)
         emit("D_ppjoin_fallback", st, n_docs=n_d, n_pairs=n_out)
