@@ -674,8 +674,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # threshold. SQL-oracle-able: candidate recall is 1.0 at this
         # corpus/config (deterministic seed; miss prob (1-j⁴)³² ≈ 6e-20 at
         # the planted-dup Jaccard ≥ 0.92), so output equals the brute-force
-        # normalized-Jaccard join. The estimate-only variant
-        # (minhash_lsh_pairs) stays recall-gated in pytest.
+        # normalized-Jaccard join. Its candidate recall is also gated in
+        # pytest against the exact n-gram operator.
         from facematch_spark.operators.dedup import minhash_lsh_exact_pairs
 
         return minhash_lsh_exact_pairs(_t(spark, sf, "documents"), DOC_CFG)
@@ -696,8 +696,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def dedup_simhash(spark, sf):
         # SimHash Hamming-ball pairs (radius 8) via pigeonhole chunk join —
         # md5 hash family, so the WHOLE operator is SQL-reproducible and
-        # DuckDB-oracled. The xxhash-kernel variant (simhash_pairs) is the
-        # pipeline fast path, recall-gated ≥1.0-within-radius in pytest.
+        # DuckDB-oracled. The pigeonhole join it shares with the engine's
+        # xxhash-kernel fingerprints is recall-gated at 1.0 within the
+        # radius in pytest.
         from facematch_spark.operators.dedup import simhash_md5_pairs
 
         return simhash_md5_pairs(_t(spark, sf, "documents"), k=K, hamming_max=8)

@@ -158,7 +158,7 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
 
     # ---- headline: end-to-end dedup dataflow over documents ----
     # Three spans at the dataflow's own materialization boundaries (the
-    # sigs / pairs localCheckpoints already exist inside minhash_lsh_pairs),
+    # pinned signatures, the pinned estimate-filtered pairs, the clusters),
     # so a regression in any later round is attributable to a step from
     # the BENCH_rN artifact alone. The headline is the sum of their walls.
     with tracer.span("dedupe_e2e/sign"):

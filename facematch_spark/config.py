@@ -32,10 +32,8 @@ class DedupeConfig:
     simhash_hamming_max: int = 3
     # --- containment (suffix path) ---
     containment_threshold: float = 0.95
-    # --- skew handling ---
-    hot_band_cap: int = 200      # band groups larger than this are salted
+    # --- skew handling (salting of hot groups is lossless: lsh.HOT_GROUP_CAP) ---
     max_band_group: int = 5000   # band groups larger than this are dropped (recall-documented)
-    salt_buckets: int = 16
     # --- status taxonomy ---
     max_content_bytes: int = 1 << 20
     # --- determinism ---

@@ -229,10 +229,7 @@ def _ppjoin_candidates(sh: DataFrame, threshold: float, cross: bool = False) -> 
     # explicit repartitions are absorbed by the join (same key, same
     # count → no extra exchange), and at bench scale parts ==
     # defaultParallelism.
-    parts = max(
-        prefix.sparkSession.sparkContext.defaultParallelism,
-        int(prefix.count() // PREFIX_ROWS_PER_PARTITION) + 1,
-    )
+    parts = L.key_partitions(prefix, prefix.count(), PREFIX_ROWS_PER_PARTITION)
     if cross:
         a, b = prefix.filter(F.col("_side") == 0), prefix.filter(F.col("_side") == 1)
     else:
@@ -339,51 +336,27 @@ def minhash_lsh_exact_pairs_between(
         bands_l, bands_r,
         keys=["band_id", "band_hash"],
         left_id="id_a", right_id="id_b",
-        cap=cfg.hot_band_cap, salt_buckets=cfg.salt_buckets,
         n_build=bands_r.count(),  # pinned: block-manager scan
     ).dropDuplicates(["id_a", "id_b"]).localCheckpoint()
     sh = doc_shingles(left, cfg).unionByName(doc_shingles(right, cfg)).localCheckpoint()
     return V.exact_overlap(cands, sh, cfg.jaccard_threshold).drop("containment")
 
 
-def minhash_lsh_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    """Scale-path near-dup pairs: MinHash signatures → LSH bands → candidate
-    join → MinHash-estimated Jaccard filter. Returns
-    (id_a, id_b, minhash_est). Recall vs the exact operator is pytest-gated
-    (≥0.99 at the planted-dup Jaccard level)."""
-    # sigs feed candidate generation AND metric attachment — sign once
-    sigs = doc_signatures(docs, cfg).localCheckpoint()
-    cands = L.candidate_pairs(sigs, cfg)
-    m = V.attach_signature_metrics(cands, sigs)
-    return m.filter(F.col("minhash_est") >= F.lit(cfg.jaccard_threshold)).select(
-        "id_a", "id_b", "minhash_est"
-    )
-
-
-def simhash_chunk_bounds(
-    hamming_max: int, total_bits: int = 64, n_chunks: int | None = None
-) -> list[tuple[int, int]]:
+def simhash_chunk_bounds(hamming_max: int, total_bits: int = 64) -> list[tuple[int, int]]:
     """Bit ranges ``(lo_bit, width)`` of the pigeonhole chunks for a
     ``total_bits``-wide fingerprint at Hamming radius ``hamming_max``:
     splitting into ``c > hamming_max`` near-equal chunks guarantees that two
     fingerprints within Hamming ≤ hamming_max agree EXACTLY on at least
     ``c - hamming_max`` chunks (≤ hamming_max differing bits cannot touch
-    more than hamming_max chunks). Default c is ``hamming_max + 2`` at radius
-    ≥ 4 (so keys combine m = 2 chunks — Manku et al., WWW'07) and floored at
-    4 so low radii still get selective keys."""
-    if n_chunks is None:
-        c = max(hamming_max + (2 if hamming_max >= 4 else 1), 4)
-    else:
-        if n_chunks <= hamming_max:
-            raise ValueError(f"n_chunks={n_chunks} must exceed hamming_max={hamming_max}")
-        c = n_chunks
+    more than hamming_max chunks). c is ``hamming_max + 2`` at radius ≥ 4
+    (so keys combine m = 2 chunks — Manku et al., WWW'07) and floored at 4
+    so low radii still get selective keys; any c above the radius is exact."""
+    c = max(hamming_max + (2 if hamming_max >= 4 else 1), 4)
     bounds = [(i * total_bits) // c for i in range(c + 1)]
     return [(bounds[i], bounds[i + 1] - bounds[i]) for i in range(c)]
 
 
-def pigeonhole_chunk_keys(
-    fps: DataFrame, hamming_max: int, total_bits: int, n_chunks: int | None = None
-) -> DataFrame:
+def pigeonhole_chunk_keys(fps: DataFrame, hamming_max: int, total_bits: int) -> DataFrame:
     """(file_id, fp) → (file_id, chunk_id, chunk): one row per m-combination
     of pigeonhole chunks, where m = c - hamming_max and ``chunk`` packs the
     combination's chunk values into one long. Fingerprints within the Hamming
@@ -391,7 +364,7 @@ def pigeonhole_chunk_keys(
     pigeonhole guarantee this module's candidate generators build on."""
     from itertools import combinations
 
-    bounds = simhash_chunk_bounds(hamming_max, total_bits, n_chunks)
+    bounds = simhash_chunk_bounds(hamming_max, total_bits)
     c = len(bounds)
     m = c - hamming_max
     chunk_exprs = [
@@ -415,14 +388,7 @@ def pigeonhole_chunk_keys(
     ).select("file_id", "c.chunk_id", "c.chunk")
 
 
-def _pigeonhole_hamming_pairs(
-    fps: DataFrame,
-    hamming_max: int,
-    total_bits: int,
-    hot_cap: int = 200,
-    salt_buckets: int = 16,
-    n_chunks: int | None = None,
-) -> DataFrame:
+def _pigeonhole_hamming_pairs(fps: DataFrame, hamming_max: int, total_bits: int) -> DataFrame:
     """(file_id, fp) fingerprints → (id_a, id_b, hamming ≤ hamming_max).
     Exact (recall = 1.0 within the radius) via MULTI-CHUNK pigeonhole keys
     (Manku, Jain, Sarma, WWW'07 §3): with c chunks, fingerprints within the
@@ -438,21 +404,19 @@ def _pigeonhole_hamming_pairs(
     from facematch_spark.operators.lsh import tiered_self_join
 
     fps = fps.localCheckpoint()  # feeds chunk explode + two verify joins
-    chunks = pigeonhole_chunk_keys(fps, hamming_max, total_bits, n_chunks)
+    chunks = pigeonhole_chunk_keys(fps, hamming_max, total_bits)
     # chunk-row count is analytic: n_fps × C(c, m) combination keys per
     # fingerprint (fps is pinned, so the count is a block-manager scan)
     from math import comb
 
-    bounds = simhash_chunk_bounds(hamming_max, total_bits, n_chunks)
+    bounds = simhash_chunk_bounds(hamming_max, total_bits)
     n_chunk_rows = fps.count() * comb(len(bounds), len(bounds) - hamming_max)
     cands = tiered_self_join(
         chunks,
         keys=["chunk_id", "chunk"],
         id_col="file_id",
-        cap=hot_cap,
-        salt_buckets=salt_buckets,
-        drop_above=None,  # lossless: recall=1.0 within the Hamming radius
         n_rows=n_chunk_rows,
+        drop_above=None,  # lossless: recall=1.0 within the Hamming radius
     )
     fa = fps.select(F.col("file_id").alias("id_a"), F.col("fp").alias("fp_a"))
     fb = fps.select(F.col("file_id").alias("id_b"), F.col("fp").alias("fp_b"))
@@ -468,25 +432,6 @@ def _pigeonhole_hamming_pairs(
     )
 
 
-def simhash_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    """SimHash near-dup pairs: fingerprint once (vectorized xxhash kernels),
-    candidate-generate by MULTI-CHUNK pigeonhole keys (Manku et al. WWW'07 —
-    see ``pigeonhole_chunk_keys``; the guarantee covers the FULL configured
-    radius), then verify with ``bit_count(xor) ≤ max``. Candidate groups go
-    through the shared size-tiered self-join (plain ≤ cap, salted triangle
-    above — lossless, no drop tier: the exactness guarantee forbids dropping
-    hot chunks). Recall = 1.0 within the radius is pytest-gated against the
-    brute-force Hamming twin."""
-    fps = (
-        doc_signatures(docs, cfg)
-        .filter(F.col("status") == "ok")
-        .select("file_id", F.col("simhash").alias("fp"))
-    )
-    return _pigeonhole_hamming_pairs(
-        fps, cfg.simhash_hamming_max, 64, cfg.hot_band_cap, cfg.salt_buckets
-    )
-
-
 def simhash_md5_pairs(
     docs: DataFrame,
     k: int = 9,
@@ -495,8 +440,8 @@ def simhash_md5_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs over an md5 hash family — every step
     bit-for-bit SQL-reproducible, so a DuckDB oracle can verify the whole
-    operator (the kernel variant ``simhash_pairs`` is faster but its xxhash
-    fingerprints aren't SQL-expressible):
+    operator (the engine's xxhash kernel fingerprints are not
+    SQL-expressible):
 
       * shingle hash = first ``n_hex`` hex chars of md5(normalized char
         k-gram) as a 4·n_hex-bit integer (``conv`` — JVM-side, matches
@@ -783,9 +728,8 @@ def duplicate_spans(
          relation is built for the dirty sliver only;
       3. positional semi-join against the duplicated-gram set (equi-join,
          AQE-skew-safe: a hot gram concentrates per doc_id, not per key);
-      4. per-doc gaps-and-islands merge: window break at gap > k, running
-         sum → island id, groupBy island → span bounds. Windows at p < q
-         merge iff ``q - p <= k`` (coverage is contiguous up to adjacency).
+      4. per-doc gaps-and-islands merge into maximal spans
+         (``_merge_spans``).
 
     ``hash_grams=True`` shuffles ``xxhash64(gram)`` (8 bytes) instead of the
     k-char string — the 100 TB shuffle diet. Collisions can only ADD false
@@ -793,8 +737,6 @@ def duplicate_spans(
     ~10⁻⁴ per doc-pair at 10¹⁴ grams); parity with the exact form is
     pytest-pinned on the fixture corpus.
     """
-    from pyspark.sql import Window as W
-
     eligible = docs.filter(F.length("text") >= k).select("doc_id", "text")
     grams = char_shingles(docs, k)
     key = (F.xxhash64("shingle") if hash_grams else F.col("shingle")).alias("g")
@@ -819,10 +761,20 @@ def duplicate_spans(
         .select("doc_id", (F.col("idx") + 1).alias("pos"), pos_key)
     )
     dup_pos = positions.join(dup_grams, "g", "left_semi").select("doc_id", "pos")
+    return _merge_spans(dup_pos, k)
+
+
+def _merge_spans(dup_pos: DataFrame, k: int) -> DataFrame:
+    """Per-doc gaps-and-islands merge of duplicated k-char windows
+    ``(doc_id, pos)`` into maximal spans ``(doc_id, span_start, span_end,
+    span_len)``: a window break at gap > k, a running sum → island id, a
+    groupBy island → span bounds. Windows at p < q merge iff ``q - p <= k``
+    (coverage is contiguous up to adjacency)."""
+    from pyspark.sql import Window as W
 
     w = W.partitionBy("doc_id").orderBy("pos")
     brk = F.when(F.col("pos") - F.lag("pos").over(w) > k, 1).otherwise(0)
-    spans = (
+    return (
         dup_pos.withColumn("brk", brk)  # two steps: window-in-window is illegal
         .withColumn("island", F.sum("brk").over(w))
         .groupBy("doc_id", "island")
@@ -837,7 +789,6 @@ def duplicate_spans(
             (F.col("span_end") - F.col("span_start")).alias("span_len"),
         )
     )
-    return spans
 
 
 def duplicate_span_stats(
@@ -926,20 +877,4 @@ def within_doc_repeated_spans(docs: DataFrame, k: int = 20) -> DataFrame:
         .filter(F.col("_n") >= 2)
         .select("doc_id", "pos")
     )
-    w = W.partitionBy("doc_id").orderBy("pos")
-    brk = F.when(F.col("pos") - F.lag("pos").over(w) > k, 1).otherwise(0)
-    return (
-        dup_pos.withColumn("brk", brk)
-        .withColumn("island", F.sum("brk").over(w))
-        .groupBy("doc_id", "island")
-        .agg(
-            F.min("pos").cast("long").alias("span_start"),
-            (F.max("pos") + k).cast("long").alias("span_end"),
-        )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start")).alias("span_len"),
-        )
-    )
+    return _merge_spans(dup_pos, k)

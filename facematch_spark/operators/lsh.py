@@ -15,12 +15,12 @@ Scale notes (the part the reference cannot do at all):
   * the join is a shuffle hash/sort-merge equi-join on band_hash — Catalyst
     picks; AQE skew-join is the backstop;
   * hot bands (boilerplate: license headers, empty ``__init__.py`` files)
-    are handled explicitly BEFORE the join: band groups larger than
-    ``max_band_group`` are dropped from candidate generation (their members
-    are near-certainly caught by their other b-1 bands; standard in code
-    dedup — recall impact documented in tests), groups above ``hot_band_cap``
-    are exempted from nothing but counted in metrics. A group of size g emits
-    g(g-1)/2 pairs — capping g caps the quadratic term.
+    are handled explicitly BEFORE the join by ``tiered_self_join``: groups
+    above ``HOT_GROUP_CAP`` take a salted triangle join over
+    ``SALT_BUCKETS`` buckets (lossless), and groups above
+    ``cfg.max_band_group`` are dropped (recall impact documented in tests).
+    A group of size g emits g(g-1)/2 pairs — capping g caps the quadratic
+    term.
   * pair canonicalization ``id_a < id_b`` replaces the reference's
     seen-set bookkeeping (``utils.py:237-240``) and md5 pair keys
     (``utils.py:267-268``).
@@ -47,6 +47,22 @@ from facematch_spark.functions import hashing as H
 # the memory bound (observed at 1M vectors: 96 MB build exchange coalesced
 # to ~2 partitions → build OOM).
 TIER_ROWS_PER_PARTITION = 500_000
+
+# Key groups above this size take the salted join in ``tiered_self_join`` and
+# ``salted_probe_join``, so no reducer holds a whole hot group. Salting is
+# lossless: the cap moves work between two physical plans, never a pair.
+HOT_GROUP_CAP = 200
+# Buckets a hot group is salted into; any count gives the same pairs.
+SALT_BUCKETS = 16
+
+
+def key_partitions(df: DataFrame, n_rows: int, rows_per_partition: int) -> int:
+    """Partition count for a key exchange over ``n_rows`` rows: at most
+    ``rows_per_partition`` rows each, and never fewer than the session's
+    ``defaultParallelism``. An explicit count keeps an un-spillable
+    shuffled-hash build bounded per task and stops AQE from coalescing the
+    build exchange past that bound."""
+    return max(df.sparkSession.sparkContext.defaultParallelism, n_rows // rows_per_partition + 1)
 
 
 def band_explode(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
@@ -89,30 +105,12 @@ def band_explode(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
 def candidate_pairs(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """LSH candidate pair generation → (id_a, id_b) distinct, id_a < id_b.
 
-    Skew handling (north rule: salt hot bands, repartition by band-hash key,
-    spill-safe shuffle) is explicit and size-tiered via
-    ``groupBy(band_id, band_hash).count()``:
-
-      * g == 1           → dropped (no pair can come from a singleton group);
-      * 1 < g ≤ cap      → plain self equi-join on (band_id, band_hash). The
-                           join's hash exchange IS the band-hash repartition —
-                           adding a manual ``repartition`` would only double
-                           the shuffle;
-      * cap < g ≤ max    → **salted triangle join**: members get a bucket
-                           ``b = xxhash64(file_id) % s``; the left side is
-                           replicated to every bucket ≥ its own, the right
-                           side keeps its bucket, and the join key becomes
-                           (band, left_replica_bucket == right_bucket). Every
-                           unordered pair lands on exactly one reducer and no
-                           reducer sees more than (g/s)² work — the standard
-                           blocked self-join for skewed keys;
-      * g > max          → dropped from candidate generation entirely
-                           (boilerplate bands — license headers, empty
-                           ``__init__`` files; members are near-certainly
-                           co-candidates through their other b-1 bands; recall
-                           impact is measured in tests/test_skew.py).
-
-    AQE's skew-join split remains on as a backstop for residual imbalance.
+    The band rows go through ``tiered_self_join`` on (band_id, band_hash):
+    groups above ``HOT_GROUP_CAP`` are salted into ``SALT_BUCKETS`` buckets
+    (lossless), and groups above ``cfg.max_band_group`` are dropped
+    (boilerplate bands — license headers, empty ``__init__`` files; members
+    are near-certainly co-candidates through their other b-1 bands; recall
+    impact is measured in tests/test_skew.py).
     """
     # materialize the band relation once: it feeds both the group-size
     # aggregation and the self-join; without the cut the mapInPandas
@@ -123,10 +121,8 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
         bands_df,
         keys=["band_id", "band_hash"],
         id_col="file_id",
-        cap=cfg.hot_band_cap,
-        salt_buckets=cfg.salt_buckets,
-        drop_above=cfg.max_band_group,
         n_rows=bands_df.count(),  # pinned: the count is a block-manager scan
+        drop_above=cfg.max_band_group,
     )
 
 
@@ -134,8 +130,6 @@ def tiered_self_join(
     rows: DataFrame,
     keys: list[str],
     id_col: str,
-    cap: int,
-    salt_buckets: int,
     n_rows: int,
     drop_above: int | None = None,
 ) -> DataFrame:
@@ -145,14 +139,15 @@ def tiered_self_join(
     hyperplane buckets):
 
       * g == 1                → dropped (no pair from a singleton group);
-      * 1 < g ≤ cap           → plain self equi-join on ``keys``;
-      * cap < g (≤ drop_above)→ salted triangle join: members get bucket
-                                ``b = xxhash64(id) % s``, the left side is
-                                replicated to buckets ≥ its own, the right
-                                keeps its bucket — every unordered pair lands
-                                on exactly one reducer, no reducer sees more
-                                than (g/s)² work. LOSSLESS — same pairs as
-                                the plain join;
+      * 1 < g ≤ HOT_GROUP_CAP → plain self equi-join on ``keys``;
+      * HOT_GROUP_CAP < g (≤ drop_above)
+                              → salted triangle join: members get bucket
+                                ``b = xxhash64(id) % SALT_BUCKETS``, the left
+                                side is replicated to buckets ≥ its own, the
+                                right keeps its bucket — every unordered pair
+                                lands on exactly one reducer, no reducer sees
+                                more than (g/SALT_BUCKETS)² work. LOSSLESS —
+                                same pairs as the plain join;
       * g > drop_above        → dropped entirely (only when ``drop_above``
                                 is set; callers with an exactness guarantee —
                                 SimHash pigeonhole — pass ``None``).
@@ -175,11 +170,8 @@ def tiered_self_join(
     """
     from pyspark.sql.window import Window
 
-    parts = max(
-        rows.sparkSession.sparkContext.defaultParallelism,
-        int(n_rows // TIER_ROWS_PER_PARTITION) + 1,
-    )
-    rows = rows.repartition(parts, *keys)
+    cap, s = HOT_GROUP_CAP, SALT_BUCKETS
+    rows = rows.repartition(key_partitions(rows, n_rows, TIER_ROWS_PER_PARTITION), *keys)
     sized = rows.withColumn("g", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
 
     normal = sized.filter((F.col("g") > 1) & (F.col("g") <= cap)).drop("g")
@@ -199,7 +191,6 @@ def tiered_self_join(
         b, on=[*on, F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]
     ).select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
 
-    s = salt_buckets
     hot_b = hot.withColumn("bkt", F.pmod(F.xxhash64(id_col), F.lit(s)))
     hot_a = hot_b.withColumn("rep", F.explode(F.sequence(F.col("bkt"), F.lit(s - 1))))
     ha, hb = hot_a.alias("ha"), hot_b.alias("hb")
@@ -228,18 +219,18 @@ def salted_probe_join(
     keys: list[str],
     left_id: str,
     right_id: str,
-    cap: int,
-    salt_buckets: int,
     n_build: int,
 ) -> DataFrame:
     """Skew-safe ASYMMETRIC equi-join on ``keys`` → ``(left_id, right_id)``
     rows — the probe→build sibling of ``tiered_self_join`` for candidate
     generators whose two sides differ (multi-probe ANN queries probing home
     buckets, containment probes against a gram relation). Build-side groups
-    above ``cap`` are salted: build rows get ``bkt = xxhash64(right_id) % s``
-    and each probe row replicates across all s buckets, so no reducer sees
-    more than g/s build rows per probe — LOSSLESS (same rows as the plain
-    join; verified in tests/test_skew.py)."""
+    above ``HOT_GROUP_CAP`` are salted: build rows get
+    ``bkt = xxhash64(right_id) % SALT_BUCKETS`` and each probe row replicates
+    across all buckets, so no reducer sees more than g/SALT_BUCKETS build
+    rows per probe — LOSSLESS (same rows as the plain join; verified in
+    tests/test_skew.py)."""
+    cap, s = HOT_GROUP_CAP, SALT_BUCKETS
     sizes = build.groupBy(*keys).agg(F.count("*").alias("g"))
     build_sized = build.join(sizes, keys)
     probes_sized = probes.join(sizes, keys)  # inner: probes w/o build rows can't match anyway
@@ -260,15 +251,11 @@ def salted_probe_join(
     # was auto-broadcast abort → hint-only SHJ build OOM → this). Explicit
     # partition counts also stop AQE from coalescing the build exchange past
     # the build's memory bound.
-    parts = max(
-        build.sparkSession.sparkContext.defaultParallelism,
-        int(n_build // TIER_ROWS_PER_PARTITION) + 1,
-    )
+    parts = key_partitions(build, n_build, TIER_ROWS_PER_PARTITION)
     normal_p = normal_p.repartition(parts, *keys)
     normal_b = normal_b.repartition(parts, *keys)
     normal = normal_p.join(normal_b.hint("shuffle_hash"), keys).select(left_id, right_id)
 
-    s = salt_buckets
     hot_b = build_sized.filter(F.col("g") > cap).drop("g").withColumn(
         "bkt", F.pmod(F.xxhash64(right_id), F.lit(s))
     )

@@ -204,8 +204,6 @@ def embedding_near_dup_pairs_lsh(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    hot_bucket_cap: int = 200,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """APPROXIMATE embedding-cosine near-dup pairs — the 100 TB path.
 
@@ -220,10 +218,7 @@ def embedding_near_dup_pairs_lsh(
     constant as the corpus grows), never N²."""
     if n_bits is None:
         n_bits = auto_n_bits(vectors.count())
-    cands = lsh_bucket_candidates(
-        vectors, n_bits, n_tables, dim, seed, vec_col, id_col,
-        hot_bucket_cap=hot_bucket_cap, salt_buckets=salt_buckets,
-    )
+    cands = lsh_bucket_candidates(vectors, n_bits, n_tables, dim, seed, vec_col, id_col)
     # norms are per-VECTOR, not per-pair: compute them once on the |corpus|-
     # row relation instead of twice per candidate (the HOF norm walks an
     # interpreted lambda per element — hoisting it off the candidate relation
@@ -324,8 +319,6 @@ def lsh_bucket_candidates(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    hot_bucket_cap: int = 200,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """SYMMETRIC ANN candidate pairs: same sign-sketch bucket in ANY of
     ``n_tables`` independent hyperplane tables. Equi-join per table on
@@ -344,9 +337,6 @@ def lsh_bucket_candidates(
         allb,
         keys=["table_id", "bucket"],
         id_col="vid",
-        cap=hot_bucket_cap,
-        salt_buckets=salt_buckets,
-        drop_above=None,
         n_rows=allb.count(),  # pinned: the count is a block-manager scan
     )
 
@@ -513,8 +503,6 @@ def ann_topk_lsh(
     dim: int = 64,
     seed: int = 42,
     multi_probe: bool = True,
-    hot_bucket_cap: int = 200,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Approximate top-k: LSH candidates → exact cosine on candidates only →
     per-query window top-k.
@@ -552,7 +540,6 @@ def ann_topk_lsh(
         salted_probe_join(
             probes, home, keys=["table_id", "bucket"],
             left_id="qid", right_id="nid",
-            cap=hot_bucket_cap, salt_buckets=salt_buckets,
             n_build=sk.count(),  # pinned: block-manager scan
         )
         .filter(F.col("qid") != F.col("nid"))

@@ -39,20 +39,26 @@ def write_csv_report(
     base.write.mode("overwrite").option("header", True).csv(out_dir)
 
 
+def _edge_order(strongest: bool) -> tuple:
+    """Strongest-first (top) or weakest-first (bottom) pair order. Ties in
+    jaccard break on (id_a, id_b), so a top/bottom-K cut is a pure function
+    of the pair relation."""
+    jaccard = F.desc("jaccard") if strongest else F.asc("jaccard")
+    return jaccard, F.asc("id_a"), F.asc("id_b")
+
+
 def top_bottom_edges_df(pairs: DataFrame, edges: int) -> DataFrame:
     """Deterministic top-K strongest + bottom-K weakest pairs as a DataFrame
     ``(which, pos, id_a, id_b, jaccard)`` — the oracle-checkable form of the
     reference's 'first/last N edges' report sections (``utils.py:270-298``).
-    Ties in jaccard break on (id_a, id_b) so the K-row result is a pure
-    function of the pair relation. Each side plans as TakeOrderedAndProject
-    (limit pushed into the sort); the row_number window then runs on the
-    K-bounded result only, so the single-partition window is K rows, never
-    the full relation."""
+    Each side plans as TakeOrderedAndProject (limit pushed into the sort);
+    the row_number window then runs on the K-bounded result only, so the
+    single-partition window is K rows, never the full relation."""
     from pyspark.sql import Window as W
 
     base = pairs.dropDuplicates(["id_a", "id_b"]).select("id_a", "id_b", "jaccard")
 
-    def side(which: str, *order) -> DataFrame:
+    def side(which: str, order) -> DataFrame:
         return (
             base.orderBy(*order)
             .limit(edges)
@@ -60,18 +66,19 @@ def top_bottom_edges_df(pairs: DataFrame, edges: int) -> DataFrame:
             .withColumn("which", F.lit(which))
         )
 
-    top = side("top", F.desc("jaccard"), F.asc("id_a"), F.asc("id_b"))
-    bottom = side("bottom", F.asc("jaccard"), F.asc("id_a"), F.asc("id_b"))
+    top = side("top", _edge_order(strongest=True))
+    bottom = side("bottom", _edge_order(strongest=False))
     return top.unionByName(bottom).select("which", "pos", "id_a", "id_b", "jaccard")
 
 
 def top_bottom_edges(pairs: DataFrame, edges: int) -> tuple[list, list]:
     """Top-K strongest and bottom-K weakest unique pairs — the reference's
-    'first/last N edges' report sections (``utils.py:270-298``). Spark plans
-    both as TakeOrderedAndProject (limit pushed into the sort)."""
+    'first/last N edges' report sections (``utils.py:270-298``), with every
+    column of ``pairs``, in the same order as ``top_bottom_edges_df``. Spark
+    plans both as TakeOrderedAndProject (limit pushed into the sort)."""
     base = pairs.dropDuplicates(["id_a", "id_b"])
-    top = base.orderBy(F.desc("jaccard")).limit(edges).collect()
-    bottom = base.orderBy(F.asc("jaccard")).limit(edges).collect()
+    top = base.orderBy(*_edge_order(strongest=True)).limit(edges).collect()
+    bottom = base.orderBy(*_edge_order(strongest=False)).limit(edges).collect()
     return top, bottom
 
 

@@ -94,20 +94,6 @@ def resolve_snapshot_pin(meta: dict, head_snapshot_id: int | None) -> int | None
     return stored
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def read_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(path)
-
-
 def read_source_files_text(
     spark: SparkSession, location: str, fmt: str = "jsonl", multiline: bool = False
 ) -> DataFrame:

@@ -19,7 +19,12 @@ Two streaming capabilities still belong in the engine:
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,35 +90,44 @@ def windowed_event_counts(
     )
 
 
+@contextmanager
+def stream_source(parquet_path: str) -> Iterator[str]:
+    """Directory to ``readStream`` ``parquet_path`` from. The file stream
+    source requires a directory, so a single-file input is copied into a
+    fresh temp directory, removed on exit (once the query has stopped, the
+    memory sink already holds the rows); a directory is used as is."""
+    if not os.path.isfile(parquet_path):
+        yield parquet_path
+        return
+    staged = tempfile.mkdtemp(prefix="fm_stream_")
+    try:
+        shutil.copy(parquet_path, staged)
+        yield staged
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
+
+
 def run_streaming_event_counts(spark: SparkSession, parquet_path: str) -> DataFrame:
     """Drive the windowed aggregation as an actual Structured Streaming query
     over the events parquet (availableNow → memory sink → final table).
     Proves the operator works under the streaming engine, then returns the
     result as a normal DataFrame for comparison."""
-    import os
-    import shutil
-    import tempfile
-
     schema = spark.read.parquet(parquet_path).schema
-    # the file stream source requires a directory; stage single-file inputs
-    if os.path.isfile(parquet_path):
-        staged = tempfile.mkdtemp(prefix="fm_stream_")
-        shutil.copy(parquet_path, staged)
-        parquet_path = staged
-    stream = spark.readStream.schema(schema).parquet(parquet_path)
-    # watermarks require TIMESTAMP (LTZ); parquet may carry NTZ — with the
-    # session pinned to UTC the cast is wall-clock-preserving.
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = windowed_event_counts(stream)
-    name = f"stream_out_{abs(hash(parquet_path)) % 10_000_000}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with stream_source(parquet_path) as src:
+        stream = spark.readStream.schema(schema).parquet(src)
+        # watermarks require TIMESTAMP (LTZ); parquet may carry NTZ — with the
+        # session pinned to UTC the cast is wall-clock-preserving.
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        agg = windowed_event_counts(stream)
+        name = f"stream_out_{abs(hash(src)) % 10_000_000}"
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.table(name)
 
 
@@ -134,30 +148,23 @@ def streaming_exact_dedup(spark: SparkSession, parquet_path: str) -> DataFrame:
     drain-a-directory ``availableNow`` shape here, the unbounded form is
     the correct one: it IS the batch-distinct answer.
     """
-    import os
-    import shutil
-    import tempfile
-
     schema = spark.read.parquet(parquet_path).schema
-    if os.path.isfile(parquet_path):
-        staged = tempfile.mkdtemp(prefix="fm_stream_dedup_")
-        shutil.copy(parquet_path, staged)
-        parquet_path = staged
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(parquet_path)
-    )
-    fps = stream.select(F.md5("text").alias("fp")).dropDuplicates(["fp"])
-    name = f"stream_dedup_{abs(hash(parquet_path)) % 10_000_000}"
-    q = (
-        fps.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with stream_source(parquet_path) as src:
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 4)
+            .parquet(src)
+        )
+        fps = stream.select(F.md5("text").alias("fp")).dropDuplicates(["fp"])
+        name = f"stream_dedup_{abs(hash(src)) % 10_000_000}"
+        q = (
+            fps.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.table(name)
 
 
@@ -189,55 +196,48 @@ def streaming_click_error_join(
     mitigation as any keyed state (wider horizon sharding via salting the
     user into k sub-keys and probing all k, at k× probe cost).
     """
-    import os
-    import shutil
-    import tempfile
-
     schema = spark.read.parquet(parquet_path).schema
-    if os.path.isfile(parquet_path):
-        staged = tempfile.mkdtemp(prefix="fm_stream_join_")
-        shutil.copy(parquet_path, staged)
-        parquet_path = staged
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_path).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
+    with stream_source(parquet_path) as src:
+        reader = spark.readStream.schema(schema)
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        stream = reader.parquet(src).withColumn(
+            "ts", F.col("ts").cast("timestamp")
         )
-        .withWatermark("c_ts", watermark)
-    )
-    errors = (
-        stream.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("e_ts"),
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id").alias("c_user"),
+                F.col("ts").alias("c_ts"),
+            )
+            .withWatermark("c_ts", watermark)
         )
-        .withWatermark("e_ts", watermark)
-    )
-    joined = errors.join(
-        clicks,
-        (F.col("c_user") == F.col("e_user"))
-        & (F.col("c_ts") >= F.col("e_ts") - F.expr(f"INTERVAL {window_s} SECOND"))
-        & (F.col("c_ts") < F.col("e_ts")),
-        "inner",
-    ).select("error_id", "click_id", F.col("e_user").alias("user_id"))
-    name = f"stream_join_{abs(hash(parquet_path)) % 10_000_000}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        errors = (
+            stream.filter(F.col("event_type") == "error")
+            .select(
+                F.col("event_id").alias("error_id"),
+                F.col("user_id").alias("e_user"),
+                F.col("ts").alias("e_ts"),
+            )
+            .withWatermark("e_ts", watermark)
+        )
+        joined = errors.join(
+            clicks,
+            (F.col("c_user") == F.col("e_user"))
+            & (F.col("c_ts") >= F.col("e_ts") - F.expr(f"INTERVAL {window_s} SECOND"))
+            & (F.col("c_ts") < F.col("e_ts")),
+            "inner",
+        ).select("error_id", "click_id", F.col("e_user").alias("user_id"))
+        name = f"stream_join_{abs(hash(src)) % 10_000_000}"
+        q = (
+            joined.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.table(name)
 
 
@@ -264,41 +264,34 @@ def streaming_static_enrich(
     between triggers are picked up, which is exactly the
     slowly-changing-dimension behavior wanted.
     """
-    import os
-    import shutil
-    import tempfile
-
     batch = spark.read.parquet(parquet_path)
     schema = batch.schema
     dim = (
         batch.select("event_type").distinct()
         .withColumn("wt", F.length("event_type").cast("long"))
     )
-    if os.path.isfile(parquet_path):
-        staged = tempfile.mkdtemp(prefix="fm_stream_enrich_")
-        shutil.copy(parquet_path, staged)
-        parquet_path = staged
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_path)
-    enriched = stream.join(F.broadcast(dim), "event_type").select(
-        "event_type",
-        (F.round(F.col("value") * 100, 0).cast("long") * F.col("wt")).alias("cents"),
-    )
-    agg = enriched.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum("cents").alias("weighted_cents"),
-    )
-    name = f"stream_enrich_{abs(hash(parquet_path)) % 10_000_000}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with stream_source(parquet_path) as src:
+        reader = spark.readStream.schema(schema)
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        stream = reader.parquet(src)
+        enriched = stream.join(F.broadcast(dim), "event_type").select(
+            "event_type",
+            (F.round(F.col("value") * 100, 0).cast("long") * F.col("wt")).alias("cents"),
+        )
+        agg = enriched.groupBy("event_type").agg(
+            F.count("*").alias("n_events"),
+            F.sum("cents").alias("weighted_cents"),
+        )
+        name = f"stream_enrich_{abs(hash(src)) % 10_000_000}"
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.table(name)
 
 
@@ -330,9 +323,6 @@ def streaming_merge_apply(
     dataflow inside the loop is unchanged.
     """
     import atexit
-    import os
-    import shutil
-    import tempfile
 
     from facematch_spark.operators.merge import merge_upsert
 

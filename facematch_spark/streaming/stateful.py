@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from facematch_spark.streaming.incremental import stream_source
+
 OUTPUT = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -69,30 +71,23 @@ def run_stateful_user_totals(spark: SparkSession, parquet_path: str) -> DataFram
     ideal; with one file we still exercise state create+update within the
     run), availableNow to completion, memory sink, return the final per-key
     rows (update mode ⇒ last emit per key wins)."""
-    import os
-    import shutil
-    import tempfile
-
     schema = spark.read.parquet(parquet_path).schema
-    if os.path.isfile(parquet_path):
-        staged = tempfile.mkdtemp(prefix="fm_stateful_")
-        shutil.copy(parquet_path, staged)
-        parquet_path = staged
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(parquet_path)
-    )
-    out = stateful_user_totals(stream)
-    name = f"stateful_out_{abs(hash(parquet_path)) % 10_000_000}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with stream_source(parquet_path) as src:
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        out = stateful_user_totals(stream)
+        name = f"stateful_out_{abs(hash(src)) % 10_000_000}"
+        q = (
+            out.writeStream.outputMode("update")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     # update-mode memory sink appends every emitted row; keep each key's last
     all_rows = spark.table(name).withColumn("_ord", F.monotonically_increasing_id())
     from pyspark.sql import Window as W

@@ -17,7 +17,7 @@ from facematch_spark.operators import signatures as SIG
 from facematch_spark.operators import verify as V
 from facematch_spark.plans.pipeline import run_dedupe
 
-CFG = DedupeConfig(jaccard_threshold=0.5, hot_band_cap=200, max_band_group=5000)
+CFG = DedupeConfig(jaccard_threshold=0.5, max_band_group=5000)
 
 
 @pytest.fixture(scope="module")

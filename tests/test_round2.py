@@ -39,43 +39,60 @@ def _brute_hamming_pairs(fps: dict[int, int], hmax: int) -> set[tuple[int, int]]
     return out
 
 
-def test_simhash_full_radius_recall(spark, docs):
-    """simhash_pairs at hamming_max=8 must equal the brute-force Hamming
-    filter over the SAME fingerprints — set equality, i.e. recall = 1.0
-    across the whole radius (the round-1 pigeonhole hole missed pairs at
-    Hamming 4-8 whose differing bits spread across all 4 fixed chunks)."""
-    from facematch_spark.operators.dedup import doc_signatures, simhash_pairs
+@pytest.fixture(scope="module")
+def kernel_fps(spark, docs):
+    """(file_id, fp) SimHash fingerprints from the engine's signature
+    kernels at radius 8."""
+    from facematch_spark.operators.dedup import doc_signatures
 
-    cfg = DedupeConfig(simhash_hamming_max=8)
-    sigs = doc_signatures(docs, cfg).filter(F.col("status") == "ok")
-    fps = {r.file_id: r.simhash & ((1 << 64) - 1) for r in sigs.select("file_id", "simhash").collect()}
+    sigs = doc_signatures(docs, DedupeConfig(simhash_hamming_max=8))
+    return (
+        sigs.filter(F.col("status") == "ok")
+        .select("file_id", F.col("simhash").alias("fp"))
+        .localCheckpoint()
+    )
+
+
+def test_simhash_full_radius_recall(spark, kernel_fps):
+    """The pigeonhole join at hamming_max=8 must equal the brute-force
+    Hamming filter over the SAME fingerprints — set equality, i.e.
+    recall = 1.0 across the whole radius (the round-1 pigeonhole hole missed
+    pairs at Hamming 4-8 whose differing bits spread across all 4 fixed
+    chunks)."""
+    from facematch_spark.operators.dedup import _pigeonhole_hamming_pairs
+
+    fps = {r.file_id: r.fp & ((1 << 64) - 1) for r in kernel_fps.collect()}
     expected = _brute_hamming_pairs(fps, 8)
-    got = {(r.id_a, r.id_b) for r in simhash_pairs(docs, cfg).collect()}
+    got = {(r.id_a, r.id_b) for r in _pigeonhole_hamming_pairs(kernel_fps, 8, 64).collect()}
     assert got == expected
     assert expected, "fixture must contain near-dup pairs within Hamming 8"
 
 
-def test_simhash_salted_tier_lossless(spark, docs):
+def test_simhash_salted_tier_lossless(spark, kernel_fps, monkeypatch):
     """Forcing every chunk group through the salted triangle join
-    (hot_band_cap=2) must not change the pair set."""
-    from facematch_spark.operators.dedup import simhash_pairs
+    (HOT_GROUP_CAP=2) must not change the pair set."""
+    from facematch_spark.operators import lsh as L
+    from facematch_spark.operators.dedup import _pigeonhole_hamming_pairs
 
-    plain = simhash_pairs(docs, DedupeConfig(simhash_hamming_max=8, hot_band_cap=100_000))
-    salted = simhash_pairs(docs, DedupeConfig(simhash_hamming_max=8, hot_band_cap=2, salt_buckets=4))
-    a = {(r.id_a, r.id_b) for r in plain.collect()}
-    b = {(r.id_a, r.id_b) for r in salted.collect()}
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 100_000)
+    a = {(r.id_a, r.id_b) for r in _pigeonhole_hamming_pairs(kernel_fps, 8, 64).collect()}
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 2)
+    monkeypatch.setattr(L, "SALT_BUCKETS", 4)
+    b = {(r.id_a, r.id_b) for r in _pigeonhole_hamming_pairs(kernel_fps, 8, 64).collect()}
     assert a == b and a
 
 
-def test_ann_bucket_salted_tier_lossless(spark):
+def test_ann_bucket_salted_tier_lossless(spark, monkeypatch):
     """Same for the ANN hyperplane-bucket path."""
+    from facematch_spark.operators import lsh as L
     from facematch_spark.operators.similarity import lsh_bucket_candidates
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").localCheckpoint()
-    plain = lsh_bucket_candidates(emb, n_bits=4, n_tables=2, hot_bucket_cap=100_000)
-    salted = lsh_bucket_candidates(emb, n_bits=4, n_tables=2, hot_bucket_cap=2, salt_buckets=4)
-    a = {(r.id_a, r.id_b) for r in plain.collect()}
-    b = {(r.id_a, r.id_b) for r in salted.collect()}
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 100_000)
+    a = {(r.id_a, r.id_b) for r in lsh_bucket_candidates(emb, n_bits=4, n_tables=2).collect()}
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 2)
+    monkeypatch.setattr(L, "SALT_BUCKETS", 4)
+    b = {(r.id_a, r.id_b) for r in lsh_bucket_candidates(emb, n_bits=4, n_tables=2).collect()}
     assert a == b and a
 
 

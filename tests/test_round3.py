@@ -130,8 +130,6 @@ def test_pigeonhole_guarantee_all_radii(spark, radius):
 def test_simhash_chunk_bounds_validation():
     from facematch_spark.operators.dedup import simhash_chunk_bounds
 
-    with pytest.raises(ValueError):
-        simhash_chunk_bounds(8, 64, n_chunks=8)  # c must exceed the radius
     # r=0 degenerates to whole-fingerprint equality: one combo of all chunks
     bounds = simhash_chunk_bounds(0, 64)
     assert sum(w for _, w in bounds) == 64
@@ -141,8 +139,11 @@ def test_simhash_chunk_bounds_validation():
 # salted probe join (shared skew machinery for asymmetric candidates)
 # ---------------------------------------------------------------------------
 
-def test_salted_probe_join_lossless(spark):
-    from facematch_spark.operators.lsh import salted_probe_join
+def test_salted_probe_join_lossless(spark, monkeypatch):
+    from facematch_spark.operators import lsh as L
+
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 50)
+    monkeypatch.setattr(L, "SALT_BUCKETS", 4)
 
     rng = np.random.default_rng(3)
     # one hot key (0) with 400 build rows, the rest small
@@ -154,9 +155,9 @@ def test_salted_probe_join_lossless(spark):
     probes = spark.createDataFrame(probe_rows, "key int, qid long")
     got = {
         (r.qid, r.nid)
-        for r in salted_probe_join(
+        for r in L.salted_probe_join(
             probes, build, keys=["key"], left_id="qid", right_id="nid",
-            cap=50, salt_buckets=4, n_build=build.count(),
+            n_build=build.count(),
         ).collect()
     }
     want = {

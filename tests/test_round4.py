@@ -75,8 +75,9 @@ def test_recall_report_flags_regression(spark):
 
 def test_top_bottom_edges_df_deterministic(spark):
     """top/bottom-K edge rows are a pure function of the pair relation, with
-    jaccard ties broken on (id_a, id_b)."""
-    from facematch_spark.report import top_bottom_edges_df
+    jaccard ties broken on (id_a, id_b), in both the DataFrame form and the
+    list form."""
+    from facematch_spark.report import top_bottom_edges, top_bottom_edges_df
 
     pairs = spark.createDataFrame(
         [(1, 2, 0.9), (3, 4, 0.9), (5, 6, 0.7), (7, 8, 0.5), (2, 9, 0.5)],
@@ -92,3 +93,16 @@ def test_top_bottom_edges_df_deterministic(spark):
     assert out.sort_values(["which", "pos"]).reset_index(drop=True).equals(
         again.sort_values(["which", "pos"]).reset_index(drop=True)
     )
+
+    # the list form the CLI and HTML report render names the same pairs in
+    # the same order: 40 pairs, 20 tied at 1.0 and 20 at 0.5, in descending
+    # id order over 8 partitions, so a cut at K=3 lands inside a tie group
+    rows = [(i, i + 1 + (i * 7) % 13, 1.0 if i % 2 else 0.5) for i in range(200, 0, -5)]
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long, jaccard double").repartition(8)
+    df = top_bottom_edges_df(pairs, edges=3).toPandas()
+    top, bottom = top_bottom_edges(pairs, edges=3)
+    for which, got in (("top", top), ("bottom", bottom)):
+        want = df[df["which"] == which].sort_values("pos")
+        assert [(r.id_a, r.id_b) for r in got] == list(
+            map(tuple, want[["id_a", "id_b"]].to_numpy())
+        )

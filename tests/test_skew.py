@@ -22,27 +22,29 @@ def skew_df(spark):
     return spark.createDataFrame(corpus_to_pandas(corpus), schema=S.SOURCE_FILES).localCheckpoint()
 
 
-def test_salted_join_equals_plain_join(spark, skew_df):
-    """Forcing the salting path (hot_band_cap=2) must not change the
+def test_salted_join_equals_plain_join(spark, skew_df, monkeypatch):
+    """Forcing the salting path (HOT_GROUP_CAP=2) must not change the
     candidate pair set vs the plain path (cap high enough that nothing is
     salted) — salting is a physical rewrite, not a semantic one."""
-    base = dict(jaccard_threshold=0.5, max_band_group=100_000)
-    cfg_plain = DedupeConfig(hot_band_cap=100_000, **base)
-    cfg_salted = DedupeConfig(hot_band_cap=2, salt_buckets=4, **base)
-    sigs = SIG.sign_documents(skew_df, cfg_plain).localCheckpoint()
+    cfg = DedupeConfig(jaccard_threshold=0.5, max_band_group=100_000)
+    sigs = SIG.sign_documents(skew_df, cfg).localCheckpoint()
 
-    plain = {(r.id_a, r.id_b) for r in L.candidate_pairs(sigs, cfg_plain).collect()}
-    salted = {(r.id_a, r.id_b) for r in L.candidate_pairs(sigs, cfg_salted).collect()}
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 100_000)
+    plain = {(r.id_a, r.id_b) for r in L.candidate_pairs(sigs, cfg).collect()}
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 2)
+    monkeypatch.setattr(L, "SALT_BUCKETS", 4)
+    salted = {(r.id_a, r.id_b) for r in L.candidate_pairs(sigs, cfg).collect()}
     assert plain == salted
     assert plain, "skew fixture must produce candidates"
 
 
-def test_max_band_group_drop_bounds_pairs(spark, skew_df):
+def test_max_band_group_drop_bounds_pairs(spark, skew_df, monkeypatch):
     """With a tiny max_band_group, hot boilerplate bands are dropped from
     candidate generation; output must shrink (bounded work) but planted
     exact dups must survive through their other, non-boilerplate bands."""
-    cfg_all = DedupeConfig(jaccard_threshold=0.5, hot_band_cap=4, max_band_group=100_000)
-    cfg_cap = DedupeConfig(jaccard_threshold=0.5, hot_band_cap=4, max_band_group=8)
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 4)
+    cfg_all = DedupeConfig(jaccard_threshold=0.5, max_band_group=100_000)
+    cfg_cap = DedupeConfig(jaccard_threshold=0.5, max_band_group=8)
     sigs = SIG.sign_documents(skew_df, cfg_all).localCheckpoint()
 
     full = L.candidate_pairs(sigs, cfg_all)
@@ -63,7 +65,7 @@ def test_max_band_group_drop_bounds_pairs(spark, skew_df):
     assert missed == 0
 
 
-def test_size_derived_partitioning_is_lossless(spark):
+def test_size_derived_partitioning_is_lossless(spark, monkeypatch):
     """r6: n_rows/n_build derive the key-exchange partition count
     (bounding the un-spillable shuffled-hash builds at scale — see
     SCALE_r06.md) without changing a single output pair, and the derived
@@ -71,15 +73,13 @@ def test_size_derived_partitioning_is_lossless(spark):
     import io
     from contextlib import redirect_stdout
 
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 50)
+    monkeypatch.setattr(L, "SALT_BUCKETS", 4)
     rows = spark.range(400).select(
         (F.col("id") % 20).alias("k"), F.col("id").alias("fid")
     )
-    base = L.tiered_self_join(
-        rows, keys=["k"], id_col="fid", cap=50, salt_buckets=4, n_rows=rows.count()
-    )
-    forced = L.tiered_self_join(
-        rows, keys=["k"], id_col="fid", cap=50, salt_buckets=4, n_rows=50_000_000
-    )
+    base = L.tiered_self_join(rows, keys=["k"], id_col="fid", n_rows=rows.count())
+    forced = L.tiered_self_join(rows, keys=["k"], id_col="fid", n_rows=50_000_000)
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, forced.collect()))
 
     expect = max(
@@ -91,16 +91,18 @@ def test_size_derived_partitioning_is_lossless(spark):
         forced.explain()
     assert f", {expect})" in buf.getvalue()  # hashpartitioning(k, <derived>)
 
+    # build groups of 20 above a cap of 10: both plans take the salted tier
+    monkeypatch.setattr(L, "HOT_GROUP_CAP", 10)
     probes = spark.range(300).select((F.col("id") % 15).alias("k"), F.col("id").alias("q"))
     build = spark.range(300).select((F.col("id") % 15).alias("k"), F.col("id").alias("b"))
     p_base = L.salted_probe_join(
-        probes, build, keys=["k"], left_id="q", right_id="b", cap=10, salt_buckets=4,
-        n_build=build.count(),
+        probes, build, keys=["k"], left_id="q", right_id="b", n_build=build.count()
     )
     p_forced = L.salted_probe_join(
-        probes, build, keys=["k"], left_id="q", right_id="b", cap=10,
-        salt_buckets=4, n_build=50_000_000,
+        probes, build, keys=["k"], left_id="q", right_id="b", n_build=50_000_000
     )
+    plain = probes.join(build, "k").select("q", "b")
+    assert sorted(map(tuple, p_base.collect())) == sorted(map(tuple, plain.collect()))
     assert sorted(map(tuple, p_base.collect())) == sorted(map(tuple, p_forced.collect()))
 
 

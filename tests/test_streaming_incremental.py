@@ -53,6 +53,24 @@ def test_incremental_sign_exactly_once(spark, tmp_path_factory):
     assert spark.read.schema(S.SIGNATURES).parquet(out).count() == len(p1) + len(p2)
 
 
+def test_streaming_drivers_remove_staged_input(spark, tmp_path, tmp_path_factory, monkeypatch):
+    """A single-file parquet is staged into a temp directory for the file
+    stream source; the staged copy is gone once the driver returns, and the
+    result (held by the memory sink) is still complete."""
+    import tempfile
+
+    import pandas as pd
+
+    from facematch_spark.streaming.incremental import streaming_exact_dedup
+
+    src = str(tmp_path_factory.mktemp("single_file") / "docs.parquet")
+    pd.DataFrame({"doc_id": range(6), "text": ["a", "b", "a", "c", "b", "d"]}).to_parquet(src)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = streaming_exact_dedup(spark, src)
+    assert os.listdir(tmp_path) == []
+    assert out.count() == 4
+
+
 def test_streaming_exact_dedup_across_batches(spark, tmp_path_factory):
     """Duplicates split ACROSS stream files (hence across micro-batches at
     maxFilesPerTrigger=4) must still emit once — state-store dedup, not
