@@ -123,8 +123,9 @@ def entry(spark: SparkSession) -> DataFrame:
     PPJoin-filtered n-gram Jaccard pairs (``ngram_jaccard_pairs``: prefix +
     length + positional filters, all lossless) → union-find clustering;
     returns verified near-dup pairs with their cluster ids. The
-    MinHash/LSH approximation of the same pipeline is exercised by the
-    ``dedup_minhash_lsh`` query and the scaling bench."""
+    MinHash/LSH form of the same pipeline, with exact verification of the
+    LSH candidates, is the ``dedup_minhash_lsh`` query and the shipped
+    ``run_dedupe`` that bench.py and the scaling job measure."""
     from facematch_spark.operators.cluster import connected_components
     from facematch_spark.operators.dedup import ngram_jaccard_pairs
 

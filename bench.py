@@ -3,16 +3,18 @@
 JSON line: {"metric", "value" (sec), "unit", "queries": {name: sec}, "sf",
 "files_per_sec", "stages", ...}.
 
-The headline metric is the end-to-end dedup dataflow (sign → MinHash/LSH →
-verify → cluster) over the documents corpus — the BASELINE.json target is
-files/sec for exactly this dataflow. Scaling evidence (local[8] vs local[32])
+The headline metric is one run of the shipped pipeline,
+``plans/pipeline.py run_dedupe`` (sign → MinHash/LSH → exact verify →
+cluster), over the documents corpus — the BASELINE.json target is files/sec
+for exactly this dataflow. Scaling evidence (local[8] vs local[32])
 is produced by bench/scaling.py into BENCH/BASELINE.md.
 
 "stages" is measured from outside the operators with perfbench's span
 tracer (perfbench/spans.py): each traced step runs under a Spark job group
 of its own, and its entry holds the wall seconds plus the jobs, tasks,
 shuffle and spill bytes, task CPU seconds and GC seconds of the jobs it
-started, read back from Spark's status store.
+started, read back from Spark's status store. The "dedupe_e2e" entry also
+holds run_dedupe's own stage walls ("sign", "dedupe", "cluster").
 """
 
 from __future__ import annotations
@@ -46,14 +48,10 @@ def _load(name: str, relpath: str):
 
 
 def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as E
     from facematch_spark.config import DedupeConfig
-    from facematch_spark.operators import lsh as L
-    from facematch_spark.operators.cluster import connected_components
-    from facematch_spark.operators.dedup import doc_signatures
-    from facematch_spark.operators.verify import attach_signature_metrics
+    from facematch_spark.operators.dedup import docs_as_source_files
+    from facematch_spark.plans.pipeline import run_dedupe
     from facematch_spark.session import get_spark
 
     # Route around sick vCPUs before the JVM starts — the same
@@ -152,32 +150,19 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
         rec = tracer.get(name)
         return {k: round(rec[k], 3) if k.endswith("_s") else rec[k] for k in SPAN_COUNTERS}
 
-    warm_sigs = doc_signatures(docs.limit(256), cfg).localCheckpoint()
-    attach_signature_metrics(L.candidate_pairs(warm_sigs, cfg), warm_sigs).count()
+    run_dedupe(spark, docs_as_source_files(docs.limit(256)), cfg)
     _drop_leaked_blocks()
 
-    # ---- headline: end-to-end dedup dataflow over documents ----
-    # Three spans at the dataflow's own materialization boundaries (the
-    # pinned signatures, the pinned estimate-filtered pairs, the clusters),
-    # so a regression in any later round is attributable to a step from
-    # the BENCH_rN artifact alone. The headline is the sum of their walls.
-    with tracer.span("dedupe_e2e/sign"):
-        sigs = doc_signatures(docs, cfg).localCheckpoint()  # eager: materializes
-    with tracer.span("dedupe_e2e/pairs"):
-        pairs = (
-            attach_signature_metrics(L.candidate_pairs(sigs, cfg), sigs)
-            .filter(F.col("minhash_est") >= F.lit(cfg.jaccard_threshold))
-            .select("id_a", "id_b")
-            .localCheckpoint()
-        )
-    with tracer.span("dedupe_e2e/cluster"):
-        connected_components(
-            pairs, nodes=docs.select(F.col("doc_id").alias("file_id"))
-        ).count()
-    e2e = {step: counters(f"dedupe_e2e/{step}") for step in ("sign", "pairs", "cluster")}
-    stages: dict[str, dict] = {"dedupe_e2e": e2e}
-    timings["dedupe_e2e"] = round(sum(c["wall_s"] for c in e2e.values()), 3)
-    del sigs, pairs
+    # ---- headline: the shipped dedup pipeline over documents ----
+    # One span around run_dedupe (sign → LSH → exact verify → cluster); its
+    # own stage walls (RunResult.times) keep a regression attributable to a
+    # step from the BENCH_rN artifact alone.
+    with tracer.span("dedupe_e2e"):
+        res = run_dedupe(spark, docs_as_source_files(docs), cfg)
+    times = {k: round(v, 3) for k, v in res.times.items()}
+    stages: dict[str, dict] = {"dedupe_e2e": {**counters("dedupe_e2e"), **times}}
+    timings["dedupe_e2e"] = stages["dedupe_e2e"]["wall_s"]
+    del res
     _drop_leaked_blocks()
 
     # ---- per-query timings over the full contract surface ----

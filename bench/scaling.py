@@ -2,8 +2,8 @@
 executors; sandbox substitute per driver instruction: same job + same input
 at local[8] vs local[32]).
 
-Measures the end-to-end dedup dataflow (sign → MinHash/LSH →
-verify-estimate → cluster, jobs/scaling_job.py) over a deterministic
+Measures the shipped dedup pipeline (``run_dedupe``: sign → MinHash/LSH →
+exact verify → cluster, jobs/scaling_job.py) over a deterministic
 ~348k-file source-code corpus (FIXTURES.md generator, n_base=240000) — round
 1 used 87k files and measured the sandbox's fixed job overhead instead of
 the dataflow (compute was ~1/3 of wall); this corpus puts ~730 CPU·s of
@@ -436,7 +436,7 @@ def main() -> int:
         f"Generated {datetime.now(timezone.utc).isoformat()} on local-mode Spark "
         f"({os.cpu_count()} host cores).",
         "",
-        "## Scaling: end-to-end dedup dataflow (sign → MinHash/LSH → verify-estimate → cluster)",
+        "## Scaling: the shipped run_dedupe (sign → MinHash/LSH → exact verify → cluster)",
         "",
         f"Input: deterministic source-code corpus, {r32['files']} files "
         f"(FIXTURES.md generator, n_base={N_BASE}), identical at both levels; "

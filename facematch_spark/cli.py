@@ -56,8 +56,6 @@ def main(argv: list[str] | None = None) -> int:
         bands=args.bands,
         rows_per_band=args.rows_per_band,
         jaccard_threshold=args.threshold,
-        report_threshold=args.report_threshold,
-        edges=args.edges,
         seed=args.seed,
     )
     spark = get_spark(master=args.master)
@@ -104,7 +102,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.report:
         write_csv_report(res.pairs, f"{args.out}/report_csv_{cfg.table_suffix()}",
                          args.report_threshold, symmetric=args.symmetric)
-        write_html_report(res.pairs, f"{args.out}/report_{cfg.table_suffix()}.html", cfg, summary)
+        write_html_report(res.pairs, f"{args.out}/report_{cfg.table_suffix()}.html", cfg, args.edges, summary)
         top, bottom = top_bottom_edges(res.pairs, args.edges)
         for r in top:
             print(f"TOP {r.id_a} {r.id_b} {r.jaccard:.4f} {r.method}")

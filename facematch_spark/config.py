@@ -25,10 +25,9 @@ class DedupeConfig:
     num_perm: int = 128
     bands: int = 32
     rows_per_band: int = 4
-    # --- thresholds (reference defaults: dedupe/report threshold 0.4,
-    #     __main__.py:162-166; ours default to the FIXTURES.md config) ---
+    # --- thresholds (reference default: dedupe threshold 0.4,
+    #     __main__.py:162-166; ours defaults to the FIXTURES.md config) ---
     jaccard_threshold: float = 0.8
-    report_threshold: float = 0.8
     simhash_hamming_max: int = 3
     # --- containment (suffix path) ---
     containment_threshold: float = 0.95
@@ -38,8 +37,6 @@ class DedupeConfig:
     max_content_bytes: int = 1 << 20
     # --- determinism ---
     seed: int = 42
-    # --- misc ---
-    edges: int = 10              # top/bottom-K edges in reports (utils.py:270-298)
 
     def __post_init__(self) -> None:
         if self.shingle_kind not in ("char", "token"):

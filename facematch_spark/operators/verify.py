@@ -3,7 +3,10 @@ candidate pair against a threshold (reference ``utils.py:243-246``).
 
 There is one exact tier, ``exact_overlap``. The shipped pipeline reaches it
 through ``verify_candidates``; the dedup queries call it directly with their
-own candidates (PPJoin prefixes, MinHash bands, SNM windows). The signals:
+own candidates (PPJoin prefixes, MinHash bands, SNM windows).
+``verify_candidates`` is one linear plan: pin the candidates, score them
+exactly, join the candidate files' signatures onto the scored pairs, apply
+the thresholds. The signals:
 
   * ``jaccard`` / ``containment`` — exact values over the distinct shingle
     sets, from one sorted-array intersection kernel in an Arrow-batched
@@ -14,11 +17,11 @@ own candidates (PPJoin prefixes, MinHash bands, SNM windows). The signals:
     positions, computed JVM-side with ``zip_with`` + ``filter`` + ``size``.
   * ``hamming`` — SimHash bit distance, ``bit_count(simhash_a ^ simhash_b)``.
 
-Both metric paths first cut their per-file relation to the files that
-appear in a candidate pair (``_semi_to_candidates``). Size gates pick
-broadcast or shuffle plans; both sides of every gate give the same rows
-and the same doubles. Borderline containment candidates can be settled
-exactly with the suffix-automaton longest-common-substring check
+The shingle and signature relations are both cut to the files that appear
+in a candidate pair (``_semi_to_candidates``) before they are used. Size
+gates pick broadcast or shuffle plans; both sides of every gate give the
+same rows and the same doubles. Borderline containment candidates can be
+settled exactly with the suffix-automaton longest-common-substring check
 (``lcs_coverage``).
 """
 
@@ -43,7 +46,7 @@ from facematch_spark.config import DedupeConfig
 ATTACH_BROADCAST_IDS_MAX = 2_000_000
 
 # Candidate volume under which the semi-reduced SIGNATURE relation itself is
-# broadcast into both metric joins (not just the id set): ≤ 25k pairs →
+# broadcast into both signature joins (not just the id set): ≤ 25k pairs →
 # ≤ 50k signature rows × ~1.1 KB of minhash array ≈ 55 MB — the same order
 # as the session's 64 MB autoBroadcastJoinThreshold. Past it the relation's
 # array payload outgrows a broadcast and the shuffled-hash joins below are
@@ -60,8 +63,8 @@ _OVERLAP_SCHEMA = "id_a long, id_b long, jaccard double, containment double"
 
 
 def _pin(pairs: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize the candidate relation once — it feeds the id cut and
-    the metric joins — and count it: the count picks the gates."""
+    """Materialize the candidate relation once — it feeds the id cuts and
+    the exact scoring — and count it: the count picks the gates."""
     pairs = pairs.localCheckpoint()
     return pairs, pairs.count()
 
@@ -78,53 +81,6 @@ def _semi_to_candidates(rel: DataFrame, pairs: DataFrame, n_pairs: int) -> DataF
     if n_pairs <= ATTACH_BROADCAST_IDS_MAX:
         ids = F.broadcast(ids)
     return rel.join(ids, "file_id", "left_semi")
-
-
-def attach_signature_metrics(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
-    """(id_a, id_b) + signatures → + minhash_est + hamming. JVM-only.
-
-    Join strategy is size-tiered: BROADCAST of the semi-reduced signature
-    relation when the candidate set is small enough to bound it (see
-    ``ATTACH_BROADCAST_SIGS_MAX_PAIRS``), SHUFFLE_HASH past the gate — the
-    joined rows carry the num_perm-long minhash arrays (~1 KB/row), and a
-    sort-merge join would SORT the candidate side with those arrays
-    attached — a multi-GB spill at 10M+ candidates. Hash join builds on
-    the (much smaller) signature relation and streams the candidates
-    through unsorted. The signatures are cut to candidate files first
-    (``_semi_to_candidates``), which drops the array shuffle by the
-    non-candidate fraction of the corpus."""
-    return _signature_metrics(*_pin(pairs), signatures)
-
-
-def _signature_metrics(pairs: DataFrame, n_pairs: int, signatures: DataFrame) -> DataFrame:
-    sig = _semi_to_candidates(signatures.select("file_id", "minhash", "simhash"), pairs, n_pairs)
-    if n_pairs <= ATTACH_BROADCAST_SIGS_MAX_PAIRS:
-        # The semi-reduced signature relation has ≤ 2·n_pairs rows; under
-        # this (much lower) gate it fits a broadcast outright, so BOTH
-        # metric joins run map-side and the candidate relation never
-        # crosses an exchange at all (guide §3.1; measured ~25% off the
-        # headline dedupe_e2e wall at sf0.1).
-        a = F.broadcast(sig.alias("sa"))
-        b = F.broadcast(sig.alias("sb"))
-    else:
-        a = sig.alias("sa").hint("shuffle_hash")
-        b = sig.alias("sb").hint("shuffle_hash")
-    joined = (
-        pairs.join(a, pairs.id_a == F.col("sa.file_id"))
-        .join(b, pairs.id_b == F.col("sb.file_id"))
-    )
-    eq = F.size(
-        F.filter(
-            F.zip_with(F.col("sa.minhash"), F.col("sb.minhash"), lambda x, y: x == y),
-            lambda v: v,
-        )
-    )
-    return joined.select(
-        "id_a",
-        "id_b",
-        (eq / F.size(F.col("sa.minhash"))).alias("minhash_est"),
-        F.bit_count(F.col("sa.simhash").bitwiseXOR(F.col("sb.simhash"))).cast("int").alias("hamming"),
-    )
 
 
 def _intersect_size(x: np.ndarray, y: np.ndarray) -> int:
@@ -249,30 +205,51 @@ def verify_candidates(
 
     Threshold semantics mirror the reference's hard dedupe threshold
     (``utils.py:245-246``); the ``method`` column records which test(s)
-    admitted the pair. The candidates are pinned and counted once for both
-    metric paths; ``exact_overlap`` keeps every pair (threshold 0) because
-    containment or SimHash alone may admit it.
+    admitted the pair. The candidates are pinned and counted once,
+    ``_overlap`` scores each exactly (threshold 0: containment or SimHash
+    alone may admit it), and the candidate files' signatures are joined
+    onto the scored pairs. Past ``ATTACH_BROADCAST_SIGS_MAX_PAIRS`` those
+    joins are SHUFFLE_HASH: the rows carry ~1 KB minhash arrays, which a
+    sort-merge join would sort (a multi-GB spill at 10M+ candidates).
     """
     pairs, n_pairs = _pin(pairs)
-    both = _signature_metrics(pairs, n_pairs, signatures).join(
-        _overlap(pairs, n_pairs, shingles), ["id_a", "id_b"]
+    sig = _semi_to_candidates(signatures.select("file_id", "minhash", "simhash"), pairs, n_pairs)
+    if n_pairs <= ATTACH_BROADCAST_SIGS_MAX_PAIRS:
+        # the semi-reduced signature relation has ≤ 2·n_pairs rows; under
+        # this gate it fits a broadcast outright, so both joins run
+        # map-side and the scored pairs cross no further exchange
+        a, b = F.broadcast(sig.alias("sa")), F.broadcast(sig.alias("sb"))
+    else:
+        a, b = sig.alias("sa").hint("shuffle_hash"), sig.alias("sb").hint("shuffle_hash")
+    exact = _overlap(pairs, n_pairs, shingles)
+    eq = F.size(
+        F.filter(
+            F.zip_with(F.col("sa.minhash"), F.col("sb.minhash"), lambda x, y: x == y),
+            lambda v: v,
+        )
+    )
+    scored = (
+        exact.join(a, exact.id_a == F.col("sa.file_id"))
+        .join(b, exact.id_b == F.col("sb.file_id"))
+        .select(
+            "id_a",
+            "id_b",
+            "jaccard",
+            (eq / F.size(F.col("sa.minhash"))).alias("minhash_est"),
+            F.bit_count(F.col("sa.simhash").bitwiseXOR(F.col("sb.simhash"))).cast("int").alias("hamming"),
+            "containment",
+        )
     )
     jac_ok = F.col("jaccard") >= F.lit(cfg.jaccard_threshold)
     ham_ok = F.col("hamming") <= F.lit(cfg.simhash_hamming_max)
     con_ok = F.col("containment") >= F.lit(cfg.containment_threshold)
-    return (
-        both.withColumn(
-            "method",
-            F.concat_ws(
-                "+",
-                F.when(jac_ok, F.lit("jaccard")),
-                F.when(ham_ok, F.lit("simhash")),
-                F.when(con_ok, F.lit("containment")),
-            ),
-        )
-        .filter(jac_ok | ham_ok | con_ok)
-        .select("id_a", "id_b", "jaccard", "minhash_est", "hamming", "containment", "method")
+    method = F.concat_ws(
+        "+",
+        F.when(jac_ok, F.lit("jaccard")),
+        F.when(ham_ok, F.lit("simhash")),
+        F.when(con_ok, F.lit("containment")),
     )
+    return scored.filter(jac_ok | ham_ok | con_ok).withColumn("method", method)
 
 
 def apply_silenced(pairs: DataFrame, silenced: DataFrame | None) -> DataFrame:

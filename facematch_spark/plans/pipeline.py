@@ -147,9 +147,11 @@ def run_dedupe(
     return RunResult(signatures=sigs, pairs=pairs, clusters=clusters, times=dict(timer.times), counts=counts)
 
 
-def report_pairs(pairs: DataFrame, signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
+def report_pairs(pairs: DataFrame, signatures: DataFrame, threshold: float) -> DataFrame:
     """Report-time re-query (§3.3 analog): re-threshold + attach paths.
-    Reads only checkpointed pairs; never recomputes similarity."""
+    Reads only checkpointed pairs; never recomputes similarity. The report
+    threshold is an argument, not a ``DedupeConfig`` field, so changing it
+    leaves the checkpoint key (``config_hash``) alone."""
     names = signatures.select(
         "file_id",
         F.concat_ws("/", "repo", "path").alias("full_path"),
@@ -158,7 +160,7 @@ def report_pairs(pairs: DataFrame, signatures: DataFrame, cfg: DedupeConfig) -> 
     a = names.alias("na")
     b = names.alias("nb")
     return (
-        pairs.filter(F.col("jaccard") >= F.lit(cfg.report_threshold))
+        pairs.filter(F.col("jaccard") >= F.lit(threshold))
         .join(a, pairs.id_a == F.col("na.file_id"))
         .join(b, pairs.id_b == F.col("nb.file_id"))
         .select(

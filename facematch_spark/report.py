@@ -86,6 +86,7 @@ def write_html_report(
     pairs: DataFrame,
     out_path: str,
     cfg: DedupeConfig,
+    edges: int,
     summary: dict | None = None,
 ) -> None:
     """Bounded HTML report (report.html analog, utils.py:254-335): metrics
@@ -93,7 +94,7 @@ def write_html_report(
     driver-side; the full relation stays in the CSV/Parquet sink. Rendered
     with stdlib formatting (no Jinja2 dependency); no image previews — the
     payload is code, not faces."""
-    top, bottom = top_bottom_edges(pairs, cfg.edges)
+    top, bottom = top_bottom_edges(pairs, edges)
 
     def rows_html(rows) -> str:
         out = []
@@ -115,9 +116,9 @@ def write_html_report(
 td,th{{border:1px solid #999;padding:2px 8px}}</style></head><body>
 <h1>Dedupe report — config {cfg.table_suffix()}</h1>
 <table>{meta}</table>
-<h2>Top {cfg.edges} edges (strongest)</h2>
+<h2>Top {edges} edges (strongest)</h2>
 <table>{head}{rows_html(top)}</table>
-<h2>Bottom {cfg.edges} edges (weakest)</h2>
+<h2>Bottom {edges} edges (weakest)</h2>
 <table>{head}{rows_html(bottom)}</table>
 </body></html>"""
     with open(out_path, "w") as f:

@@ -1,6 +1,8 @@
-"""One end-to-end dedup run (sign → MinHash/LSH → verify-estimate →
-cluster) for the scaling-efficiency measurement. Prints one JSON line:
-{"files": N, "wall_s": T, "files_per_sec": F, "pairs": P, "cpus": C}.
+"""One run of the shipped pipeline, ``plans/pipeline.py run_dedupe`` (sign →
+MinHash/LSH → exact verify → cluster), for the scaling-efficiency
+measurement. Prints one JSON line: {"files": N, "wall_s": T,
+"files_per_sec": F, "pairs": P, "clusters": K, "cpus": C, "stages":
+{"sign_s", "pairs_s", "cluster_s"}}.
 
 Usage: python jobs/scaling_job.py INPUT_PARQUET CPUS
 """
@@ -16,14 +18,9 @@ import time
 # relative and rsplit would resolve the repo root to "jobs"
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 from facematch_spark import schema as S
 from facematch_spark.config import DedupeConfig
-from facematch_spark.operators.cluster import connected_components
-from facematch_spark.operators.lsh import candidate_pairs
-from facematch_spark.operators.signatures import sign_documents
-from facematch_spark.operators.verify import attach_signature_metrics
+from facematch_spark.plans.pipeline import run_dedupe
 from facematch_spark.session import get_spark
 
 
@@ -112,17 +109,7 @@ def main() -> int:
     # arena and join hash map fresh, and to JIT the exchange/join code paths,
     # exactly inside the fault-exposed pairs stage (round-3's 28 s vs 73 s
     # pairs-stage spread was dominated by that fresh-allocation window).
-    n_files = source.count()
-    warm_slice = source.limit(int(cpus) * 64)
-    warm_sigs = sign_documents(warm_slice, cfg).localCheckpoint()
-    warm_cands = candidate_pairs(warm_sigs, cfg)
-    warm_pairs = (
-        attach_signature_metrics(warm_cands, warm_sigs)
-        .filter(F.col("minhash_est") >= F.lit(cfg.jaccard_threshold))
-        .select("id_a", "id_b")
-        .localCheckpoint()
-    )
-    connected_components(warm_pairs, nodes=warm_sigs.select("file_id")).count()
+    run_dedupe(spark, source.limit(int(cpus) * 64), cfg)
     # drop the warmup's localCheckpoint blocks so the timed run starts with
     # an empty block manager (leaked blocks degrade later queries — the
     # round-3 bench.py lesson); the warmed arenas/JIT state survive.
@@ -131,32 +118,20 @@ def main() -> int:
         m.get(rid).unpersist()
 
     t0 = time.perf_counter()
-    sigs = sign_documents(source, cfg).localCheckpoint()
-    t_sign = time.perf_counter()
-    cands = candidate_pairs(sigs, cfg)
-    pairs = (
-        attach_signature_metrics(cands, sigs)
-        .filter(F.col("minhash_est") >= F.lit(cfg.jaccard_threshold))
-        .select("id_a", "id_b")
-        .localCheckpoint()
-    )
-    t_pairs = time.perf_counter()
-    clusters = connected_components(pairs, nodes=sigs.select("file_id"))
-    n_clusters = clusters.select("cluster_id").distinct().count()
+    res = run_dedupe(spark, source, cfg)
     wall = time.perf_counter() - t0
-    t_cluster = time.perf_counter() - t_pairs
 
     print(json.dumps({
-        "files": n_files,
+        "files": res.counts["files"],
         "wall_s": round(wall, 2),
-        "files_per_sec": round(n_files / wall, 2),
-        "pairs": pairs.count(),
-        "clusters": n_clusters,
+        "files_per_sec": round(res.counts["files"] / wall, 2),
+        "pairs": res.counts["pairs"],
+        "clusters": res.counts["clusters"],
         "cpus": cpus,
         "stages": {
-            "sign_s": round(t_sign - t0, 2),
-            "pairs_s": round(t_pairs - t_sign, 2),
-            "cluster_s": round(t_cluster, 2),
+            "sign_s": round(res.times["sign"], 2),
+            "pairs_s": round(res.times["dedupe"], 2),
+            "cluster_s": round(res.times["cluster"], 2),
         },
     }))
     spark.stop()

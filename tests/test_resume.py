@@ -1,11 +1,13 @@
 """Checkpoint/resume + CLI tests (SURVEY.md §5.3): rerun skips completed
 work, --reset truncates, config-keyed tables coexist, outputs are stable
 across reruns. Consolidated around two pipeline runs + one CLI subprocess to
-keep suite wall-time bounded."""
+keep suite wall-time bounded; a smoke run of the scaling job, the other
+subprocess entry point, closes the file."""
 
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -19,6 +21,7 @@ from facematch_spark.plans.pipeline import run_dedupe
 from facematch_spark.sources.checkpoint import StageStore
 
 CFG = DedupeConfig(jaccard_threshold=0.5)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -133,13 +136,20 @@ def test_cli_end_to_end(tmp_path_factory):
     inp = str(root / "input.parquet")
     pdf.to_parquet(inp)
     out = str(root / "out")
-    res = subprocess.run(
-        [sys.executable, "-m", "facematch_spark.cli", inp, "--out", out,
-         "--threshold", "0.5", "--report", "--symmetric", "--master", "local[2]"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
-    )
-    assert res.returncode == 0, res.stderr[-2000:]
-    summary = json.loads([l for l in res.stdout.splitlines() if l.startswith("{")][0])
+
+    def cli(*flags: str) -> dict:
+        res = subprocess.run(
+            [sys.executable, "-m", "facematch_spark.cli", inp, "--out", out,
+             "--threshold", "0.5", "--master", "local[2]", *flags],
+            capture_output=True, text=True, timeout=600, cwd=REPO,
+        )
+        assert res.returncode == 0, res.stderr[-2000:]
+        return json.loads([l for l in res.stdout.splitlines() if l.startswith("{")][0])
+
+    def stage_dirs() -> set[str]:
+        return {d for d in os.listdir(out) if d.startswith(("signatures_", "pairs_", "clusters_"))}
+
+    summary = cli("--report", "--symmetric")
     assert summary["files"] == len(pdf)
     assert summary["findings"] >= 1
 
@@ -155,3 +165,36 @@ def test_cli_end_to_end(tmp_path_factory):
             for row in csv.DictReader(fh):
                 seen.add((row["id_a"], row["id_b"]))
     assert seen and all((b, a) in seen for a, b in seen)
+
+    # report settings are not part of the checkpoint key: a rerun that only
+    # changes them resumes from the same stage tables
+    dirs = stage_dirs()
+    rerun = cli("--report", "--report-threshold", "0.9", "--edges", "3")
+    assert stage_dirs() == dirs
+    assert rerun["config_hash"] == summary["config_hash"]
+    assert rerun["findings"] == summary["findings"]
+
+
+def test_scaling_job_runs_the_shipped_pipeline(spark, tmp_path):
+    """``jobs/scaling_job.py`` reports ``run_dedupe``'s counts under the keys
+    ``bench/scaling.py`` reads."""
+    inp = str(tmp_path / "corpus.parquet")
+    corpus_to_pandas(generate_corpus(n_base=12, seed=3)).to_parquet(inp)
+    env = dict(
+        os.environ,
+        SPARK_DRIVER_MEMORY="1g",  # the job pre-touches its whole -Xms heap
+        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+        SCALING_PARTITIONS="8",
+    )
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "scaling_job.py"), inp, "2"],
+        capture_output=True, text=True, timeout=600, cwd=REPO, env=env,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    out = json.loads([l for l in res.stdout.splitlines() if l.startswith("{")][-1])
+    assert set(out) == {"files", "wall_s", "files_per_sec", "pairs", "clusters", "cpus", "stages"}
+    assert set(out["stages"]) == {"sign_s", "pairs_s", "cluster_s"}
+    # the job runs at CFG's threshold
+    ref = run_dedupe(spark, spark.read.schema(S.SOURCE_FILES).parquet(inp), CFG)
+    assert out["pairs"] == ref.counts["pairs"] >= 1
+    assert (out["files"], out["clusters"]) == (ref.counts["files"], ref.counts["clusters"])

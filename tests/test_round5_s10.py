@@ -137,7 +137,7 @@ def test_snapshot_diff_rejects_keyonly(spark):
 # ---- funnel ordering (entry-level property the oracle shares, pinned
 # against an independent hand computation) ----
 
-def test_funnel_requires_strict_order(spark):
+def test_funnel_requires_strict_order(spark, tmp_path):
     import __spark_entry__ as E
     import pandas as pd
 
@@ -155,16 +155,14 @@ def test_funnel_requires_strict_order(spark):
         (3, "click", "2024-01-01 11:00:00"),
         (3, "purchase", "2024-01-01 11:00:00"),
     ]
-    import tempfile, os
-    d = tempfile.mkdtemp(prefix="fm_funnel_")
     pd.DataFrame(
         {
             "user_id": [r[0] for r in rows],
             "event_type": [r[1] for r in rows],
             "ts": pd.to_datetime([r[2] for r in rows]).astype("datetime64[us]"),
         }
-    ).to_parquet(os.path.join(d, "events.parquet"))
-    out = {r.stage: r.n_users for r in E.queries()["q_funnel"](spark, d).collect()}
+    ).to_parquet(tmp_path / "events.parquet")
+    out = {r.stage: r.n_users for r in E.queries()["q_funnel"](spark, str(tmp_path)).collect()}
     assert out == {"1_view": 3, "2_click": 2, "3_purchase": 1}
 
 

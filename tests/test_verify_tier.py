@@ -1,10 +1,11 @@
 """Both sides of every verify gate give the same rows.
 
-``verify.exact_overlap`` is the one exact tier; ``attach_signature_metrics``
-adds the MinHash / SimHash metrics. Each case forces one size gate to the
-branch the test fixtures never reach on their own (at scale, the shuffle
-plans) and asserts bit-identical rows — pairs AND metric doubles — against
-the default plans, for the PPJoin query and for ``run_dedupe``.
+``verify.exact_overlap`` is the one exact tier; ``verify_candidates`` joins
+the candidate files' signatures onto its output for the MinHash / SimHash
+metrics. Each case forces one size gate to the branch the test fixtures
+never reach on their own (at scale, the shuffle plans) and asserts
+bit-identical rows — pairs AND metric doubles — against the default plans,
+for the PPJoin query and for ``run_dedupe``.
 """
 
 from __future__ import annotations

@@ -6,8 +6,9 @@ pytest-pinned at toy scale; this probe is the "does the past-gate plan
 actually complete and scale" evidence.
 
 Branches exercised:
-  A. e2e dedup on the FULL 1M-doc corpus with the attach broadcast/semi
-     gates forced OFF (shuffled id semi-join and metric joins — the
+  A. the shipped pipeline (``run_dedupe``: sign → LSH → exact verify →
+     cluster) on the FULL 1M-doc corpus with the attach broadcast/semi gates
+     forced OFF (shuffled id semi-joins and signature joins — the
      10^12-file plan);
   B. distributed connected components on a >1M-edge graph (the sf0.1
      co-purchase graph, 1.196M edges — naturally past the 1M driver
@@ -25,8 +26,8 @@ Branches exercised:
 Usage:  python tools/scale_fallback_probe.py [corpus.parquet] [--runs A,B,C,D,E]
         (corpus default /tmp/fm_corpus_1m.parquet — FIXTURES.md generator,
          n_base=700000, seed=42, edge_rows=False)
-Prints one JSON line per run with wall seconds + row counts; window health is
-recorded so sick-host runs are auditable.
+Prints one JSON line per run with wall seconds (run A: total plus
+``run_dedupe``'s own sign / dedupe / cluster walls) + row counts.
 """
 
 from __future__ import annotations
@@ -51,15 +52,11 @@ def main() -> None:
 
     import facematch_spark.operators.verify as V
     from facematch_spark.config import DedupeConfig
-    from facematch_spark.operators import lsh as L
     from facematch_spark.operators.cluster import connected_components
-    from facematch_spark.operators.dedup import (
-        doc_signatures,
-        minhash_lsh_exact_pairs,
-        ngram_jaccard_pairs,
-    )
+    from facematch_spark.operators.dedup import minhash_lsh_exact_pairs, ngram_jaccard_pairs
     from facematch_spark.operators.graph import copurchase_edges
     from facematch_spark.operators.similarity import ann_topk_lsh
+    from facematch_spark.plans.pipeline import run_dedupe
     from facematch_spark.session import get_spark
 
     local_dir = "/dev/shm/fm_spark_local"
@@ -86,38 +83,23 @@ def main() -> None:
         F.lit("probe").alias("source"),
         F.length("content").alias("n_chars"),
     )
-    n_docs = docs.count()
     cfg = DedupeConfig(jaccard_threshold=0.5)
 
-    # ---- A: e2e on 1M docs, attach gates forced to the full-shuffle branch
+    # ---- A: run_dedupe on 1M docs, attach gates forced to the full-shuffle branch
     ids_gate, sigs_gate = V.ATTACH_BROADCAST_IDS_MAX, V.ATTACH_BROADCAST_SIGS_MAX_PAIRS
     V.ATTACH_BROADCAST_IDS_MAX = 0
     V.ATTACH_BROADCAST_SIGS_MAX_PAIRS = 0
     try:
         if "A" not in runs:
             raise StopIteration
-        st: dict[str, float] = {}
         t0 = time.perf_counter()
-        sigs = doc_signatures(docs, cfg).localCheckpoint()
-        st["sign_s"] = round(time.perf_counter() - t0, 1)
-        t1 = time.perf_counter()
-        cands = L.candidate_pairs(sigs, cfg)
-        pairs = (
-            V.attach_signature_metrics(cands, sigs)
-            .filter(F.col("minhash_est") >= F.lit(cfg.jaccard_threshold))
-            .select("id_a", "id_b")
-            .localCheckpoint()
-        )
-        n_pairs = pairs.count()
-        st["pairs_attach_fullshuffle_s"] = round(time.perf_counter() - t1, 1)
-        t2 = time.perf_counter()
-        clusters = connected_components(
-            pairs, nodes=docs.select(F.col("doc_id").alias("file_id"))
-        )
-        n_clusters = clusters.select("cluster_id").distinct().count()
-        st["cluster_s"] = round(time.perf_counter() - t2, 1)
-        emit("A_e2e_1M_attach_fullshuffle", st, n_docs=n_docs,
-             n_pairs=n_pairs, n_clusters=n_clusters)
+        res = run_dedupe(spark, raw, cfg)
+        st = {
+            "total_s": round(time.perf_counter() - t0, 1),
+            **{f"{k}_s": round(v, 1) for k, v in res.times.items()},
+        }
+        emit("A_e2e_1M_attach_fullshuffle", st, n_docs=res.counts["files"],
+             n_pairs=res.counts["pairs"], n_clusters=res.counts["clusters"])
     except StopIteration:
         pass
     finally:
