@@ -16,7 +16,7 @@ import json
 import sys
 
 from facematch_spark.config import DedupeConfig
-from facematch_spark.plans.pipeline import run_dedupe
+from facematch_spark.plans.pipeline import report_pairs, run_dedupe
 from facematch_spark.report import run_summary, top_bottom_edges, write_csv_report, write_html_report
 from facematch_spark.session import get_spark
 from facematch_spark.sources.checkpoint import StageStore
@@ -100,10 +100,10 @@ def main(argv: list[str] | None = None) -> int:
     summary = run_summary(res.counts, res.times, cfg)
     print(json.dumps(summary))
     if args.report:
-        write_csv_report(res.pairs, f"{args.out}/report_csv_{cfg.table_suffix()}",
-                         args.report_threshold, symmetric=args.symmetric)
-        write_html_report(res.pairs, f"{args.out}/report_{cfg.table_suffix()}.html", cfg, args.edges, summary)
-        top, bottom = top_bottom_edges(res.pairs, args.edges)
+        report = report_pairs(res.pairs, res.signatures, args.report_threshold)
+        write_csv_report(report, f"{args.out}/report_csv_{cfg.table_suffix()}", symmetric=args.symmetric)
+        top, bottom = top_bottom_edges(report, args.edges)
+        write_html_report(top, bottom, f"{args.out}/report_{cfg.table_suffix()}.html", cfg, summary)
         for r in top:
             print(f"TOP {r.id_a} {r.id_b} {r.jaccard:.4f} {r.method}")
         for r in bottom:

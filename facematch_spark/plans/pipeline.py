@@ -2,7 +2,7 @@
 four-stage dataflow (``__main__.py:72-152`` local / ``tasks.py:197-236``
 Celery):
 
-  job 1  scan → left-anti(resume) → sign → write signatures
+  job 1  scan → left-anti(resume) → sign → append signatures
   job 2  signatures → band explode → hot-band prune → self-join →
          verify (exact Jaccard / Hamming / containment) → write pairs
   job 3  pairs → connected components (driver union-find / star contraction)
@@ -18,6 +18,7 @@ stage restarts idempotently.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,23 +42,27 @@ class RunResult:
     counts: dict[str, int] = field(default_factory=dict)
 
 
+def _chaos_exit(stage: str) -> None:
+    """Fault-injection hook (tools/chaos_resume.py): simulate a driver crash
+    right after ``stage``'s checkpoint commits — no Spark shutdown, no cleanup."""
+    if os.environ.get("FM_CHAOS_EXIT_AFTER") == stage:
+        os._exit(137)
+
+
 def run_dedupe(
     spark: SparkSession,
     source: DataFrame,
     cfg: DedupeConfig,
     store: StageStore | None = None,
     silenced: DataFrame | None = None,
-    reset: bool = False,
 ) -> RunResult:
     """Run the full pipeline. With a ``store``, each stage is checkpointed and
-    a rerun resumes: already-signed files are skipped (left-anti), finished
-    stages are read back instead of recomputed."""
+    a rerun resumes: already-signed files are skipped (left-anti), and a stage
+    whose table exists is read back instead of recomputed."""
     timer = StageTimer()
     counts: dict[str, int] = {}
 
-    if store is not None and reset:
-        store.reset()
-    elif store is not None and store.exists("signatures"):
+    if store is not None and store.exists("signatures"):
         # non-append lineage guard: an update-in-place or delete between the
         # checkpointed run and this head invalidates the whole checkpoint
         # chain (stale signatures/pairs) — force a clean recompute instead of
@@ -70,27 +75,25 @@ def run_dedupe(
 
     # ---- stage 1: signatures (encode analog) ----
     timer.start("sign")
-    has_new = False  # did stage 1 sign anything not in the checkpoint?
     if store is not None:
         pending = store.pending_inputs(source, spark)
-        has_ckpt = store.exists("signatures")
-        if has_ckpt and pending.isEmpty():
-            # nothing new — reuse the checkpoint untouched (idempotent rerun)
-            sigs = store.read(spark, "signatures", S.SIGNATURES)
-        else:
-            has_new = True
-            new_sigs = SIG.sign_documents(pending, cfg)
-            merged = store.merge_signatures(new_sigs, spark)
-            # the merge plan reads the table we are about to overwrite —
-            # materialize it first (eager localCheckpoint) so the overwrite
-            # cannot delete files out from under its own scan
-            merged = merged.localCheckpoint()
-            sigs_pid = with_partition_lineage(merged, "sign", cfg.config_hash)
+        has_sigs = store.exists("signatures")
+        if not (has_sigs and pending.isEmpty()):
+            # pairs and clusters were computed without the pending files (and
+            # a signatures directory with no _SUCCESS is an uncommitted write):
+            # delete them before the append commits, clusters before pairs
+            for stage in ("clusters", "pairs") if has_sigs else ("clusters", "pairs", "signatures"):
+                shutil.rmtree(store.path(stage), ignore_errors=True)
+            # pinned once: re-signing for the lineage would rerun the
+            # anti-join after the append and see no pending rows
+            new_sigs = SIG.sign_documents(pending, cfg).localCheckpoint()
+            sigs_pid = with_partition_lineage(new_sigs, "sign", cfg.config_hash)
             data, lineage = split_lineage(sigs_pid, "sign", cfg.config_hash)
-            store.write("signatures", data)
+            data.write.mode("append").parquet(store.path("signatures"))
             lineage.write.mode("append").parquet(store.path("lineage_sign"))
+            _chaos_exit("signatures")
             spark.catalog.refreshByPath(store.path("signatures"))
-            sigs = store.read(spark, "signatures", S.SIGNATURES)
+        sigs = store.read(spark, "signatures", S.SIGNATURES)
     else:
         sigs = SIG.sign_documents(source, cfg)
         sigs = sigs.localCheckpoint()  # materialize once; reused by 3 stages
@@ -98,13 +101,11 @@ def run_dedupe(
     timer.stop()
 
     # ---- stage 2: LSH candidates + verification (dedupe analog) ----
-    # the pairs checkpoint is only valid if stage 1 signed NOTHING new:
-    # newly added files must enter candidate generation + verification, so
-    # any non-empty pending set invalidates the cached pair relation (the
-    # reference likewise re-runs dedupe over ALL encodings after an
-    # incremental encode, __main__.py:118-127)
+    # a pairs table exists only if no file was signed since it was written,
+    # so new files always enter candidate generation + verification (the
+    # reference likewise re-dedupes ALL encodings, __main__.py:118-127)
     timer.start("dedupe")
-    if store is not None and store.exists("pairs") and not reset and not has_new:
+    if store is not None and store.exists("pairs"):
         pairs = store.read(spark, "pairs", S.PAIRS)
     else:
         cands = L.candidate_pairs(sigs, cfg)
@@ -113,11 +114,7 @@ def run_dedupe(
         pairs = V.apply_silenced(pairs, silenced)
         if store is not None:
             store.write("pairs", pairs)
-            if os.environ.get("FM_CHAOS_EXIT_AFTER") == "pairs":
-                # fault-injection hook (tools/chaos_resume.py): simulate a
-                # driver crash immediately after the pairs checkpoint commits
-                # — no Spark shutdown, no cleanup, exactly like a lost node
-                os._exit(137)
+            _chaos_exit("pairs")
             pairs = store.read(spark, "pairs", S.PAIRS)
         else:
             pairs = pairs.localCheckpoint()
@@ -125,13 +122,17 @@ def run_dedupe(
     timer.stop()
 
     # ---- stage 3: clustering ----
+    # a clusters table exists only if computed from the current pairs table
     timer.start("cluster")
-    clusters = C.connected_components(pairs, nodes=sigs.select("file_id"))
-    if store is not None:
-        store.write("clusters", clusters)
+    if store is not None and store.exists("clusters"):
         clusters = store.read(spark, "clusters", S.CLUSTERS)
     else:
-        clusters = clusters.localCheckpoint()
+        clusters = C.connected_components(pairs, nodes=sigs.select("file_id"))
+        if store is not None:
+            store.write("clusters", clusters)
+            clusters = store.read(spark, "clusters", S.CLUSTERS)
+        else:
+            clusters = clusters.localCheckpoint()
     counts["clusters"] = clusters.select("cluster_id").distinct().count()
     timer.stop()
 
@@ -152,11 +153,7 @@ def report_pairs(pairs: DataFrame, signatures: DataFrame, threshold: float) -> D
     Reads only checkpointed pairs; never recomputes similarity. The report
     threshold is an argument, not a ``DedupeConfig`` field, so changing it
     leaves the checkpoint key (``config_hash``) alone."""
-    names = signatures.select(
-        "file_id",
-        F.concat_ws("/", "repo", "path").alias("full_path"),
-        F.element_at(F.split("path", "/"), -1).alias("basename"),
-    )
+    names = signatures.select("file_id", F.concat_ws("/", "repo", "path").alias("full_path"))
     a = names.alias("na")
     b = names.alias("nb")
     return (

@@ -14,28 +14,21 @@ from pyspark.sql import functions as F
 from facematch_spark.config import DedupeConfig
 
 
-def write_csv_report(
-    pairs: DataFrame, out_dir: str, threshold: float, symmetric: bool = False
-) -> None:
-    """Full findings CSV (csv.html analog: idx,file1,file2,similarity —
-    ``csv.html:1-2``), written distributed with a header.
+def write_csv_report(report: DataFrame, out_dir: str, symmetric: bool = False) -> None:
+    """Findings CSV (csv.html analog: idx,file1,file2,similarity —
+    ``csv.html:1-2``) of a ``report_pairs`` relation, written distributed
+    with a header.
 
     ``symmetric=True`` emits each pair in BOTH directions — the reference's
     ``generate_csv_report(symmetric=...)`` option (``utils.py:338-347``; its
     HTML report collapses them back client-side, ``report.html:161-198``).
     The default stays canonical ``id_a < id_b`` rows."""
-    base = pairs.filter(F.col("jaccard") >= F.lit(threshold)).select(
-        "id_a", "id_b", F.round("jaccard", 6).alias("similarity"), "method"
+    base = report.select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("similarity"), "method", "path_a", "path_b"
     )
     if symmetric:
-        base = base.unionByName(
-            base.select(
-                F.col("id_b").alias("id_a"),
-                F.col("id_a").alias("id_b"),
-                "similarity",
-                "method",
-            )
-        )
+        swap = {"id_a": "id_b", "id_b": "id_a", "path_a": "path_b", "path_b": "path_a"}
+        base = base.unionByName(base.select(*[F.col(swap.get(c, c)).alias(c) for c in base.columns]))
     base.write.mode("overwrite").option("header", True).csv(out_dir)
 
 
@@ -83,18 +76,17 @@ def top_bottom_edges(pairs: DataFrame, edges: int) -> tuple[list, list]:
 
 
 def write_html_report(
-    pairs: DataFrame,
+    top: list,
+    bottom: list,
     out_path: str,
     cfg: DedupeConfig,
-    edges: int,
     summary: dict | None = None,
 ) -> None:
     """Bounded HTML report (report.html analog, utils.py:254-335): metrics
-    header + top/bottom-K edge tables. Only the K-bounded rows are collected
-    driver-side; the full relation stays in the CSV/Parquet sink. Rendered
+    header + the ``top_bottom_edges`` tables, already collected, so it starts
+    no Spark job; the full relation stays in the CSV/Parquet sink. Rendered
     with stdlib formatting (no Jinja2 dependency); no image previews — the
     payload is code, not faces."""
-    top, bottom = top_bottom_edges(pairs, edges)
 
     def rows_html(rows) -> str:
         out = []
@@ -116,9 +108,9 @@ def write_html_report(
 td,th{{border:1px solid #999;padding:2px 8px}}</style></head><body>
 <h1>Dedupe report — config {cfg.table_suffix()}</h1>
 <table>{meta}</table>
-<h2>Top {edges} edges (strongest)</h2>
+<h2>Top {len(top)} edges (strongest)</h2>
 <table>{head}{rows_html(top)}</table>
-<h2>Bottom {edges} edges (weakest)</h2>
+<h2>Bottom {len(bottom)} edges (weakest)</h2>
 <table>{head}{rows_html(bottom)}</table>
 </body></html>"""
     with open(out_path, "w") as f:

@@ -72,11 +72,8 @@ class StageStore:
         with open(p) as f:
             return json.load(f)
 
-    def write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(stage))
+    def write(self, stage: str, df: DataFrame) -> None:
+        df.write.mode("overwrite").parquet(self.path(stage))
 
     def read(self, spark: SparkSession, stage: str, schema=None) -> DataFrame:
         r = spark.read
@@ -141,7 +138,9 @@ class StageStore:
 
     def merge_signatures(self, new_sigs: DataFrame, spark: SparkSession) -> DataFrame:
         """Union new signatures with the checkpointed ones (A1 analog —
-        the reference's ChainMap dict merge, tasks.py:143)."""
+        the reference's ChainMap dict merge, tasks.py:143). ``run_dedupe``
+        appends instead; perfbench/run.py's traced pass calls this until
+        ROADMAP item 1 retires that pass."""
         if not self.exists("signatures"):
             return new_sigs
         old = self.read(spark, "signatures", S.SIGNATURES)

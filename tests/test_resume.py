@@ -80,6 +80,9 @@ def test_non_append_guard(spark, small_df, tmp_path_factory):
     assert store.detect_non_append(appended, spark) == {"updated": 0, "deleted": 0}
     run_dedupe(spark, appended, CFG, store=store)
     assert store.pending_inputs(appended, spark).count() == 0
+    # the append signs only the batch: lineage counts each file once
+    lineage = spark.read.parquet(store.path("lineage_sign"))
+    assert lineage.agg(F.sum("rows_out")).collect()[0][0] == appended.count()
 
     # update-in-place: same keys, mutated content on one row
     mutated = appended.withColumn(
@@ -100,6 +103,41 @@ def test_non_append_guard(spark, small_df, tmp_path_factory):
     # delete: dropping head rows leaves stale checkpointed signatures
     shrunk = appended.limit(appended.count() - 2)
     assert store.detect_non_append(shrunk, spark)["deleted"] >= 1
+
+
+def test_crash_after_signing_resumes_to_fresh_result(spark, small_df, tmp_path_factory, monkeypatch):
+    """A run that crashes in stage 2, after the batch's signatures commit,
+    and then resumes gives the pairs and clusters of a from-scratch run: the
+    base run's pairs table is not read back as if it covered the batch."""
+    from facematch_spark.operators import lsh as L
+
+    store = StageStore(str(tmp_path_factory.mktemp("ckpt_crash")), CFG)
+    run_dedupe(spark, small_df, CFG, store=store)
+    batch = small_df.limit(4).select(
+        F.col("repo"), F.concat(F.col("path"), F.lit(".new")).alias("path"),
+        F.col("commit"), F.col("lang"), F.col("content"),
+    )
+    widened = small_df.unionByName(batch)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected stage-2 crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(L, "candidate_pairs", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            run_dedupe(spark, widened, CFG, store=store)
+    resumed = run_dedupe(spark, widened, CFG, store=store)
+    fresh = run_dedupe(spark, widened, CFG)
+
+    def rows(df, cols):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    pair_cols = ["id_a", "id_b", "jaccard", "hamming", "containment", "method"]
+    assert rows(resumed.pairs, pair_cols) == rows(fresh.pairs, pair_cols)
+    assert rows(resumed.clusters, ["file_id", "cluster_id"]) == rows(fresh.clusters, ["file_id", "cluster_id"])
+    # some from-scratch pair crosses the batch, so a stale pairs table differs
+    new_ids = {r.file_id for r in batch.select(F.xxhash64("repo", "path", "commit").alias("file_id")).collect()}
+    assert any((a in new_ids) != (b in new_ids) for a, b, *_ in rows(fresh.pairs, pair_cols))
 
 
 def test_metrics_lineage_written(spark, small_df, store_and_runs):
@@ -137,19 +175,20 @@ def test_cli_end_to_end(tmp_path_factory):
     pdf.to_parquet(inp)
     out = str(root / "out")
 
-    def cli(*flags: str) -> dict:
+    def cli(*flags: str) -> tuple[dict, list[str]]:
         res = subprocess.run(
             [sys.executable, "-m", "facematch_spark.cli", inp, "--out", out,
              "--threshold", "0.5", "--master", "local[2]", *flags],
             capture_output=True, text=True, timeout=600, cwd=REPO,
         )
         assert res.returncode == 0, res.stderr[-2000:]
-        return json.loads([l for l in res.stdout.splitlines() if l.startswith("{")][0])
+        lines = res.stdout.splitlines()
+        return json.loads([l for l in lines if l.startswith("{")][0]), lines
 
     def stage_dirs() -> set[str]:
         return {d for d in os.listdir(out) if d.startswith(("signatures_", "pairs_", "clusters_"))}
 
-    summary = cli("--report", "--symmetric")
+    summary, lines = cli("--report", "--symmetric")
     assert summary["files"] == len(pdf)
     assert summary["findings"] >= 1
 
@@ -163,16 +202,40 @@ def test_cli_end_to_end(tmp_path_factory):
     for part in glob.glob(f"{csv_dir[0]}/*.csv"):
         with open(part) as fh:
             for row in csv.DictReader(fh):
-                seen.add((row["id_a"], row["id_b"]))
-    assert seen and all((b, a) in seen for a, b in seen)
+                seen.add((row["id_a"], row["id_b"], row["path_a"], row["path_b"]))
+    assert seen and all((b, a, pb, pa) in seen for a, b, pa, pb in seen)
 
     # report settings are not part of the checkpoint key: a rerun that only
     # changes them resumes from the same stage tables
     dirs = stage_dirs()
-    rerun = cli("--report", "--report-threshold", "0.9", "--edges", "3")
+    rerun, rerun_lines = cli("--report", "--report-threshold", "0.95", "--edges", "3")
     assert stage_dirs() == dirs
     assert rerun["config_hash"] == summary["config_hash"]
     assert rerun["findings"] == summary["findings"]
+
+    # the report threshold reaches every report output: the first run's
+    # TOP/BOTTOM lines hold a finding below it, the rerun's hold none
+    def edge_jaccards(out_lines: list[str]) -> list[float]:
+        return [float(l.split()[3]) for l in out_lines if l.startswith(("TOP ", "BOTTOM "))]
+
+    assert min(edge_jaccards(lines)) < 0.95
+    assert edge_jaccards(rerun_lines) and min(edge_jaccards(rerun_lines)) >= 0.95
+
+
+@pytest.mark.parametrize("stage", ["signatures", "pairs"])
+def test_chaos_resume(stage, tmp_path):
+    """``tools/chaos_resume.py``: a driver killed right after a stage's
+    checkpoint commits resumes to the clean run's pairs and clusters."""
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", SPARK_LOCAL_DIRS=str(tmp_path / "local"))
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "chaos_resume.py"), str(tmp_path / "chaos"),
+         "--stage", stage, "--n-base", "15", "--cpus", "2"],
+        capture_output=True, text=True, timeout=900, cwd=REPO, env=env,
+    )
+    lines = [l for l in res.stdout.splitlines() if l.startswith("{")]
+    assert lines, res.stderr[-2000:]
+    verdict = json.loads(lines[-1])
+    assert verdict["pass"], verdict
 
 
 def test_scaling_job_runs_the_shipped_pipeline(spark, tmp_path):
