@@ -3976,8 +3976,9 @@ def oracle_sql() -> dict[str, str]:
     # char-9-gram sets, so the brute-force join below is value-equal.
     # PRECONDITION (beyond the recall caveat): equality holds for ASCII,
     # classify-clean corpora — the kernel shingles UTF-8 BYTES while the
-    # oracle's substr is per CHARACTER, and _classify-dropped docs
-    # (non-text / empty / > max_content_bytes) never enter the Spark side.
+    # oracle's substr is per CHARACTER, and docs signatures._doc_shingles
+    # drops (non-text / empty / > max_content_bytes) never enter the Spark
+    # side.
     # Verified for the driver testdata: every documents.parquet doc is pure
     # ASCII and ≤ 577 bytes at all SFs (checked 2026-08-16).
     o["dedup_minhash_lsh"] = f"""

@@ -6,8 +6,10 @@ JSON line: {"metric", "value" (sec), "unit", "queries": {name: sec}, "sf",
 The headline metric is one run of the shipped pipeline,
 ``plans/pipeline.py run_dedupe`` (sign → MinHash/LSH → exact verify →
 cluster), over the documents corpus — the BASELINE.json target is files/sec
-for exactly this dataflow. Scaling evidence (local[8] vs local[32])
-is produced by bench/scaling.py into BENCH/BASELINE.md.
+for exactly this dataflow. Like the CLI, it checkpoints each stage table in
+a ``StageStore`` (a fresh one under ``spark.local.dir``, removed afterwards).
+Scaling evidence (local[8] vs local[32]) is produced by bench/scaling.py
+into BENCH/BASELINE.md.
 
 "stages" is measured from outside the operators with perfbench's span
 tracer (perfbench/spans.py): each traced step runs under a Spark job group
@@ -21,7 +23,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -53,6 +57,7 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
     from facematch_spark.operators.dedup import docs_as_source_files
     from facematch_spark.plans.pipeline import run_dedupe
     from facematch_spark.session import get_spark
+    from facematch_spark.sources.checkpoint import StageStore
 
     # Route around sick vCPUs before the JVM starts — the same
     # executor-placement analog the scaling protocol uses (a scheduler
@@ -150,20 +155,27 @@ def run_bench(sf_dir: str, cpus: str, quiet: bool = True) -> dict:
         rec = tracer.get(name)
         return {k: round(rec[k], 3) if k.endswith("_s") else rec[k] for k in SPAN_COUNTERS}
 
-    run_dedupe(spark, docs_as_source_files(docs.limit(256)), cfg)
-    _drop_leaked_blocks()
+    # the stage tables of both runs live in fresh stores under the local
+    # dir, as the CLI's live under --out; removed once the headline is read
+    store_root = tempfile.mkdtemp(prefix="fm_bench_store_", dir=local_dir)
+    try:
+        run_dedupe(spark, docs_as_source_files(docs.limit(256)), cfg, StageStore(f"{store_root}/warm", cfg))
+        _drop_leaked_blocks()
 
-    # ---- headline: the shipped dedup pipeline over documents ----
-    # One span around run_dedupe (sign → LSH → exact verify → cluster); its
-    # own stage walls (RunResult.times) keep a regression attributable to a
-    # step from the BENCH_rN artifact alone.
-    with tracer.span("dedupe_e2e"):
-        res = run_dedupe(spark, docs_as_source_files(docs), cfg)
-    times = {k: round(v, 3) for k, v in res.times.items()}
-    stages: dict[str, dict] = {"dedupe_e2e": {**counters("dedupe_e2e"), **times}}
-    timings["dedupe_e2e"] = stages["dedupe_e2e"]["wall_s"]
-    del res
-    _drop_leaked_blocks()
+        # ---- headline: the shipped dedup pipeline over documents ----
+        # One span around run_dedupe (sign → LSH → exact verify → cluster,
+        # each stage written to and read back from its checkpoint table); its
+        # own stage walls (RunResult.times) keep a regression attributable to
+        # a step from the BENCH_rN artifact alone.
+        with tracer.span("dedupe_e2e"):
+            res = run_dedupe(spark, docs_as_source_files(docs), cfg, StageStore(f"{store_root}/run", cfg))
+        times = {k: round(v, 3) for k, v in res.times.items()}
+        stages: dict[str, dict] = {"dedupe_e2e": {**counters("dedupe_e2e"), **times}}
+        timings["dedupe_e2e"] = stages["dedupe_e2e"]["wall_s"]
+        del res
+        _drop_leaked_blocks()
+    finally:
+        shutil.rmtree(store_root, ignore_errors=True)
 
     # ---- per-query timings over the full contract surface ----
     qs = E.queries()

@@ -45,9 +45,7 @@ def normalize_content(text: str) -> str:
     return _WS_RE.sub(" ", text.lower()).strip()
 
 
-def shingle_hashes_for(text: str, cfg: DedupeConfig) -> np.ndarray:
-    """Distinct shingle hashes for one document under ``cfg``."""
-    norm = normalize_content(text) if cfg.normalize else text
+def _shingles(norm: str, cfg: DedupeConfig) -> np.ndarray:
     data = norm.encode("utf-8", errors="surrogatepass")
     if cfg.shingle_kind == "char":
         return H.char_shingle_hashes(data, cfg.k)
@@ -56,23 +54,31 @@ def shingle_hashes_for(text: str, cfg: DedupeConfig) -> np.ndarray:
     return H.token_shingle_hashes(data.split(), cfg.k)
 
 
-def _classify(text: str | None, cfg: DedupeConfig) -> str:
+def shingle_hashes_for(text: str, cfg: DedupeConfig) -> np.ndarray:
+    """Distinct shingle hashes for one document under ``cfg``."""
+    return _shingles(normalize_content(text) if cfg.normalize else text, cfg)
+
+
+def _doc_shingles(text: str | None, cfg: DedupeConfig) -> tuple[str, np.ndarray | None]:
+    """One document's status and, when it is ``ok``, its distinct shingle
+    hashes; the text is normalized once for both."""
     if text is None or text.strip() == "":
-        return S.STATUS_EMPTY
+        return S.STATUS_EMPTY, None
     if len(text) > cfg.max_content_bytes:
-        return S.STATUS_TOO_LARGE
+        return S.STATUS_TOO_LARGE, None
     if _CTRL_RE.search(text[:4096]) is not None:
-        return S.STATUS_NON_TEXT
-    stripped = normalize_content(text) if cfg.normalize else text
+        return S.STATUS_NON_TEXT, None
+    norm = normalize_content(text) if cfg.normalize else text
     # unit-aware short check: k TOKENS in token mode, k chars in char mode —
     # a doc with ≥k chars but <k tokens would otherwise produce an empty
-    # shingle set whose all-sentinel MinHash LSH-collides with every other
-    if cfg.shingle_kind == "token":
-        if len(stripped.split()) < cfg.k:
-            return S.STATUS_TOO_SHORT
-    elif len(stripped) < cfg.k:
-        return S.STATUS_TOO_SHORT
-    return S.STATUS_OK
+    # shingle set whose all-sentinel MinHash LSH-collides with every other;
+    # an empty set past the check (e.g. k str tokens but fewer byte tokens)
+    # is too short for the same reason
+    n_units = len(norm.split()) if cfg.shingle_kind == "token" else len(norm)
+    sh = _shingles(norm, cfg) if n_units >= cfg.k else None
+    if sh is None or sh.size == 0:
+        return S.STATUS_TOO_SHORT, None
+    return S.STATUS_OK, sh
 
 
 def _ensure_parallel(df: DataFrame) -> DataFrame:
@@ -110,18 +116,10 @@ def sign_documents(df: DataFrame, cfg: DedupeConfig) -> DataFrame:
             texts = pdf["content"].to_numpy()
             for i in range(n):
                 text = texts[i]
-                st = _classify(text, cfg_bc)
-                status[i] = st
+                status[i], sh = _doc_shingles(text, cfg_bc)
                 clen[i] = 0 if text is None else len(text)
                 minh[i] = None
-                if st != S.STATUS_OK:
-                    continue
-                sh = shingle_hashes_for(text, cfg_bc)
-                if sh.size == 0:
-                    # nothing to sign (e.g. k-token doc in token mode after
-                    # normalization) — an all-sentinel signature would
-                    # LSH-collide with every other empty one
-                    status[i] = S.STATUS_TOO_SHORT
+                if sh is None:
                     continue
                 nsh[i] = sh.size
                 sig = H.minhash_signature(sh, gammas)
@@ -171,11 +169,8 @@ def explode_shingles(df: DataFrame, cfg: DedupeConfig) -> DataFrame:
             fids = pdf["file_id"].to_numpy()
             texts = pdf["content"].to_numpy()
             for i in range(len(pdf)):
-                text = texts[i]
-                if _classify(text, cfg_bc) != S.STATUS_OK:
-                    continue
-                sh = shingle_hashes_for(text, cfg_bc)
-                if sh.size:
+                _, sh = _doc_shingles(texts[i], cfg_bc)
+                if sh is not None:
                     ids.append(np.full(sh.size, fids[i], dtype=np.int64))
                     hs.append(H.to_signed(sh))
             if ids:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +31,7 @@ from facematch_spark.operators import cluster as C
 from facematch_spark.operators import lsh as L
 from facematch_spark.operators import signatures as SIG
 from facematch_spark.operators import verify as V
-from facematch_spark.sources.checkpoint import StageStore, StageTimer, split_lineage, with_partition_lineage
+from facematch_spark.sources.checkpoint import StageStore, split_lineage, with_partition_lineage
 
 
 @dataclass
@@ -53,16 +54,25 @@ def run_dedupe(
     spark: SparkSession,
     source: DataFrame,
     cfg: DedupeConfig,
-    store: StageStore | None = None,
+    store: StageStore,
     silenced: DataFrame | None = None,
 ) -> RunResult:
-    """Run the full pipeline. With a ``store``, each stage is checkpointed and
-    a rerun resumes: already-signed files are skipped (left-anti), and a stage
-    whose table exists is read back instead of recomputed."""
-    timer = StageTimer()
+    """Run the full pipeline, each stage checkpointed in ``store``. A rerun
+    resumes: already-signed files are skipped (left-anti), and a stage whose
+    table exists is read back instead of recomputed."""
+    times: dict[str, float] = {}
     counts: dict[str, int] = {}
 
-    if store is not None and store.exists("signatures"):
+    def stage(name: str, schema, compute) -> DataFrame:
+        # a stage table exists only if computed from the current upstream
+        # tables (stage 1 deletes both downstream tables before it appends)
+        if not store.exists(name):
+            store.write(name, compute())
+            _chaos_exit(name)
+        return store.read(spark, name, schema)
+
+    has_sigs = store.exists("signatures")
+    if has_sigs:
         # non-append lineage guard: an update-in-place or delete between the
         # checkpointed run and this head invalidates the whole checkpoint
         # chain (stale signatures/pairs) — force a clean recompute instead of
@@ -72,80 +82,57 @@ def run_dedupe(
         if drift["updated"] or drift["deleted"]:
             counts["non_append_reset"] = drift["updated"] + drift["deleted"]
             store.reset()
+            has_sigs = False
 
     # ---- stage 1: signatures (encode analog) ----
-    timer.start("sign")
-    if store is not None:
-        pending = store.pending_inputs(source, spark)
-        has_sigs = store.exists("signatures")
-        if not (has_sigs and pending.isEmpty()):
-            # pairs and clusters were computed without the pending files (and
-            # a signatures directory with no _SUCCESS is an uncommitted write):
-            # delete them before the append commits, clusters before pairs
-            for stage in ("clusters", "pairs") if has_sigs else ("clusters", "pairs", "signatures"):
-                shutil.rmtree(store.path(stage), ignore_errors=True)
-            # pinned once: re-signing for the lineage would rerun the
-            # anti-join after the append and see no pending rows
-            new_sigs = SIG.sign_documents(pending, cfg).localCheckpoint()
-            sigs_pid = with_partition_lineage(new_sigs, "sign", cfg.config_hash)
-            data, lineage = split_lineage(sigs_pid, "sign", cfg.config_hash)
-            data.write.mode("append").parquet(store.path("signatures"))
-            lineage.write.mode("append").parquet(store.path("lineage_sign"))
-            _chaos_exit("signatures")
-            spark.catalog.refreshByPath(store.path("signatures"))
-        sigs = store.read(spark, "signatures", S.SIGNATURES)
-    else:
-        sigs = SIG.sign_documents(source, cfg)
-        sigs = sigs.localCheckpoint()  # materialize once; reused by 3 stages
+    t0 = time.perf_counter()
+    if not (has_sigs and drift["pending"] == 0):
+        # pairs and clusters were computed without the pending files (and
+        # a signatures directory with no _SUCCESS is an uncommitted write):
+        # delete them before the append commits, clusters before pairs
+        for name in ("clusters", "pairs") if has_sigs else ("clusters", "pairs", "signatures"):
+            shutil.rmtree(store.path(name), ignore_errors=True)
+        # pinned once: re-signing for the lineage would rerun the
+        # anti-join after the append and see no pending rows
+        new_sigs = SIG.sign_documents(store.pending_inputs(source, spark), cfg).localCheckpoint()
+        sigs_pid = with_partition_lineage(new_sigs, "sign", cfg.config_hash)
+        data, lineage = split_lineage(sigs_pid, "sign", cfg.config_hash)
+        data.write.mode("append").parquet(store.path("signatures"))
+        lineage.write.mode("append").parquet(store.path("lineage_sign"))
+        _chaos_exit("signatures")
+        spark.catalog.refreshByPath(store.path("signatures"))
+    sigs = store.read(spark, "signatures", S.SIGNATURES)
     counts["files"] = sigs.count()
-    timer.stop()
+    times["sign"] = time.perf_counter() - t0
 
     # ---- stage 2: LSH candidates + verification (dedupe analog) ----
-    # a pairs table exists only if no file was signed since it was written,
-    # so new files always enter candidate generation + verification (the
+    # new files always enter candidate generation + verification (the
     # reference likewise re-dedupes ALL encodings, __main__.py:118-127)
-    timer.start("dedupe")
-    if store is not None and store.exists("pairs"):
-        pairs = store.read(spark, "pairs", S.PAIRS)
-    else:
-        cands = L.candidate_pairs(sigs, cfg)
-        shingles = SIG.explode_shingles(source, cfg)
-        pairs = V.verify_candidates(cands, sigs, shingles, cfg)
-        pairs = V.apply_silenced(pairs, silenced)
-        if store is not None:
-            store.write("pairs", pairs)
-            _chaos_exit("pairs")
-            pairs = store.read(spark, "pairs", S.PAIRS)
-        else:
-            pairs = pairs.localCheckpoint()
+    t0 = time.perf_counter()
+    pairs = stage(
+        "pairs",
+        S.PAIRS,
+        lambda: V.apply_silenced(
+            V.verify_candidates(L.candidate_pairs(sigs, cfg), sigs, SIG.explode_shingles(source, cfg), cfg),
+            silenced,
+        ),
+    )
     counts["pairs"] = pairs.count()
-    timer.stop()
+    times["dedupe"] = time.perf_counter() - t0
 
     # ---- stage 3: clustering ----
-    # a clusters table exists only if computed from the current pairs table
-    timer.start("cluster")
-    if store is not None and store.exists("clusters"):
-        clusters = store.read(spark, "clusters", S.CLUSTERS)
-    else:
-        clusters = C.connected_components(pairs, nodes=sigs.select("file_id"))
-        if store is not None:
-            store.write("clusters", clusters)
-            clusters = store.read(spark, "clusters", S.CLUSTERS)
-        else:
-            clusters = clusters.localCheckpoint()
+    t0 = time.perf_counter()
+    clusters = stage("clusters", S.CLUSTERS, lambda: C.connected_components(pairs, nodes=sigs.select("file_id")))
     counts["clusters"] = clusters.select("cluster_id").distinct().count()
-    timer.stop()
+    times["cluster"] = time.perf_counter() - t0
 
-    if store is not None:
-        store.append_metrics(
-            spark,
-            [
-                {"stage": k, "rows_out": counts.get({"sign": "files", "dedupe": "pairs", "cluster": "clusters"}[k]), "wall_ms": v * 1000.0}
-                for k, v in timer.times.items()
-            ],
-        )
+    rows_key = {"sign": "files", "dedupe": "pairs", "cluster": "clusters"}
+    store.append_metrics(
+        spark,
+        [{"stage": k, "rows_out": counts[rows_key[k]], "wall_ms": v * 1000.0} for k, v in times.items()],
+    )
 
-    return RunResult(signatures=sigs, pairs=pairs, clusters=clusters, times=dict(timer.times), counts=counts)
+    return RunResult(signatures=sigs, pairs=pairs, clusters=clusters, times=times, counts=counts)
 
 
 def report_pairs(pairs: DataFrame, signatures: DataFrame, threshold: float) -> DataFrame:

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,7 +105,9 @@ class StageStore:
         already stores (north rule: content sha256 equality at every stage
         boundary): ``updated`` = head rows whose file_id is checkpointed with
         a DIFFERENT sha256; ``deleted`` = checkpointed file_ids absent from
-        the head. One sha256 projection over the head scan (cheap next to
+        the head; ``pending`` = head rows whose file_id is not checkpointed
+        (the rows ``pending_inputs`` returns; reported only when a checkpoint
+        exists). One sha256 projection over the head scan (cheap next to
         signing, and only on resume-with-checkpoint) + two narrow joins on
         (file_id, sha256) longs/strings — no content moves. Works identically
         on the Iceberg and Parquet paths (needs no snapshot metadata)."""
@@ -131,10 +132,11 @@ class StageStore:
                 F.count(
                     F.when(F.col("head_sha").isNull() & F.col("sha256").isNotNull(), 1)
                 ).alias("deleted"),
+                F.count(F.when(F.col("sha256").isNull(), 1)).alias("pending"),
             )
             .collect()[0]
         )
-        return {"updated": agg["updated"], "deleted": agg["deleted"]}
+        return {"updated": agg["updated"], "deleted": agg["deleted"], "pending": agg["pending"]}
 
     def merge_signatures(self, new_sigs: DataFrame, spark: SparkSession) -> DataFrame:
         """Union new signatures with the checkpointed ones (A1 analog —
@@ -197,25 +199,3 @@ def split_lineage(df_with_pid: DataFrame, stage: str, config_hash: str):
         )
     )
     return data, lineage
-
-
-class StageTimer:
-    """Wall-clock per stage — the analog of the reference's perf dict
-    (``__main__.py:129-152``: encoding/deduplication/total times)."""
-
-    def __init__(self) -> None:
-        self.times: dict[str, float] = {}
-        self._t0: float | None = None
-        self._name: str | None = None
-
-    def start(self, name: str) -> "StageTimer":
-        self._t0 = time.perf_counter()
-        self._name = name
-        return self
-
-    def stop(self) -> float:
-        assert self._t0 is not None and self._name is not None
-        dt = time.perf_counter() - self._t0
-        self.times[self._name] = self.times.get(self._name, 0.0) + dt
-        self._t0 = None
-        return dt

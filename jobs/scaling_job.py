@@ -1,6 +1,7 @@
 """One run of the shipped pipeline, ``plans/pipeline.py run_dedupe`` (sign →
-MinHash/LSH → exact verify → cluster), for the scaling-efficiency
-measurement. Prints one JSON line: {"files": N, "wall_s": T,
+MinHash/LSH → exact verify → cluster, each stage checkpointed in a fresh
+``StageStore`` under ``SPARK_LOCAL_DIRS`` as the CLI does under ``--out``),
+for the scaling-efficiency measurement. Prints one JSON line: {"files": N, "wall_s": T,
 "files_per_sec": F, "pairs": P, "clusters": K, "cpus": C, "stages":
 {"sign_s", "pairs_s", "cluster_s"}}.
 
@@ -11,7 +12,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 # abspath first: invoked as `python jobs/scaling_job.py` the raw __file__ is
@@ -22,6 +25,7 @@ from facematch_spark import schema as S
 from facematch_spark.config import DedupeConfig
 from facematch_spark.plans.pipeline import run_dedupe
 from facematch_spark.session import get_spark
+from facematch_spark.sources.checkpoint import StageStore
 
 
 def main() -> int:
@@ -109,17 +113,23 @@ def main() -> int:
     # arena and join hash map fresh, and to JIT the exchange/join code paths,
     # exactly inside the fault-exposed pairs stage (round-3's 28 s vs 73 s
     # pairs-stage spread was dominated by that fresh-allocation window).
-    run_dedupe(spark, source.limit(int(cpus) * 64), cfg)
-    # drop the warmup's localCheckpoint blocks so the timed run starts with
-    # an empty block manager (leaked blocks degrade later queries — the
-    # round-3 bench.py lesson); the warmed arenas/JIT state survive.
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(m.keySet().toArray()):
-        m.get(rid).unpersist()
+    # Each run checkpoints its stages in a fresh store under the local dir,
+    # as the CLI does under --out; the stores go when the job ends.
+    store_root = tempfile.mkdtemp(prefix="fm_scaling_store_", dir=local_dir)
+    try:
+        run_dedupe(spark, source.limit(int(cpus) * 64), cfg, StageStore(f"{store_root}/warm", cfg))
+        # drop the warmup's localCheckpoint blocks so the timed run starts
+        # with an empty block manager (leaked blocks degrade later queries —
+        # the round-3 bench.py lesson); the warmed arenas/JIT state survive.
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in list(m.keySet().toArray()):
+            m.get(rid).unpersist()
 
-    t0 = time.perf_counter()
-    res = run_dedupe(spark, source, cfg)
-    wall = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        res = run_dedupe(spark, source, cfg, StageStore(f"{store_root}/run", cfg))
+        wall = time.perf_counter() - t0
+    finally:
+        shutil.rmtree(store_root, ignore_errors=True)
 
     print(json.dumps({
         "files": res.counts["files"],

@@ -133,3 +133,52 @@ def test_token_vs_char_config_paths():
     )
     assert ch.size > 0 and tk.size > 0
     assert not np.array_equal(np.sort(ch)[: min(ch.size, tk.size)], np.sort(tk)[: min(ch.size, tk.size)])
+
+
+def _classify_then_shingle(text, cfg):
+    """Reference for ``_doc_shingles``: classify (normalizing once), then
+    shingle (normalizing again), and demote an empty set to too_short."""
+    import re
+
+    from facematch_spark import schema as S
+    from facematch_spark.operators.signatures import normalize_content, shingle_hashes_for
+
+    if text is None or text.strip() == "":
+        return S.STATUS_EMPTY, None
+    if len(text) > cfg.max_content_bytes:
+        return S.STATUS_TOO_LARGE, None
+    if re.search(r"[\x00-\x08\x0E-\x1F]", text[:4096]) is not None:
+        return S.STATUS_NON_TEXT, None
+    stripped = normalize_content(text) if cfg.normalize else text
+    if cfg.shingle_kind == "token":
+        if len(stripped.split()) < cfg.k:
+            return S.STATUS_TOO_SHORT, None
+    elif len(stripped) < cfg.k:
+        return S.STATUS_TOO_SHORT, None
+    sh = shingle_hashes_for(text, cfg)
+    if sh.size == 0:
+        return S.STATUS_TOO_SHORT, None
+    return S.STATUS_OK, sh
+
+
+@pytest.mark.parametrize("kind", ["char", "token"])
+@pytest.mark.parametrize("normalize", [True, False])
+def test_doc_shingles_matches_classify_then_shingle(kind, normalize):
+    from facematch_spark.config import DedupeConfig
+    from facematch_spark.fixtures import generate_corpus
+    from facematch_spark.operators.signatures import _doc_shingles
+
+    cfg = DedupeConfig(shingle_kind=kind, k=9 if kind == "char" else 3, normalize=normalize, max_content_bytes=4096)
+    edge = [
+        None, "", "  \n\t ", "ab", "abc def", "a\u00a0b\u00a0c\u00a0d",  # NBSP splits as str, not as bytes
+        "é" * 5, "bin\x00ary " * 4, "\ud800 lone surrogate text here", "word " * 1000,
+    ]
+    texts = [r["content"] for r in generate_corpus(n_base=400, seed=7, edge_rows=True).rows] + edge
+    statuses = set()
+    for text in texts:
+        want_status, want = _classify_then_shingle(text, cfg)
+        got_status, got = _doc_shingles(text, cfg)
+        assert got_status == want_status, repr(text)[:80]
+        assert (got is None) == (want is None) and (got is None or np.array_equal(got, want))
+        statuses.add(got_status)
+    assert {"ok", "empty", "too_short", "too_large", "non_text"} <= statuses

@@ -16,6 +16,7 @@ from facematch_spark.operators import lsh as L
 from facematch_spark.operators import signatures as SIG
 from facematch_spark.operators import verify as V
 from facematch_spark.plans.pipeline import run_dedupe
+from facematch_spark.sources.checkpoint import StageStore
 
 CFG = DedupeConfig(jaccard_threshold=0.5, max_band_group=5000)
 
@@ -184,9 +185,9 @@ def test_star_contraction_raises_when_rounds_run_out(spark, monkeypatch):
         _components(spark, edges, nodes)
 
 
-def test_end_to_end_planted_recall(spark, tiny_df, tiny_corpus):
+def test_end_to_end_planted_recall(spark, tiny_df, tiny_corpus, tmp_path):
     """Full pipeline: all planted exact-dup pairs must land in one cluster."""
-    res = run_dedupe(spark, tiny_df, CFG)
+    res = run_dedupe(spark, tiny_df, CFG, StageStore(str(tmp_path), CFG))
     labels = {r.file_id: r.cluster_id for r in res.clusters.collect()}
     sigs = res.signatures.select("repo", "path", "commit", "file_id").collect()
     key_to_id = {(r.repo, r.path, r.commit): r.file_id for r in sigs}

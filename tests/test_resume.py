@@ -77,7 +77,7 @@ def test_non_append_guard(spark, small_df, tmp_path_factory):
         F.col("commit"), F.col("lang"), F.col("content"),
     )
     appended = small_df.unionByName(extra)
-    assert store.detect_non_append(appended, spark) == {"updated": 0, "deleted": 0}
+    assert store.detect_non_append(appended, spark) == {"updated": 0, "deleted": 0, "pending": 2}
     run_dedupe(spark, appended, CFG, store=store)
     assert store.pending_inputs(appended, spark).count() == 0
     # the append signs only the batch: lineage counts each file once
@@ -97,7 +97,7 @@ def test_non_append_guard(spark, small_df, tmp_path_factory):
     assert r.counts.get("non_append_reset", 0) >= 1
     # the checkpoint was rebuilt from the mutated head: every current row
     # signed, and the stored sha256 now matches the mutated content
-    assert store.detect_non_append(mutated, spark) == {"updated": 0, "deleted": 0}
+    assert store.detect_non_append(mutated, spark) == {"updated": 0, "deleted": 0, "pending": 0}
     assert r.counts["files"] == mutated.count()
 
     # delete: dropping head rows leaves stale checkpointed signatures
@@ -127,7 +127,7 @@ def test_crash_after_signing_resumes_to_fresh_result(spark, small_df, tmp_path_f
         with pytest.raises(RuntimeError, match="injected"):
             run_dedupe(spark, widened, CFG, store=store)
     resumed = run_dedupe(spark, widened, CFG, store=store)
-    fresh = run_dedupe(spark, widened, CFG)
+    fresh = run_dedupe(spark, widened, CFG, StageStore(str(tmp_path_factory.mktemp("ckpt_fresh")), CFG))
 
     def rows(df, cols):
         return sorted(map(tuple, df.select(*cols).collect()))
@@ -240,13 +240,15 @@ def test_chaos_resume(stage, tmp_path):
 
 def test_scaling_job_runs_the_shipped_pipeline(spark, tmp_path):
     """``jobs/scaling_job.py`` reports ``run_dedupe``'s counts under the keys
-    ``bench/scaling.py`` reads."""
+    ``bench/scaling.py`` reads, and removes the stores its runs checkpoint
+    to."""
     inp = str(tmp_path / "corpus.parquet")
     corpus_to_pandas(generate_corpus(n_base=12, seed=3)).to_parquet(inp)
+    local = tmp_path / "local"
     env = dict(
         os.environ,
         SPARK_DRIVER_MEMORY="1g",  # the job pre-touches its whole -Xms heap
-        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+        SPARK_LOCAL_DIRS=str(local),
         SCALING_PARTITIONS="8",
     )
     res = subprocess.run(
@@ -257,7 +259,9 @@ def test_scaling_job_runs_the_shipped_pipeline(spark, tmp_path):
     out = json.loads([l for l in res.stdout.splitlines() if l.startswith("{")][-1])
     assert set(out) == {"files", "wall_s", "files_per_sec", "pairs", "clusters", "cpus", "stages"}
     assert set(out["stages"]) == {"sign_s", "pairs_s", "cluster_s"}
+    left = [d for _, dirs, _ in os.walk(local) for d in dirs if d.startswith(("signatures_", "pairs_", "clusters_"))]
+    assert not left
     # the job runs at CFG's threshold
-    ref = run_dedupe(spark, spark.read.schema(S.SOURCE_FILES).parquet(inp), CFG)
+    ref = run_dedupe(spark, spark.read.schema(S.SOURCE_FILES).parquet(inp), CFG, StageStore(str(tmp_path / "ref"), CFG))
     assert out["pairs"] == ref.counts["pairs"] >= 1
     assert (out["files"], out["clusters"]) == (ref.counts["files"], ref.counts["clusters"])

@@ -45,15 +45,20 @@ def _ngram(docs_df):
     return _rows(D.ngram_jaccard_pairs(docs_df, 9, 0.5))
 
 
-def _pipeline(spark, tiny_df):
+def _pipeline(spark, tiny_df, tmp_path_factory):
     from facematch_spark.plans.pipeline import run_dedupe
+    from facematch_spark.sources.checkpoint import StageStore
 
-    return _rows(run_dedupe(spark, tiny_df, PIPELINE_CFG).pairs)
+    # a reused store would read back an earlier call's pairs, computed
+    # under the other side of the gate
+    store = StageStore(str(tmp_path_factory.mktemp("store")), PIPELINE_CFG)
+    assert not store.exists("pairs")
+    return _rows(run_dedupe(spark, tiny_df, PIPELINE_CFG, store).pairs)
 
 
 @pytest.fixture(scope="module")
-def default_rows(spark, docs_df, tiny_df):
-    ngram, pipeline = _ngram(docs_df), _pipeline(spark, tiny_df)
+def default_rows(spark, docs_df, tiny_df, tmp_path_factory):
+    ngram, pipeline = _ngram(docs_df), _pipeline(spark, tiny_df, tmp_path_factory)
     # the fixtures plant near-dups; empty outputs would test nothing
     assert ngram
     assert any(r[-1] == "containment" for r in pipeline)
@@ -64,7 +69,9 @@ def default_rows(spark, docs_df, tiny_df):
     "gate",
     ["BROADCAST_SHINGLE_LIMIT", "ATTACH_BROADCAST_IDS_MAX", "ATTACH_BROADCAST_SIGS_MAX_PAIRS"],
 )
-def test_broadcast_and_fallback_tiers_agree(spark, docs_df, tiny_df, default_rows, monkeypatch, gate):
+def test_broadcast_and_fallback_tiers_agree(
+    spark, docs_df, tiny_df, default_rows, monkeypatch, tmp_path_factory, gate
+):
     from facematch_spark.operators import verify as V
 
     monkeypatch.setattr(V, gate, 0)
@@ -80,7 +87,7 @@ def test_broadcast_and_fallback_tiers_agree(spark, docs_df, tiny_df, default_row
     monkeypatch.setattr(sc, "broadcast", counted)
     ngram = _ngram(docs_df)
     ngram_calls = len(calls)
-    assert (ngram, _pipeline(spark, tiny_df)) == default_rows
+    assert (ngram, _pipeline(spark, tiny_df, tmp_path_factory)) == default_rows
     broadcast = gate != "BROADCAST_SHINGLE_LIMIT"
     assert (ngram_calls > 0) == broadcast
     assert (len(calls) > ngram_calls) == broadcast

@@ -34,7 +34,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -58,6 +60,7 @@ def main() -> None:
     from facematch_spark.operators.similarity import ann_topk_lsh
     from facematch_spark.plans.pipeline import run_dedupe
     from facematch_spark.session import get_spark
+    from facematch_spark.sources.checkpoint import StageStore
 
     local_dir = "/dev/shm/fm_spark_local"
     os.makedirs(local_dir, exist_ok=True)
@@ -84,6 +87,8 @@ def main() -> None:
         F.length("content").alias("n_chars"),
     )
     cfg = DedupeConfig(jaccard_threshold=0.5)
+    # run A checkpoints its stages as the CLI does, in a fresh store
+    store_root = tempfile.mkdtemp(prefix="fm_probe_store_", dir=local_dir)
 
     # ---- A: run_dedupe on 1M docs, attach gates forced to the full-shuffle branch
     ids_gate, sigs_gate = V.ATTACH_BROADCAST_IDS_MAX, V.ATTACH_BROADCAST_SIGS_MAX_PAIRS
@@ -93,7 +98,7 @@ def main() -> None:
         if "A" not in runs:
             raise StopIteration
         t0 = time.perf_counter()
-        res = run_dedupe(spark, raw, cfg)
+        res = run_dedupe(spark, raw, cfg, StageStore(store_root, cfg))
         st = {
             "total_s": round(time.perf_counter() - t0, 1),
             **{f"{k}_s": round(v, 1) for k, v in res.times.items()},
@@ -105,6 +110,7 @@ def main() -> None:
     finally:
         V.ATTACH_BROADCAST_IDS_MAX = ids_gate
         V.ATTACH_BROADCAST_SIGS_MAX_PAIRS = sigs_gate
+        shutil.rmtree(store_root, ignore_errors=True)
     drop()
 
     # ---- B: distributed CC on >1M edges (past the driver union-find gate)
