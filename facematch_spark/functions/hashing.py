@@ -29,8 +29,10 @@ import numpy as np
 # DedupeConfig.config_hash so checkpoints written by a different kernel
 # generation key to a different table_suffix and get recomputed instead of
 # silently merged on incremental resume. Bump on ANY change that alters the
-# observable output of shingle/minhash/simhash/band kernels (round 2's
-# xor-mix64 → u32 multiply-add switch is the motivating incident).
+# observable output of the shingle/minhash/simhash kernels (round 2's
+# xor-mix64 → u32 multiply-add switch is the motivating incident). Band
+# hashes are exempt: band keys are never persisted, and the candidates
+# depend only on which band slices are equal, not on the hash values.
 KERNEL_VERSION = 2
 
 _U64 = np.uint64
@@ -163,7 +165,11 @@ def simhash_fingerprint(shingles: np.ndarray) -> int:
 def band_hashes(sig: np.ndarray, bands: int, rows_per_band: int, seed: int) -> np.ndarray:
     """Collapse a MinHash signature into ``bands`` 64-bit band hashes
     (LSH banding, Leskovec/Rajaraman/Ullman MMDS ch.3). Band index is mixed
-    in so identical row-slices in different bands don't collide."""
+    in so identical row-slices in different bands don't collide.
+
+    Its only callers are perfbench's ``hashing.band_us_per_doc``
+    microbenchmark and its unit test; the pipeline hashes bands in the JVM
+    (``operators/lsh.band_explode``)."""
     sig = sig.reshape(bands, rows_per_band)
     with np.errstate(over="ignore"):
         acc = np.full(bands, _U64(seed & 0xFFFFFFFFFFFFFFFF) + _SM_GAMMA, dtype=np.uint64)

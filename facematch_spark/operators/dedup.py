@@ -302,7 +302,9 @@ def minhash_lsh_exact_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
     Verification is the shared ``verify.exact_overlap`` tier, the one
     ``run_dedupe`` uses — |A∩B| / (n_a + n_b − |A∩B|) integer-ratio
     doubles from one sorted-array intersection kernel."""
-    sigs = doc_signatures(docs, cfg)
+    # pinned: candidate_pairs reads its input twice (ok-row count + join),
+    # and unpinned each read would rerun the Python MinHash signing
+    sigs = doc_signatures(docs, cfg).localCheckpoint()
     cands = L.candidate_pairs(sigs, cfg).localCheckpoint()
     sh = doc_shingles(docs, cfg).localCheckpoint()
     return V.exact_overlap(cands, sh, cfg.jaccard_threshold).drop("containment")

@@ -4,8 +4,9 @@ Replaces the reference's core operator — the O(N^2) all-pairs nested loop
 (``dedupe_images``, ``utils.py:228-246``, every worker holding the full
 encodings dict ``__main__.py:112-116`` / ``tasks.py:88``) — with banding LSH:
 
-    minhash signature → ``bands`` band hashes → explode → self equi-join on
-    (band_id, band_hash) with ``id_a < id_b`` → distinct pairs.
+    minhash signature → ``bands`` xxhash64 band keys (one Catalyst
+    projection) → explode → self equi-join on (band_id, band_hash) with
+    ``id_a < id_b`` → distinct pairs.
 
 Two documents with Jaccard j collide in ≥1 band with probability
 ``1 - (1 - j^r)^b`` — at (b=32, r=4), j=0.8 collides w.p. ~0.9999998, which is
@@ -28,15 +29,10 @@ Scale notes (the part the reference cannot do at all):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from facematch_spark.config import DedupeConfig
-from facematch_spark.functions import hashing as H
 
 # Rows per partition for the tiered/probe joins' key exchanges when the
 # caller supplies the build relation's row count: 500k narrow (key, id) rows
@@ -68,38 +64,21 @@ def key_partitions(df: DataFrame, n_rows: int, rows_per_partition: int) -> int:
 def band_explode(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """signatures → (file_id, band_id, band_hash), one row per band.
 
-    Band hashes are computed in the same NumPy kernel family as the
-    signatures (vectorized mapInPandas); only ``status == 'ok'`` rows enter
-    (error-row filter applied ONCE, vs the reference re-checking inside the
-    N^2 loop, ``utils.py:231-242``).
+    One projection of built-in expressions, so the band keys are computed in
+    the JVM and never leave it: band ``b`` hashes its MinHash slice
+    ``minhash[b*r : (b+1)*r]`` together with ``b`` and ``cfg.seed`` with
+    ``xxhash64``. Two files share a band key exactly when their slices in
+    that band are equal, up to 64-bit collisions. Only ``status == 'ok'``
+    rows enter (error-row filter applied ONCE, vs the reference re-checking
+    inside the N^2 loop, ``utils.py:231-242``).
     """
-    bands, rows_per_band, seed = cfg.bands, cfg.rows_per_band, cfg.seed
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        band_ids = np.arange(bands, dtype=np.int32)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame(
-                    {"file_id": pd.Series(dtype="int64"),
-                     "band_id": pd.Series(dtype="int32"),
-                     "band_hash": pd.Series(dtype="int64")}
-                )
-                continue
-            sigs = np.stack([np.asarray(s, dtype=np.int64) for s in pdf["minhash"]]).view(np.uint64)
-            bh = np.empty((n, bands), dtype=np.uint64)
-            for i in range(n):
-                bh[i] = H.band_hashes(sigs[i], bands, rows_per_band, seed)
-            yield pd.DataFrame(
-                {
-                    "file_id": np.repeat(pdf["file_id"].to_numpy(), bands),
-                    "band_id": np.tile(band_ids, n),
-                    "band_hash": bh.reshape(-1).view(np.int64),
-                }
-            )
-
-    ok = signatures.filter(F.col("status") == "ok").select("file_id", "minhash")
-    return ok.mapInPandas(batches, schema="file_id long, band_id int, band_hash long")
+    r = cfg.rows_per_band
+    keys = F.transform(
+        F.sequence(F.lit(0), F.lit(cfg.bands - 1)),
+        lambda b: F.xxhash64(F.slice("minhash", b * r + 1, F.lit(r)), b, F.lit(cfg.seed)),
+    )
+    ok = signatures.filter(F.col("status") == "ok")
+    return ok.select("file_id", F.posexplode(keys).alias("band_id", "band_hash"))
 
 
 def candidate_pairs(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
@@ -111,17 +90,18 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
     (boilerplate bands — license headers, empty ``__init__`` files; members
     are near-certainly co-candidates through their other b-1 bands; recall
     impact is measured in tests/test_skew.py).
+
+    ``signatures`` is read twice (its ok-row count sizes the join, then the
+    join itself), so callers pass a materialized relation: a table read or
+    a pinned one. The band relation itself is not pinned; it is a JVM
+    projection of those rows, with ``bands`` rows per ok row.
     """
-    # materialize the band relation once: it feeds both the group-size
-    # aggregation and the self-join; without the cut the mapInPandas
-    # band-hash kernel would execute twice (round-1 profiling showed the
-    # double pass as a fixed ~2x cost on the candidate stage)
-    bands_df = band_explode(signatures, cfg).localCheckpoint()
+    n_ok = signatures.filter(F.col("status") == "ok").count()
     return tiered_self_join(
-        bands_df,
+        band_explode(signatures, cfg),
         keys=["band_id", "band_hash"],
         id_col="file_id",
-        n_rows=bands_df.count(),  # pinned: the count is a block-manager scan
+        n_rows=n_ok * cfg.bands,
         drop_above=cfg.max_band_group,
     )
 
@@ -160,7 +140,7 @@ def tiered_self_join(
     relation in the job through shuffle storage. Semantics are identical
     (``count(*) over (partition by keys)`` ≡ joined groupBy count).
 
-    ``n_rows`` (the row count; callers pin ``rows`` and count it) SIZE-DERIVES
+    ``n_rows`` (the row count of ``rows``, supplied by the caller) SIZE-DERIVES
     the key exchange's partition count instead of taking the session
     constant: the normal tier's shuffled-hash build cannot spill
     (guide §3.1 risk — the analogous PPJoin prefix build OOM'd at 60M rows

@@ -7,10 +7,13 @@ skips work already done (there: ``pre_encodings`` skip in ``encode_faces``,
 ``utils.py:178-186``; here: left-anti join against the existing signatures
 table), and ``reset()`` (``utils.py:77-81``) becomes directory truncation.
 
-Lineage/metrics per north rule: each stage write also appends
-``(stage, config_hash, partition_id, rows_in, rows_out, wall_ms)`` rows to a
-``run_metrics`` table, collected with ``mapInPandas`` wrappers so partition
-counts are observed where the work happened, not re-counted afterwards.
+Lineage/metrics per north rule: the signing write also appends one row
+per partition, ``(stage, config_hash, partition_id, rows_out)`` in the
+``run_metrics`` schema, to a ``lineage_sign`` table. Rows are tagged with ``spark_partition_id`` before the write and
+counted per partition with one ``groupBy`` (``with_partition_lineage`` /
+``split_lineage``), so partition counts are those of the partitions the
+work ran in. Each run also appends one ``(stage, rows_out, wall_ms)`` row
+per stage to a ``run_metrics`` table (``append_metrics``).
 """
 
 from __future__ import annotations
@@ -142,7 +145,7 @@ class StageStore:
         """Union new signatures with the checkpointed ones (A1 analog —
         the reference's ChainMap dict merge, tasks.py:143). ``run_dedupe``
         appends instead; perfbench/run.py's traced pass calls this until
-        ROADMAP item 1 retires that pass."""
+        ROADMAP item 6 retires that pass."""
         if not self.exists("signatures"):
             return new_sigs
         old = self.read(spark, "signatures", S.SIGNATURES)

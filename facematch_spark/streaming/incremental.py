@@ -2,19 +2,13 @@
 
 The reference has no data streaming (its Celery queues carry tasks, not
 rows — ``c.py:4-21``; chords are barriers, not windows — SURVEY.md §2.9).
-Two streaming capabilities still belong in the engine:
-
-  1. **Incremental signing** — new corpus files appended after a batch run
-     are signed and merged without re-signing the world. Batch analog of the
-     reference's ``pre_encodings`` skip (``utils.py:178-186``); streaming
-     form: ``readStream`` over the input directory with an ``availableNow``
-     trigger → the same vectorized signature stage → ``foreachBatch`` upsert
-     into the signatures checkpoint. Dedup state IS the signatures table, so
-     no watermark is needed.
-
-  2. **Windowed event aggregation** — the generic streaming-operator
-     capability (event-time windows + late data) exercised against the
-     driver's ``events`` table.
+The generic streaming-operator capabilities belong in the engine anyway:
+event-time windows with late data, exactly-once dedup, stream-stream and
+stream-static joins and a ``foreachBatch`` MERGE apply loop, each exercised
+against the driver's tables under ``availableNow``. Incremental signing is
+not a stream here: ``plans/pipeline.run_dedupe`` signs only the files its
+checkpoint has not seen (the batch analog of the reference's
+``pre_encodings`` skip, ``utils.py:178-186``).
 """
 
 from __future__ import annotations
@@ -28,42 +22,6 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from facematch_spark import schema as S
-from facematch_spark.config import DedupeConfig
-from facematch_spark.operators.signatures import sign_documents
-
-
-def incremental_sign(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    cfg: DedupeConfig,
-) -> None:
-    """Sign newly-appended parquet files under ``input_dir`` exactly once.
-
-    ``availableNow`` drains everything currently unprocessed and stops —
-    idempotent resume comes from the streaming checkpoint (file-source log),
-    the streaming analog of the reference's incremental encode skip.
-    """
-    stream = (
-        spark.readStream.schema(S.SOURCE_FILES)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        sigs = sign_documents(batch_df, cfg)
-        sigs.write.mode("append").parquet(output_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def windowed_event_counts(

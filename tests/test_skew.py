@@ -164,3 +164,62 @@ def test_ppjoin_partitioning_is_size_derived_and_lossless(spark, tiny_df, monkey
             cands.explain()
         counts = re.findall(r"hashpartitioning\(sh#\d+L?, (\d+)\)", buf.getvalue())
         assert counts and set(counts) == {str(expect)}
+
+
+@pytest.fixture(scope="module")
+def skew_sigs(spark):
+    corpus = generate_corpus(n_base=200, seed=7, skew=True)
+    df = spark.createDataFrame(corpus_to_pandas(corpus), schema=S.SOURCE_FILES)
+    return SIG.sign_documents(df, DedupeConfig()).localCheckpoint()
+
+
+def test_candidates_are_band_slice_collisions(spark, skew_sigs):
+    """The candidates are exactly the ok-file pairs whose MinHash slices
+    ``minhash[b*r:(b+1)*r]`` are equal in some band ``b``. The oracle never
+    hashes, so an off-by-one in the 1-based ``slice`` or a wrong ``band_id``
+    breaks the equality whatever the hash function is."""
+    cfg = DedupeConfig()
+    r = cfg.rows_per_band
+    groups: dict[tuple, list[int]] = {}
+    for row in skew_sigs.filter(F.col("status") == S.STATUS_OK).select("file_id", "minhash").collect():
+        for b in range(cfg.bands):
+            groups.setdefault((b, tuple(row.minhash[b * r : (b + 1) * r])), []).append(row.file_id)
+    expected = {
+        (min(x, y), max(x, y))
+        for ids in groups.values()
+        for i, x in enumerate(ids)
+        for y in ids[i + 1 :]
+        if x != y
+    }
+    got = {(row.id_a, row.id_b) for row in L.candidate_pairs(skew_sigs, cfg).collect()}
+    assert expected, "the skew fixture must share band slices"
+    assert got == expected
+
+
+def test_band_plan_has_no_python_stage(spark, skew_sigs, tmp_path):
+    """``band_explode`` is one JVM projection: its executed plan over a
+    parquet scan holds no Python operator, its schema is unchanged, and the
+    band keys repeat under the same ``cfg.seed`` and change under another."""
+    import dataclasses
+
+    path = str(tmp_path / "sigs")
+    skew_sigs.write.parquet(path)
+    sigs = spark.read.schema(S.SIGNATURES).parquet(path)
+    cfg = DedupeConfig()
+    bands = L.band_explode(sigs, cfg)
+
+    plan = bands._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert bands.schema.simpleString() == "struct<file_id:bigint,band_id:int,band_hash:bigint>"
+
+    def keys(c):
+        return sorted(map(tuple, L.band_explode(sigs, c).collect()))
+
+    base = keys(cfg)
+    n_ok = sigs.filter(F.col("status") == S.STATUS_OK).count()
+    assert len(base) == n_ok * cfg.bands
+    assert keys(cfg) == base
+    reseeded = keys(dataclasses.replace(cfg, seed=cfg.seed + 1))
+    assert [k[:2] for k in reseeded] == [k[:2] for k in base]
+    assert {k[2] for k in reseeded}.isdisjoint({k[2] for k in base})

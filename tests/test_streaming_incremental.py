@@ -1,7 +1,6 @@
-"""Streaming incremental-signing test: availableNow drains exactly the
-unprocessed files; appended files are signed exactly once on the next run
-(the streaming form of the reference's pre_encodings skip,
-utils.py:178-186)."""
+"""Structured Streaming driver tests: each ``availableNow`` query drains
+its input across micro-batches and equals the batch form of the same
+operator (dedup, joins, windowed counts, the foreachBatch MERGE loop)."""
 
 from __future__ import annotations
 
@@ -9,48 +8,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-from facematch_spark import schema as S
-from facematch_spark.config import DedupeConfig
-from facematch_spark.fixtures import corpus_to_pandas, generate_corpus
-from facematch_spark.streaming.incremental import incremental_sign
-
-CFG = DedupeConfig(jaccard_threshold=0.5)
-
-
-def test_incremental_sign_exactly_once(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("stream")
-    input_dir = str(root / "input")
-    ckpt = str(root / "ckpt")
-    out = str(root / "sigs")
-    os.makedirs(input_dir)
-
-    c1 = generate_corpus(n_base=10, seed=1, edge_rows=False)
-    p1 = corpus_to_pandas(c1)
-    p1.to_parquet(f"{input_dir}/batch1.parquet")
-
-    incremental_sign(spark, input_dir, ckpt, out, CFG)
-    first = spark.read.schema(S.SIGNATURES).parquet(out)
-    n1 = first.count()
-    assert n1 == len(p1)
-
-    # append a second batch; only it is processed on the next availableNow run
-    c2 = generate_corpus(n_base=6, seed=2, edge_rows=False)
-    p2 = corpus_to_pandas(c2)
-    p2.to_parquet(f"{input_dir}/batch2.parquet")
-
-    incremental_sign(spark, input_dir, ckpt, out, CFG)
-    spark.catalog.refreshByPath(out)
-    both = spark.read.schema(S.SIGNATURES).parquet(out)
-    assert both.count() == len(p1) + len(p2)
-    # exactly-once: no file_id signed twice
-    dupes = both.groupBy("file_id").count().filter(F.col("count") > 1).count()
-    assert dupes == 0
-
-    # a third run with nothing new appends nothing
-    incremental_sign(spark, input_dir, ckpt, out, CFG)
-    spark.catalog.refreshByPath(out)
-    assert spark.read.schema(S.SIGNATURES).parquet(out).count() == len(p1) + len(p2)
 
 
 def test_streaming_drivers_remove_staged_input(spark, tmp_path, tmp_path_factory, monkeypatch):
