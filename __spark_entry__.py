@@ -840,9 +840,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def dedup_embedding_cosine(spark, sf):
         # embedding-cosine near-dup pairs: every unordered pair with
-        # round(cosine, 6) >= 0.3 — EXACT (gated broadcast matmul), the
-        # recall oracle for embedding_near_dup_pairs_lsh (the LSH-bucketed
-        # scale path, recall-gated >= 0.99 on planted near-dups in pytest).
+        # round(cosine, 6) >= 0.3 — EXACT (gated broadcast matmul; past
+        # the corpus gate it raises).
         # The fixture's embeddings are near-orthogonal (max pairwise cosine
         # ~0.51 at every SF), so the threshold sits at 0.3 to exercise a
         # real ~1k-pair result the oracle value-hashes; production near-dup

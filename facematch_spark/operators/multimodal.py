@@ -1,14 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary`` columns
 with typed metadata.
 
-The image/audio decode libraries are not in this container, so the decode
-kernels are STUBS — ``decode_image`` raises ``NotImplementedError`` unless a
-deterministic fake decoder is requested — but the Spark-side plumbing is real
-and tested: schemas, Arrow batch shapes, ``mapInPandas`` signatures,
-partition-preserving metadata extraction, and frame-sampling row explosion.
-
-Contract: a production deployment swaps ``_fake_decode`` for Pillow/ffmpeg
-calls without touching any plan shape.
+Two partition-preserving Arrow stages, no decode library: metadata
+extraction (length, digest, sniffed container type) and frame sampling
+(fixed-stride byte windows standing in for decoded frames, one row per
+frame). ``make_media_df`` builds a media table from the documents table for
+the ``multimodal_meta`` and ``multimodal_frames`` queries.
 """
 
 from __future__ import annotations
@@ -16,7 +13,6 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,14 +25,6 @@ MEDIA_META = T.StructType(
         T.StructField("byte_len", T.LongType(), False),
         T.StructField("sha256", T.StringType(), False),
         T.StructField("magic", T.StringType(), True),       # sniffed container type
-        T.StructField("status", T.StringType(), False),
-    ]
-)
-
-FEATURES = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType(), False), True),
         T.StructField("status", T.StringType(), False),
     ]
 )
@@ -78,51 +66,6 @@ def extract_metadata(media: DataFrame, blob_col: str = "blob") -> DataFrame:
             )
 
     return media.mapInPandas(batches, schema=MEDIA_META)
-
-
-def _fake_decode(blob: bytes, out_dim: int) -> np.ndarray:
-    """Deterministic fake feature extractor: a seeded projection of the
-    blob's digest — stands in for a real decode+embed so plumbing tests are
-    meaningful (same blob ⇒ same feature)."""
-    digest = hashlib.sha256(blob).digest()
-    seed = int.from_bytes(digest[:8], "little")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(out_dim).astype(np.float32)
-
-
-def decode_image(blob: bytes) -> np.ndarray:
-    """Real decode path — requires an image library absent from this
-    container. STUB per driver brief."""
-    raise NotImplementedError(
-        "image decode requires Pillow/opencv (not in this container); "
-        "use feature_extract(..., fake=True) for plumbing tests"
-    )
-
-
-def feature_extract(
-    media: DataFrame, out_dim: int = 16, fake: bool = True, blob_col: str = "blob"
-) -> DataFrame:
-    """(media_id, blob) → fixed-dim feature vectors via Arrow batches.
-    ``fake=False`` routes to the real decoder (NotImplementedError here)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = []
-            status = []
-            for b in pdf[blob_col]:
-                if not b:
-                    feats.append(None)
-                    status.append("empty")
-                    continue
-                if fake:
-                    feats.append(_fake_decode(b, out_dim).tolist())
-                    status.append("ok")
-                else:
-                    feats.append(None)
-                    status.append("decode_unavailable")
-            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats, "status": status})
-
-    return media.mapInPandas(batches, schema=FEATURES)
 
 
 def sample_frames(video: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8) -> DataFrame:

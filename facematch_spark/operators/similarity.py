@@ -6,9 +6,11 @@ Two paths, mirroring the dedup engine's exact-vs-LSH split:
   * brute-force cosine top-k — the correctness baseline. The k-smallest
     problem per query is a window top-k over a self-join; at N queries ×
     N corpus it is O(N²) — usable for oracles and small N, never at scale.
-  * random-hyperplane LSH buckets — the scale path (Charikar '02 SimHash for
-    cosine): h-bit sign sketch per vector, candidates = same-bucket pairs,
-    verified by exact cosine. Recall tuned by number of tables × bits.
+  * approximate top-k — the scale paths. ``ann_topk_lsh`` sketches each
+    vector with random hyperplanes (Charikar '02 SimHash for cosine) and
+    probes its bucket and every Hamming-1 neighbour bucket; ``ann_topk_ivf``
+    probes the nearest lists of a trained coarse quantizer. Candidates are
+    scored by exact cosine.
 
 Dot products run JVM-side via ``aggregate(zip_with(...))`` — no Python in
 either path.
@@ -134,16 +136,15 @@ def embedding_near_dup_pairs(
     """EXACT embedding-cosine near-duplicate pairs: every unordered pair
     ``(id_a < id_b)`` with ``round(cosine, 6) >= threshold``.
 
-    This is the embedding sibling of ``ngram_jaccard_pairs`` — the
-    correctness baseline / recall oracle for ``embedding_near_dup_pairs_lsh``
-    (reference parity: the reference's all-pairs ``duplicate_groups`` compare
-    over DeepFace embeddings, ``utils.py``; here the embedding column is any
+    This is the embedding sibling of ``ngram_jaccard_pairs`` (reference
+    parity: the reference's all-pairs ``duplicate_groups`` compare over
+    DeepFace embeddings, ``utils.py``; here the embedding column is any
     ``array<float>``). Plan shape mirrors ``cosine_topk_bruteforce``: the
     corpus is collected once under the same explicit gate and broadcast into
     an Arrow-batched matmul stage — no shuffle; each partition emits only its
     own above-threshold pairs (``corpus_id > row_id`` keeps each unordered
     pair exactly once, on the partition holding its smaller id). Past the
-    gate, ``embedding_near_dup_pairs_lsh`` is the scale path."""
+    gate it raises."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -152,9 +153,8 @@ def embedding_near_dup_pairs(
     if n_corpus > max_corpus_rows:
         raise ValueError(
             f"embedding_near_dup_pairs: corpus exceeds {max_corpus_rows} rows — "
-            "the driver collect + broadcast would not fit; use "
-            "embedding_near_dup_pairs_lsh (bucketed candidates) at this scale, "
-            "or raise max_corpus_rows explicitly if the driver can hold it"
+            "the driver collect + broadcast would not fit; raise "
+            "max_corpus_rows explicitly if the driver can hold it"
         )
     rows = vectors.select(F.col(id_col), F.col(vec_col)).collect()
     c_ids = np.array([r[0] for r in rows], dtype=np.int64)
@@ -192,60 +192,6 @@ def embedding_near_dup_pairs(
 
     return _ensure_parallel(vectors.select(F.col(id_col), F.col(vec_col))).mapInPandas(
         batches, schema="id_a long, id_b long, cosine double"
-    )
-
-
-def embedding_near_dup_pairs_lsh(
-    vectors: DataFrame,
-    threshold: float,
-    n_bits: int | None = None,
-    n_tables: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """APPROXIMATE embedding-cosine near-dup pairs — the 100 TB path.
-
-    Candidates from ``lsh_bucket_candidates`` (random-hyperplane sign
-    sketches, same-bucket-in-any-table through the shared size-tiered
-    self-join), verified by exact JVM-side cosine, filtered at
-    ``round(cosine, 6) >= threshold``. Collision probability per hyperplane
-    for a true near-dup at cosine c is ``1 − arccos(c)/π`` (Charikar '02) —
-    at c ≥ 0.95 and the default 8 tables × auto bits, pair recall is ≥ 0.99
-    (pytest-gated against ``embedding_near_dup_pairs``). Candidate volume is
-    bounded by bucket populations (``auto_n_bits`` keeps expected bucket size
-    constant as the corpus grows), never N²."""
-    if n_bits is None:
-        n_bits = auto_n_bits(vectors.count())
-    cands = lsh_bucket_candidates(vectors, n_bits, n_tables, dim, seed, vec_col, id_col)
-    # norms are per-VECTOR, not per-pair: compute them once on the |corpus|-
-    # row relation instead of twice per candidate (the HOF norm walks an
-    # interpreted lambda per element — hoisting it off the candidate relation
-    # removes 2/3 of the per-pair lambda work; the cosine divides by the
-    # same two doubles, so results are bit-identical)
-    # SHUFFLE_HASH pins (guide §3.1): the candidate relation's size estimate
-    # after the dedup aggregation is unreliable, and at 1M vectors the auto
-    # plan tried to BROADCAST the (actually ~1 GB) candidate side and died
-    # on spark.driver.maxResultSize (caught by tools/scale_fallback_probe.py
-    # run E). Hash-build on the |corpus|-row vector relation instead: no
-    # driver collect, no sort of the candidate side.
-    v = vectors.select(F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("_nrm"))
-    return (
-        cands.join(
-            v.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("_nrm").alias("_na")).hint("shuffle_hash"),
-            "id_a",
-        )
-        .join(
-            v.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("_nrm").alias("_nb")).hint("shuffle_hash"),
-            "id_b",
-        )
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")), 6),
-        )
-        .filter(F.col("cosine") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "cosine")
     )
 
 
@@ -309,36 +255,6 @@ def auto_n_bits(n_vectors: int, target_bucket: int = 32, floor: int = 4) -> int:
     if n_vectors <= target_bucket:
         return floor
     return max(floor, math.ceil(math.log2(n_vectors / target_bucket)))
-
-
-def lsh_bucket_candidates(
-    vectors: DataFrame,
-    n_bits: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """SYMMETRIC ANN candidate pairs: same sign-sketch bucket in ANY of
-    ``n_tables`` independent hyperplane tables. Equi-join per table on
-    (table, bucket) — the cosine analog of MinHash banding — through the
-    shared size-tiered self-join (hot buckets take the salted triangle join;
-    lossless, no drop tier so table-level recall is untouched). Kept for
-    pair-shaped consumers (near-dup edges); ``ann_topk_lsh`` uses the
-    asymmetric multi-probe join instead, which reaches the same recall with
-    far fewer tables."""
-    from facematch_spark.operators.lsh import tiered_self_join
-
-    allb = hyperplane_sketches(
-        vectors, n_bits, n_tables, dim, seed, vec_col, id_col
-    ).localCheckpoint()
-    return tiered_self_join(
-        allb,
-        keys=["table_id", "bucket"],
-        id_col="vid",
-        n_rows=allb.count(),  # pinned: the count is a block-manager scan
-    )
 
 
 def ivf_assign(
@@ -469,8 +385,9 @@ def ann_topk_ivf(
         .select(F.col("qid").alias("query_id"), F.col("vid").alias("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    # per-vector norms hoisted off the candidate relation — see
-    # embedding_near_dup_pairs_lsh (bit-identical: same doubles divided)
+    # norms are per-vector, not per-pair: computed once on the |corpus|-row
+    # relation instead of twice per candidate (the cosine divides by the
+    # same two doubles, so results are bit-identical)
     v = vectors.select("vec_id", "embedding", _norm(F.col("embedding")).alias("_nrm"))
     scored = (
         cands.join(
@@ -545,11 +462,14 @@ def ann_topk_lsh(
         .filter(F.col("qid") != F.col("nid"))
         .dropDuplicates(["qid", "nid"])
     )
-    # per-vector norms hoisted off the candidate relation — see
-    # embedding_near_dup_pairs_lsh (bit-identical: same doubles divided).
-    # SHUFFLE_HASH pins for the same reason as there: the candidate
-    # relation's post-dedup size estimate invited a ~1 GB auto-broadcast
-    # at 1M vectors (scale_fallback_probe run E).
+    # norms are per-vector, not per-pair: computed once on the |corpus|-row
+    # relation instead of twice per candidate (the cosine divides by the
+    # same two doubles, so results are bit-identical).
+    # SHUFFLE_HASH pins (guide §3.1): the candidate relation's size estimate
+    # after the dedup aggregation is unreliable, and at 1M vectors the auto
+    # plan tried to BROADCAST the (actually ~1 GB) candidate side and died on
+    # spark.driver.maxResultSize (tools/scale_fallback_probe.py run E).
+    # Hash-build on the |corpus|-row vector relation instead.
     v = vectors.select(F.col("vec_id"), F.col("embedding"), _norm(F.col("embedding")).alias("_nrm"))
     scored = (
         cands.join(

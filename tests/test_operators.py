@@ -175,23 +175,6 @@ def test_multimodal_metadata(spark, docs):
         assert r.byte_len > 0 and r.status == "ok" and len(r.sha256) == 64
 
 
-def test_multimodal_decode_stub_raises():
-    from facematch_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG....")
-
-
-def test_multimodal_fake_features_deterministic(spark, docs):
-    from facematch_spark.operators.multimodal import feature_extract, make_media_df
-
-    media = make_media_df(spark, docs.limit(20))
-    f1 = {r.media_id: r.feature for r in feature_extract(media, out_dim=8).collect()}
-    f2 = {r.media_id: r.feature for r in feature_extract(media, out_dim=8).collect()}
-    assert f1 == f2
-    assert all(len(v) == 8 for v in f1.values())
-
-
 def test_frame_sampling_counts(spark, docs):
     from facematch_spark.operators.multimodal import make_media_df, sample_frames
 

@@ -82,20 +82,6 @@ def test_simhash_salted_tier_lossless(spark, kernel_fps, monkeypatch):
     assert a == b and a
 
 
-def test_ann_bucket_salted_tier_lossless(spark, monkeypatch):
-    """Same for the ANN hyperplane-bucket path."""
-    from facematch_spark.operators import lsh as L
-    from facematch_spark.operators.similarity import lsh_bucket_candidates
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").localCheckpoint()
-    monkeypatch.setattr(L, "HOT_GROUP_CAP", 100_000)
-    a = {(r.id_a, r.id_b) for r in lsh_bucket_candidates(emb, n_bits=4, n_tables=2).collect()}
-    monkeypatch.setattr(L, "HOT_GROUP_CAP", 2)
-    monkeypatch.setattr(L, "SALT_BUCKETS", 4)
-    b = {(r.id_a, r.id_b) for r in lsh_bucket_candidates(emb, n_bits=4, n_tables=2).collect()}
-    assert a == b and a
-
-
 def test_auto_n_bits_scales_with_corpus():
     from facematch_spark.operators.similarity import auto_n_bits
 
