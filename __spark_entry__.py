@@ -29,7 +29,7 @@ JT = 0.5
 TK = 3  # token-shingle width for the token-mode Jaccard query
 SPAN_K = 30  # duplicate-span window width (chars) — Lee et al. use 50 BPE
 # tokens on web text; 30 chars fits the short fixture docs (median ~300)
-DOC_CFG = DedupeConfig(jaccard_threshold=JT, normalize=True)
+DOC_CFG = DedupeConfig(jaccard_threshold=JT)
 # stratified-sampling rates for q_sample_stratified (es/de fall through to
 # the default, exercising the otherwise-branch of the threshold CASE)
 SAMPLE_RATES = {"en": 0.5, "fr": 0.25, "zh": 0.1}

@@ -12,35 +12,41 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
 class DedupeConfig:
-    # --- shingling ---
-    shingle_kind: str = "char"  # "char" | "token"
-    k: int = 9                  # k-gram size (chars or tokens)
-    normalize: bool = True      # lowercase + collapse whitespace before shingling
+    """The values the CLI sets are fields; the rest are class constants.
+    Both key the checkpoint (``config_hash``)."""
+
+    # --- shingling: char k-grams of the normalized text ---
+    k: int = 9
     # --- MinHash ---
     num_perm: int = 128
     bands: int = 32
     rows_per_band: int = 4
-    # --- thresholds (reference default: dedupe threshold 0.4,
+    # --- threshold (reference default: dedupe threshold 0.4,
     #     __main__.py:162-166; ours defaults to the FIXTURES.md config) ---
     jaccard_threshold: float = 0.8
-    simhash_hamming_max: int = 3
-    # --- containment (suffix path) ---
-    containment_threshold: float = 0.95
-    # --- skew handling (salting of hot groups is lossless: lsh.HOT_GROUP_CAP) ---
-    max_band_group: int = 5000   # band groups larger than this are dropped (recall-documented)
-    # --- status taxonomy ---
-    max_content_bytes: int = 1 << 20
     # --- determinism ---
     seed: int = 42
 
+    # --- constants: no caller varies them. ``shingle_kind`` and
+    #     ``normalize`` name what the kernels always do (lowercase + collapse
+    #     whitespace, then char k-grams); they are not switches ---
+    shingle_kind: ClassVar[str] = "char"
+    normalize: ClassVar[bool] = True
+    simhash_hamming_max: ClassVar[int] = 3
+    containment_threshold: ClassVar[float] = 0.95
+    # band groups larger than this are dropped (recall-documented; salting
+    # of hot groups below it is lossless: lsh.HOT_GROUP_CAP)
+    max_band_group: ClassVar[int] = 5000
+    # longer content is status too_large
+    max_content_bytes: ClassVar[int] = 1 << 20
+
     def __post_init__(self) -> None:
-        if self.shingle_kind not in ("char", "token"):
-            raise ValueError(f"shingle_kind must be char|token, got {self.shingle_kind}")
         if self.k < 1:
             raise ValueError("k must be >= 1")
         if self.bands * self.rows_per_band != self.num_perm:
@@ -55,16 +61,15 @@ class DedupeConfig:
             )
         if not (0.0 <= self.jaccard_threshold <= 1.0):
             raise ValueError("jaccard_threshold must be in [0,1]")
-        if not (0 <= self.simhash_hamming_max <= 64):
-            raise ValueError("simhash_hamming_max must be in [0,64]")
 
     @property
     def config_hash(self) -> str:
         """Stable 12-hex-char key for checkpoint table naming (the analog of
         the reference's config-suffixed file names, utils.py:56-59).
 
-        ``kernel_version`` is folded in alongside the user-visible fields:
-        the hash functions behind MinHash/SimHash signatures are part of the
+        The payload holds every annotated name, fields and constants alike,
+        so editing a constant re-keys the checkpoint too. ``kernel_version``
+        is folded in alongside them: the hash functions behind MinHash/SimHash signatures are part of the
         config's identity. Without it, changing the signature kernel (as
         round 2 did, xor-mix64 → u32 multiply-add) leaves old checkpoints
         keyed identically, and an incremental resume silently merges
@@ -74,9 +79,8 @@ class DedupeConfig:
         whenever any signature kernel changes observable output."""
         from facematch_spark.functions.hashing import KERNEL_VERSION
 
-        payload = json.dumps(
-            {**asdict(self), "kernel_version": KERNEL_VERSION}, sort_keys=True
-        ).encode()
+        settings = {name: getattr(self, name) for name in self.__annotations__}
+        payload = json.dumps({**settings, "kernel_version": KERNEL_VERSION}, sort_keys=True).encode()
         return hashlib.sha256(payload).hexdigest()[:12]
 
     def table_suffix(self) -> str:

@@ -4,7 +4,7 @@ This module is the replacement for the reference's black-box feature
 extractor ``DeepFace.represent`` (``utils.py:187-197``): instead of a face
 embedding we compute, per document,
 
-  * a set of k-gram shingle hashes (char or token), via a vectorized
+  * a set of char k-gram shingle hashes, via a vectorized
     polynomial rolling hash + splitmix64 finalizer;
   * a MinHash signature of ``num_perm`` values: one splitmix64 mix of each
     shingle hash, then a per-permutation uint32 multiply-add
@@ -20,8 +20,6 @@ per-row Python hot path (BASELINE.json input_hint).
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 
@@ -78,25 +76,6 @@ def char_shingle_hashes(data: bytes, k: int) -> np.ndarray:
         p = _U64(1)
         for j in range(k - 1, -1, -1):
             acc += b[j : j + n] * p
-            p = p * _POLY_BASE
-    return np.unique(mix64(acc))
-
-
-def token_shingle_hashes(tokens: list[bytes], k: int) -> np.ndarray:
-    """Distinct hashes of token k-grams: hash each token, then roll a
-    polynomial hash over the token-hash sequence."""
-    if len(tokens) < k:
-        return np.empty(0, dtype=np.uint64)
-    th = np.array(
-        [int.from_bytes(hashlib.blake2b(t, digest_size=8).digest(), "little") for t in tokens],
-        dtype=np.uint64,
-    )
-    n = len(th) - k + 1
-    with np.errstate(over="ignore"):
-        acc = np.zeros(n, dtype=np.uint64)
-        p = _U64(1)
-        for j in range(k - 1, -1, -1):
-            acc += th[j : j + n] * p
             p = p * _POLY_BASE
     return np.unique(mix64(acc))
 

@@ -3,8 +3,9 @@
 generalization of the core engine (SURVEY.md §2 + driver brief):
 
   * exact dedup        — hash groupBy (md5 key), pure SQL
-  * n-gram Jaccard     — exact char- or token-k-gram Jaccard: PPJoin prefix
-                         candidates, within one corpus or across two
+  * n-gram Jaccard     — exact char- or token-k-gram Jaccard within one
+                         corpus, char k-grams across two (decontamination):
+                         PPJoin prefix candidates
   * MinHash + LSH      — the scale path (signatures → bands → join)
   * SimHash            — Hamming-ball near-dup pairs
   * containment        — substring dups via prefix-shingle candidate join
@@ -310,40 +311,6 @@ def minhash_lsh_exact_pairs(docs: DataFrame, cfg: DedupeConfig) -> DataFrame:
     return V.exact_overlap(cands, sh, cfg.jaccard_threshold).drop("containment")
 
 
-def minhash_lsh_exact_pairs_between(
-    left: DataFrame, right: DataFrame, cfg: DedupeConfig
-) -> DataFrame:
-    """Cross-corpus form of :func:`minhash_lsh_exact_pairs` — the
-    decontamination scale path when BOTH corpora are too large for the
-    exact cross-PPJoin (whose join volume follows the train side's prefix
-    relation): MinHash-band candidates across sides, then exact Jaccard
-    verification over the cfg shingle sets. Candidates ride
-    ``salted_probe_join`` (the asymmetric skew-safe equi-join — hot band
-    groups on the held-out side are salted, train probes replicated), so
-    boilerplate bands cannot concentrate a reducer. Same disjoint-doc_id
-    requirement as the exact cross form. Recall vs the exact operator is
-    pytest-gated at the planted-dup Jaccard level. Verification is the
-    shared ``verify.exact_overlap`` tier (see the self-join form)."""
-    bands_l = (
-        L.band_explode(doc_signatures(left, cfg), cfg)
-        .withColumnRenamed("file_id", "id_a")
-        .localCheckpoint()
-    )
-    bands_r = (
-        L.band_explode(doc_signatures(right, cfg), cfg)
-        .withColumnRenamed("file_id", "id_b")
-        .localCheckpoint()
-    )
-    cands = L.salted_probe_join(
-        bands_l, bands_r,
-        keys=["band_id", "band_hash"],
-        left_id="id_a", right_id="id_b",
-        n_build=bands_r.count(),  # pinned: block-manager scan
-    ).dropDuplicates(["id_a", "id_b"]).localCheckpoint()
-    sh = doc_shingles(left, cfg).unionByName(doc_shingles(right, cfg)).localCheckpoint()
-    return V.exact_overlap(cands, sh, cfg.jaccard_threshold).drop("containment")
-
-
 def simhash_chunk_bounds(hamming_max: int, total_bits: int = 64) -> list[tuple[int, int]]:
     """Bit ranges ``(lo_bit, width)`` of the pigeonhole chunks for a
     ``total_bits``-wide fingerprint at Hamming radius ``hamming_max``:
@@ -627,9 +594,8 @@ def ngram_jaccard_pairs_between(
     right: DataFrame,
     k: int,
     threshold: float,
-    shingle_kind: str = "char",
 ) -> DataFrame:
-    """Exact k-gram Jaccard pairs ≥ threshold BETWEEN two corpora — the
+    """Exact char k-gram Jaccard pairs ≥ threshold BETWEEN two corpora — the
     cross-corpus form of :func:`ngram_jaccard_pairs` (same PPJoin filters,
     side-aware join). Returns ``(id_a, id_b, jaccard)`` with ``id_a`` from
     ``left`` and ``id_b`` from ``right``; within-side pairs are never
@@ -645,11 +611,10 @@ def ngram_jaccard_pairs_between(
     verification tier keys its shingle arrays by doc_id alone); callers
     with overlapping id spaces must re-key one side first.
     """
-    shingler = {"char": char_shingles, "token": token_shingles}[shingle_kind]
     # shingle each side, tag, union — row-local, no join back to the docs
     sh_tagged = (
-        shingler(left, k).withColumn("_side", F.lit(0))
-        .unionByName(shingler(right, k).withColumn("_side", F.lit(1)))
+        char_shingles(left, k).withColumn("_side", F.lit(0))
+        .unionByName(char_shingles(right, k).withColumn("_side", F.lit(1)))
         .select("doc_id", "_side", F.xxhash64("shingle").alias("sh"))
         .localCheckpoint()
     )
@@ -663,8 +628,6 @@ def decontaminate(
     held_out: DataFrame,
     k: int,
     threshold: float,
-    method: str = "exact",
-    cfg: DedupeConfig | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Remove training docs that near-duplicate anything in a held-out set —
     the eval-decontamination sweep every LLM training pipeline runs before
@@ -674,21 +637,11 @@ def decontaminate(
     Returns ``(clean_train, contaminated)`` where ``contaminated`` carries
     ``(doc_id, matched_eval_id, jaccard)`` — the strongest held-out match
     per dropped doc, deterministically tie-broken — for the audit trail.
-    ``method="exact"`` (default): candidates from the lossless cross-corpus
-    PPJoin, verified with exact set intersection — no approximation in the
-    drop decision. ``method="lsh"``: MinHash-band candidates (the scale
-    path when both corpora are huge), still exactly verified — the only
-    approximation is candidate RECALL, pytest-gated vs the exact form; the
-    ``cfg`` shingle/signature config drives it (k and threshold are taken
-    from cfg in this mode).
+    Candidates come from the lossless cross-corpus PPJoin
+    (:func:`ngram_jaccard_pairs_between`) and are verified with exact set
+    intersection — no approximation in the drop decision.
     """
-    if method == "lsh":
-        c = cfg or DedupeConfig(k=k, jaccard_threshold=threshold)
-        pairs = minhash_lsh_exact_pairs_between(train, held_out, c)
-    elif method == "exact":
-        pairs = ngram_jaccard_pairs_between(train, held_out, k, threshold)
-    else:
-        raise ValueError(f"method must be 'exact' or 'lsh', got {method!r}")
+    pairs = ngram_jaccard_pairs_between(train, held_out, k, threshold)
     contaminated = pairs.groupBy("id_a").agg(
         F.max_by(
             "id_b", F.struct(F.col("jaccard"), (-F.col("id_b")).alias("nid"))

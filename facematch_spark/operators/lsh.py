@@ -115,8 +115,7 @@ def tiered_self_join(
 ) -> DataFrame:
     """Size-tiered self equi-join on ``keys`` → distinct canonical pairs
     ``(id_a, id_b)`` with ``id_a < id_b``. The shared skew machinery for
-    every bucketed candidate generator (MinHash bands, SimHash chunks, ANN
-    hyperplane buckets):
+    the bucketed candidate generators (MinHash bands, SimHash chunks):
 
       * g == 1                → dropped (no pair from a singleton group);
       * 1 < g ≤ HOT_GROUP_CAP → plain self equi-join on ``keys``;
@@ -202,9 +201,9 @@ def salted_probe_join(
     n_build: int,
 ) -> DataFrame:
     """Skew-safe ASYMMETRIC equi-join on ``keys`` → ``(left_id, right_id)``
-    rows — the probe→build sibling of ``tiered_self_join`` for candidate
-    generators whose two sides differ (multi-probe ANN queries probing home
-    buckets, containment probes against a gram relation). Build-side groups
+    rows — the probe→build sibling of ``tiered_self_join`` for a candidate
+    generator whose two sides differ (``similarity.ann_topk_lsh``: multi-probe
+    ANN queries probing home buckets). Build-side groups
     above ``HOT_GROUP_CAP`` are salted: build rows get
     ``bkt = xxhash64(right_id) % SALT_BUCKETS`` and each probe row replicates
     across all buckets, so no reducer sees more than g/SALT_BUCKETS build

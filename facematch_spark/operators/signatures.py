@@ -46,17 +46,14 @@ def normalize_content(text: str) -> str:
 
 
 def _shingles(norm: str, cfg: DedupeConfig) -> np.ndarray:
-    data = norm.encode("utf-8", errors="surrogatepass")
-    if cfg.shingle_kind == "char":
-        return H.char_shingle_hashes(data, cfg.k)
-    # surrogatepass here too: a lone surrogate must not abort the whole job
-    # from inside the UDF (char path already tolerates it)
-    return H.token_shingle_hashes(data.split(), cfg.k)
+    # surrogatepass: a lone surrogate must not abort the whole job from
+    # inside the UDF
+    return H.char_shingle_hashes(norm.encode("utf-8", errors="surrogatepass"), cfg.k)
 
 
 def shingle_hashes_for(text: str, cfg: DedupeConfig) -> np.ndarray:
     """Distinct shingle hashes for one document under ``cfg``."""
-    return _shingles(normalize_content(text) if cfg.normalize else text, cfg)
+    return _shingles(normalize_content(text), cfg)
 
 
 def _doc_shingles(text: str | None, cfg: DedupeConfig) -> tuple[str, np.ndarray | None]:
@@ -68,17 +65,13 @@ def _doc_shingles(text: str | None, cfg: DedupeConfig) -> tuple[str, np.ndarray 
         return S.STATUS_TOO_LARGE, None
     if _CTRL_RE.search(text[:4096]) is not None:
         return S.STATUS_NON_TEXT, None
-    norm = normalize_content(text) if cfg.normalize else text
-    # unit-aware short check: k TOKENS in token mode, k chars in char mode —
-    # a doc with ≥k chars but <k tokens would otherwise produce an empty
-    # shingle set whose all-sentinel MinHash LSH-collides with every other;
-    # an empty set past the check (e.g. k str tokens but fewer byte tokens)
-    # is too short for the same reason
-    n_units = len(norm.split()) if cfg.shingle_kind == "token" else len(norm)
-    sh = _shingles(norm, cfg) if n_units >= cfg.k else None
-    if sh is None or sh.size == 0:
+    norm = normalize_content(text)
+    # fewer than k chars: an empty shingle set, whose all-sentinel MinHash
+    # would LSH-collide with every other (k chars encode to ≥ k bytes, so
+    # a text past the check has at least one k-gram)
+    if len(norm) < cfg.k:
         return S.STATUS_TOO_SHORT, None
-    return S.STATUS_OK, sh
+    return S.STATUS_OK, _shingles(norm, cfg)
 
 
 def _ensure_parallel(df: DataFrame) -> DataFrame:

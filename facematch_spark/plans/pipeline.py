@@ -75,13 +75,14 @@ def run_dedupe(
     if has_sigs:
         # non-append lineage guard: an update-in-place or delete between the
         # checkpointed run and this head invalidates the whole checkpoint
-        # chain (stale signatures/pairs) — force a clean recompute instead of
-        # silently mixing old and new content. Append-only evolution (the
-        # normal case) detects as (0, 0) and resumes incrementally.
+        # chain (stale signatures/pairs) — stage 1 recomputes it from scratch
+        # instead of silently mixing old and new content. Only the stage
+        # tables go: a full reset would also drop the quarantine the CLI
+        # wrote for this run. Append-only evolution (the normal case)
+        # detects as (0, 0) and resumes incrementally.
         drift = store.detect_non_append(source, spark)
         if drift["updated"] or drift["deleted"]:
             counts["non_append_reset"] = drift["updated"] + drift["deleted"]
-            store.reset()
             has_sigs = False
 
     # ---- stage 1: signatures (encode analog) ----
@@ -89,8 +90,10 @@ def run_dedupe(
     if not (has_sigs and drift["pending"] == 0):
         # pairs and clusters were computed without the pending files (and
         # a signatures directory with no _SUCCESS is an uncommitted write):
-        # delete them before the append commits, clusters before pairs
-        for name in ("clusters", "pairs") if has_sigs else ("clusters", "pairs", "signatures"):
+        # delete them before the append commits, clusters before pairs;
+        # without signatures to append to, the whole chain goes
+        stale = ("clusters", "pairs") if has_sigs else ("clusters", "pairs", "signatures", "lineage_sign")
+        for name in stale:
             shutil.rmtree(store.path(name), ignore_errors=True)
         # pinned once: re-signing for the lineage would rerun the
         # anti-join after the append and see no pending rows

@@ -35,7 +35,6 @@ def test_char_shingles_set_semantics():
 
 def test_shorter_than_k_empty():
     assert H.char_shingle_hashes(b"ab", 9).size == 0
-    assert H.token_shingle_hashes([b"a", b"b"], 5).size == 0
 
 
 def test_minhash_estimates_jaccard():
@@ -110,29 +109,12 @@ def test_config_hash_stability_and_sensitivity():
 
     assert DedupeConfig().config_hash == DedupeConfig().config_hash
     assert DedupeConfig().config_hash != DedupeConfig(seed=7).config_hash
-
-
-def test_token_shingles_basic():
-    toks = "the quick brown fox the quick brown fox".encode().split()
-    got = H.token_shingle_hashes(toks, 3)
-    # distinct 3-gram token windows: (the,quick,brown) (quick,brown,fox)
-    # (brown,fox,the) (fox,the,quick) → 4
-    assert got.size == 4
-    again = H.token_shingle_hashes(toks, 3)
-    assert np.array_equal(got, again)
-
-
-def test_token_vs_char_config_paths():
-    from facematch_spark.config import DedupeConfig
-    from facematch_spark.operators.signatures import shingle_hashes_for
-
-    text = "def alpha(beta):\n    return beta * gamma\n" * 3
-    ch = shingle_hashes_for(text, DedupeConfig(shingle_kind="char", k=9))
-    tk = shingle_hashes_for(
-        text, DedupeConfig(shingle_kind="token", k=3, num_perm=64, bands=16, rows_per_band=4)
-    )
-    assert ch.size > 0 and tk.size > 0
-    assert not np.array_equal(np.sort(ch)[: min(ch.size, tk.size)], np.sort(tk)[: min(ch.size, tk.size)])
+    # the keys of checkpoints written while the constants were still fields:
+    # existing stores resume instead of recomputing
+    assert DedupeConfig().config_hash == "aa24f1dcc8be"
+    assert DedupeConfig(k=7).config_hash == "c69fc8ddbdd6"
+    with pytest.raises(TypeError):
+        DedupeConfig(normalize=False)
 
 
 def _classify_then_shingle(text, cfg):
@@ -149,11 +131,7 @@ def _classify_then_shingle(text, cfg):
         return S.STATUS_TOO_LARGE, None
     if re.search(r"[\x00-\x08\x0E-\x1F]", text[:4096]) is not None:
         return S.STATUS_NON_TEXT, None
-    stripped = normalize_content(text) if cfg.normalize else text
-    if cfg.shingle_kind == "token":
-        if len(stripped.split()) < cfg.k:
-            return S.STATUS_TOO_SHORT, None
-    elif len(stripped) < cfg.k:
+    if len(normalize_content(text)) < cfg.k:
         return S.STATUS_TOO_SHORT, None
     sh = shingle_hashes_for(text, cfg)
     if sh.size == 0:
@@ -161,16 +139,15 @@ def _classify_then_shingle(text, cfg):
     return S.STATUS_OK, sh
 
 
-@pytest.mark.parametrize("kind", ["char", "token"])
-@pytest.mark.parametrize("normalize", [True, False])
-def test_doc_shingles_matches_classify_then_shingle(kind, normalize):
+def test_doc_shingles_matches_classify_then_shingle(monkeypatch):
     from facematch_spark.config import DedupeConfig
     from facematch_spark.fixtures import generate_corpus
     from facematch_spark.operators.signatures import _doc_shingles
 
-    cfg = DedupeConfig(shingle_kind=kind, k=9 if kind == "char" else 3, normalize=normalize, max_content_bytes=4096)
+    monkeypatch.setattr(DedupeConfig, "max_content_bytes", 4096)
+    cfg = DedupeConfig(k=9)
     edge = [
-        None, "", "  \n\t ", "ab", "abc def", "a\u00a0b\u00a0c\u00a0d",  # NBSP splits as str, not as bytes
+        None, "", "  \n\t ", "ab", "abc def", "a\u00a0b\u00a0c\u00a0d",
         "é" * 5, "bin\x00ary " * 4, "\ud800 lone surrogate text here", "word " * 1000,
     ]
     texts = [r["content"] for r in generate_corpus(n_base=400, seed=7, edge_rows=True).rows] + edge

@@ -18,7 +18,7 @@ from facematch_spark.operators import verify as V
 from facematch_spark.plans.pipeline import run_dedupe
 from facematch_spark.sources.checkpoint import StageStore
 
-CFG = DedupeConfig(jaccard_threshold=0.5, max_band_group=5000)
+CFG = DedupeConfig(jaccard_threshold=0.5)
 
 
 @pytest.fixture(scope="module")

@@ -1,7 +1,7 @@
 """Every top-level function and class in ``facematch_spark/`` is reached by
-a shipped entry point.
+a shipped entry point, and every ``DedupeConfig`` field is set by one.
 
-Name-level reachability over the AST, no imports and no Spark. The roots are
+Name-level reachability over the AST, no Spark. The roots are
 the whole of every entry-point file and the module-level statements of every
 package module (they run on import). A top-level definition is reached when
 a reached piece of code names it (``Name``, ``Attribute`` or import alias);
@@ -87,3 +87,27 @@ def test_every_package_definition_is_reached():
         "them, or add to ALLOWED with a reason):\n  " + "\n  ".join(dead)
     )
 
+
+def unset_config_fields() -> list[str]:
+    """``DedupeConfig`` fields that no shipped ``DedupeConfig(...)`` call
+    passes by keyword: a value every caller leaves at its default is a
+    constant, not a setting."""
+    from dataclasses import fields
+
+    from facematch_spark.config import DedupeConfig
+
+    passed: set[str] = set()
+    for rel in [*ENTRY_POINTS, "facematch_spark"]:
+        for f in _files(rel):
+            for n in ast.walk(ast.parse(f.read_text(), str(f))):
+                if isinstance(n, ast.Call) and "DedupeConfig" in _names(n.func):
+                    passed.update(kw.arg for kw in n.keywords if kw.arg)
+    return sorted(f.name for f in fields(DedupeConfig) if f.name not in passed)
+
+
+def test_every_config_field_is_set_by_an_entry_point():
+    unset = unset_config_fields()
+    assert not unset, (
+        "DedupeConfig fields that no shipped entry point sets (make them "
+        "ClassVar constants):\n  " + "\n  ".join(unset)
+    )

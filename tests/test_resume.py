@@ -64,9 +64,9 @@ def test_incremental_detects_new_files(spark, small_df, store_and_runs):
 
 def test_non_append_guard(spark, small_df, tmp_path_factory):
     """An update-in-place (same repo/path/commit, new content) forces a full
-    reset-and-recompute; a pure append still resumes incrementally (VERDICT
-    r4 #3 — the io.resolve_snapshot_pin append-only assumption, now
-    detected instead of documented)."""
+    recompute of the stage tables; a pure append still resumes
+    incrementally (VERDICT r4 #3 — the io.resolve_snapshot_pin append-only
+    assumption, now detected instead of documented)."""
     root = str(tmp_path_factory.mktemp("ckpt_guard"))
     store = StageStore(root, CFG)
     run_dedupe(spark, small_df, CFG, store=store)
@@ -93,12 +93,19 @@ def test_non_append_guard(spark, small_df, tmp_path_factory):
     )
     drift = store.detect_non_append(mutated, spark)
     assert drift["updated"] >= 1
+    # the CLI writes a text input's malformed rows here before run_dedupe
+    quarantine = os.path.join(root, f"quarantine_{CFG.table_suffix()}")
+    os.makedirs(quarantine)
     r = run_dedupe(spark, mutated, CFG, store=store)
     assert r.counts.get("non_append_reset", 0) >= 1
     # the checkpoint was rebuilt from the mutated head: every current row
     # signed, and the stored sha256 now matches the mutated content
     assert store.detect_non_append(mutated, spark) == {"updated": 0, "deleted": 0, "pending": 0}
     assert r.counts["files"] == mutated.count()
+    # the rebuild dropped the stage tables only, and the lineage with them
+    assert os.path.isdir(quarantine)
+    lineage = spark.read.parquet(store.path("lineage_sign"))
+    assert lineage.agg(F.sum("rows_out")).collect()[0][0] == mutated.count()
 
     # delete: dropping head rows leaves stale checkpointed signatures
     shrunk = appended.limit(appended.count() - 2)

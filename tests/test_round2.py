@@ -6,9 +6,7 @@ out, each pinned by a test.
   * incremental resume must push NEW files through candidate generation
     (round 1 reused the stale pairs checkpoint → silent wrong output);
   * salted-tier joins on the SimHash / ANN bucket paths must be lossless;
-  * sha256 computed JVM-side must match hashlib over UTF-8 bytes;
-  * token-mode short docs must be classified too_short, not signed with
-    all-sentinel signatures that LSH-collide with each other.
+  * sha256 computed JVM-side must match hashlib over UTF-8 bytes.
 """
 
 from __future__ import annotations
@@ -42,10 +40,10 @@ def _brute_hamming_pairs(fps: dict[int, int], hmax: int) -> set[tuple[int, int]]
 @pytest.fixture(scope="module")
 def kernel_fps(spark, docs):
     """(file_id, fp) SimHash fingerprints from the engine's signature
-    kernels at radius 8."""
+    kernels; the tests join them at radius 8."""
     from facematch_spark.operators.dedup import doc_signatures
 
-    sigs = doc_signatures(docs, DedupeConfig(simhash_hamming_max=8))
+    sigs = doc_signatures(docs, DedupeConfig())
     return (
         sigs.filter(F.col("status") == "ok")
         .select("file_id", F.col("simhash").alias("fp"))
@@ -145,22 +143,6 @@ def test_sha256_jvm_matches_hashlib(spark):
     got = {r.path: r.sha256 for r in sign_documents(df, DedupeConfig()).collect()}
     for _, path, _, _, content in rows:
         assert got[path] == hashlib.sha256(content.encode("utf-8")).hexdigest()
-
-
-def test_token_mode_short_doc_too_short(spark):
-    """A doc with ≥k chars but <k tokens in token mode must be too_short —
-    not signed (an empty shingle set would LSH-collide with every other)."""
-    from facematch_spark.operators.signatures import sign_documents
-
-    cfg = DedupeConfig(shingle_kind="token", k=5)
-    rows = [
-        ("r", "short.py", "c" * 40, "py", "threewordsonly word tok"),
-        ("r", "long.py", "c" * 40, "py", "one two three four five six seven eight"),
-    ]
-    df = spark.createDataFrame(rows, schema=S.SOURCE_FILES)
-    st = {r.path: r.status for r in sign_documents(df, cfg).collect()}
-    assert st["short.py"] == S.STATUS_TOO_SHORT
-    assert st["long.py"] == S.STATUS_OK
 
 
 def test_ivf_topk_recall_vs_brute(spark):

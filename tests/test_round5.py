@@ -483,36 +483,6 @@ def test_curation_custom_score_elects_different_rep(spark):
     assert default_rep == {2} and short_rep == {1}
 
 
-def test_decontaminate_lsh_matches_exact_on_planted_dups(spark):
-    """The LSH scale path drops the same contaminated docs as the exact
-    cross-PPJoin on a corpus with planted train/eval near-dups (recall gate
-    for the cross-corpus candidate generator)."""
-    from facematch_spark.config import DedupeConfig
-    from facematch_spark.fixtures import corpus_to_pandas, generate_corpus
-    from facematch_spark.operators.dedup import decontaminate
-
-    pdf = corpus_to_pandas(generate_corpus(n_base=40, seed=9, edge_rows=False))
-    pdf = pdf.reset_index(drop=True)
-    pdf["doc_id"] = pdf.index.astype("int64")
-    docs = spark.createDataFrame(
-        pdf.rename(columns={"content": "text"})[["doc_id", "text", "lang"]],
-        "doc_id long, text string, lang string",
-    )
-    # fixture corpus contains mutated near-dup families; an even/odd split
-    # plants cross-side contamination wherever a family straddles the split
-    train = docs.filter("doc_id % 2 = 0")
-    held = docs.filter("doc_id % 2 = 1")
-
-    _, exact = decontaminate(train, held, k=9, threshold=0.5)
-    cfg = DedupeConfig(k=9, jaccard_threshold=0.5, normalize=False)
-    _, lsh = decontaminate(train, held, k=9, threshold=0.5, method="lsh", cfg=cfg)
-
-    exact_ids = {r.doc_id for r in exact.collect()}
-    lsh_ids = {r.doc_id for r in lsh.collect()}
-    assert exact_ids, "fixture must plant at least one cross-side dup"
-    assert lsh_ids == exact_ids
-
-
 def test_cross_corpus_equals_cross_subset_of_self_join(spark):
     """Losslessness of the side-aware PPJoin: on any corpus split, the
     cross-corpus operator returns EXACTLY the cross-side subset of the

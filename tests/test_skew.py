@@ -26,7 +26,8 @@ def test_salted_join_equals_plain_join(spark, skew_df, monkeypatch):
     """Forcing the salting path (HOT_GROUP_CAP=2) must not change the
     candidate pair set vs the plain path (cap high enough that nothing is
     salted) — salting is a physical rewrite, not a semantic one."""
-    cfg = DedupeConfig(jaccard_threshold=0.5, max_band_group=100_000)
+    monkeypatch.setattr(DedupeConfig, "max_band_group", 100_000)
+    cfg = DedupeConfig(jaccard_threshold=0.5)
     sigs = SIG.sign_documents(skew_df, cfg).localCheckpoint()
 
     monkeypatch.setattr(L, "HOT_GROUP_CAP", 100_000)
@@ -43,12 +44,14 @@ def test_max_band_group_drop_bounds_pairs(spark, skew_df, monkeypatch):
     candidate generation; output must shrink (bounded work) but planted
     exact dups must survive through their other, non-boilerplate bands."""
     monkeypatch.setattr(L, "HOT_GROUP_CAP", 4)
-    cfg_all = DedupeConfig(jaccard_threshold=0.5, max_band_group=100_000)
-    cfg_cap = DedupeConfig(jaccard_threshold=0.5, max_band_group=8)
-    sigs = SIG.sign_documents(skew_df, cfg_all).localCheckpoint()
+    cfg = DedupeConfig(jaccard_threshold=0.5)
+    sigs = SIG.sign_documents(skew_df, cfg).localCheckpoint()
 
-    full = L.candidate_pairs(sigs, cfg_all)
-    capped = L.candidate_pairs(sigs, cfg_cap)
+    # the cap is read when the plan is built
+    monkeypatch.setattr(DedupeConfig, "max_band_group", 100_000)
+    full = L.candidate_pairs(sigs, cfg)
+    monkeypatch.setattr(DedupeConfig, "max_band_group", 8)
+    capped = L.candidate_pairs(sigs, cfg)
     n_full, n_capped = full.count(), capped.count()
     assert n_capped <= n_full
 

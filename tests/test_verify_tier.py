@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 
 from facematch_spark.config import DedupeConfig
 
-# a high Jaccard bar and exact-SimHash only, so part of the run_dedupe
-# output is admitted by containment alone
-PIPELINE_CFG = DedupeConfig(jaccard_threshold=0.97, simhash_hamming_max=0)
+# a high Jaccard bar (and exact-SimHash only, set in _pipeline), so part of
+# the run_dedupe output is admitted by containment alone
+PIPELINE_CFG = DedupeConfig(jaccard_threshold=0.97)
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +53,10 @@ def _pipeline(spark, tiny_df, tmp_path_factory):
     # under the other side of the gate
     store = StageStore(str(tmp_path_factory.mktemp("store")), PIPELINE_CFG)
     assert not store.exists("pairs")
-    return _rows(run_dedupe(spark, tiny_df, PIPELINE_CFG, store).pairs)
+    # module-scoped callers cannot take the function-scoped fixture
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DedupeConfig, "simhash_hamming_max", 0)
+        return _rows(run_dedupe(spark, tiny_df, PIPELINE_CFG, store).pairs)
 
 
 @pytest.fixture(scope="module")
