@@ -36,11 +36,10 @@ def connected_components(
     as singleton clusters; pass ``signatures.select("file_id")`` for the
     reference-parity behavior where every scanned file appears.
 
-    The edge relation is materialized once (eager ``localCheckpoint``) before
-    the size probe: both the probe and the chosen path consume ``pairs``,
-    and without the cut the upstream candidate+verify DAG would execute twice.
+    ``pairs`` is read twice (the size probe, then the chosen path), so
+    callers pass a materialized relation: a table read or a pinned one.
     """
-    pairs = pairs.select("id_a", "id_b").localCheckpoint()
+    pairs = pairs.select("id_a", "id_b")
     if DRIVER_EDGES_MAX and pairs.limit(DRIVER_EDGES_MAX + 1).count() <= DRIVER_EDGES_MAX:
         labels = _driver_labels(pairs)
     else:

@@ -546,7 +546,8 @@ def dedup_clusters(docs: DataFrame, k: int, threshold: float) -> DataFrame:
     cluster_id = min doc_id of its connected component (singletons = self)."""
     from facematch_spark.operators.cluster import connected_components
 
-    edges = ngram_jaccard_pairs(docs, k, threshold).select("id_a", "id_b")
+    # pinned: connected_components reads its edges twice
+    edges = ngram_jaccard_pairs(docs, k, threshold).select("id_a", "id_b").localCheckpoint()
     nodes = docs.select(F.col("doc_id").alias("file_id"))
     return (
         connected_components(edges, nodes=nodes)

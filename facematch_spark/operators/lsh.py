@@ -13,8 +13,10 @@ Two documents with Jaccard j collide in ≥1 band with probability
 where the ≥0.99 recall target comes from.
 
 Scale notes (the part the reference cannot do at all):
-  * the join is a shuffle hash/sort-merge equi-join on band_hash — Catalyst
-    picks; AQE skew-join is the backstop;
+  * the join is a shuffled-hash equi-join on (band_id, band_hash):
+    ``tiered_self_join`` hints ``shuffle_hash`` on the side that arrives
+    hash-partitioned from its group-size window; AQE skew-join is the
+    backstop;
   * hot bands (boilerplate: license headers, empty ``__init__.py`` files)
     are handled explicitly BEFORE the join by ``tiered_self_join``: groups
     above ``HOT_GROUP_CAP`` take a salted triangle join over

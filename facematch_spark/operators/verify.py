@@ -5,7 +5,7 @@ There is one exact tier, ``exact_overlap``. The shipped pipeline reaches it
 through ``verify_candidates``; the dedup queries call it directly with their
 own candidates (PPJoin prefixes, MinHash bands, SNM windows).
 ``verify_candidates`` is one linear plan: pin the candidates, score them
-exactly, join the candidate files' signatures onto the scored pairs, apply
+exactly, join the candidate files' SimHash onto the scored pairs, apply
 the thresholds. The signals:
 
   * ``jaccard`` / ``containment`` — exact values over the distinct shingle
@@ -13,11 +13,9 @@ the thresholds. The signals:
     NumPy stage. ``containment`` is ``|A∩B| / min(|A|,|B|)`` — 1.0 when the
     smaller file's shingles are a subset of the larger's (the "file
     embedded verbatim in a bigger file" case).
-  * ``minhash_est`` — estimated Jaccard = fraction of equal signature
-    positions, computed JVM-side with ``zip_with`` + ``filter`` + ``size``.
   * ``hamming`` — SimHash bit distance, ``bit_count(simhash_a ^ simhash_b)``.
 
-The shingle and signature relations are both cut to the files that appear
+The shingle and SimHash relations are both cut to the files that appear
 in a candidate pair (``_semi_to_candidates``) before they are used. Size
 gates pick broadcast or shuffle plans; both sides of every gate give the
 same rows and the same doubles. Borderline containment candidates can be
@@ -38,20 +36,13 @@ from facematch_spark.config import DedupeConfig
 
 
 # Candidate volume under which the distinct candidate-id set is broadcast to
-# semi-join a per-file relation (signatures, shingles) down to participating
-# files. 2M pairs → ≤4M distinct ids ≈ 32 MB broadcast — the same order as
-# the shingle broadcast below and the ANN corpus gate (similarity.py). Past
-# it the semi-join shuffles: at 10^12-file scale the id set no longer fits a
-# broadcast.
+# semi-join a per-file relation (SimHash, shingles) down to participating
+# files, and the cut ``(file_id, simhash)`` rows are broadcast into both
+# SimHash joins. 2M pairs → ≤4M distinct ids ≈ 32 MB, ≤4M 16 B SimHash rows
+# ≈ 64 MB — the same order as the shingle broadcast below and the ANN
+# corpus gate (similarity.py). Past it the semi-join and the SimHash joins
+# shuffle: at 10^12-file scale the id set no longer fits a broadcast.
 ATTACH_BROADCAST_IDS_MAX = 2_000_000
-
-# Candidate volume under which the semi-reduced SIGNATURE relation itself is
-# broadcast into both signature joins (not just the id set): ≤ 25k pairs →
-# ≤ 50k signature rows × ~1.1 KB of minhash array ≈ 55 MB — the same order
-# as the session's 64 MB autoBroadcastJoinThreshold. Past it the relation's
-# array payload outgrows a broadcast and the shuffled-hash joins below are
-# the scale-correct plan.
-ATTACH_BROADCAST_SIGS_MAX_PAIRS = 25_000
 
 # Shingle rows, after the cut to candidate files, under which
 # ``exact_overlap`` broadcasts one flat sorted int64 buffer (≈ 40 MB at the
@@ -207,27 +198,15 @@ def verify_candidates(
     (``utils.py:245-246``); the ``method`` column records which test(s)
     admitted the pair. The candidates are pinned and counted once,
     ``_overlap`` scores each exactly (threshold 0: containment or SimHash
-    alone may admit it), and the candidate files' signatures are joined
-    onto the scored pairs. Past ``ATTACH_BROADCAST_SIGS_MAX_PAIRS`` those
-    joins are SHUFFLE_HASH: the rows carry ~1 KB minhash arrays, which a
-    sort-merge join would sort (a multi-GB spill at 10M+ candidates).
+    alone may admit it), and the candidate files' SimHash is joined onto
+    the scored pairs.
     """
     pairs, n_pairs = _pin(pairs)
-    sig = _semi_to_candidates(signatures.select("file_id", "minhash", "simhash"), pairs, n_pairs)
-    if n_pairs <= ATTACH_BROADCAST_SIGS_MAX_PAIRS:
-        # the semi-reduced signature relation has ≤ 2·n_pairs rows; under
-        # this gate it fits a broadcast outright, so both joins run
-        # map-side and the scored pairs cross no further exchange
-        a, b = F.broadcast(sig.alias("sa")), F.broadcast(sig.alias("sb"))
-    else:
-        a, b = sig.alias("sa").hint("shuffle_hash"), sig.alias("sb").hint("shuffle_hash")
+    sim = _semi_to_candidates(signatures.select("file_id", "simhash"), pairs, n_pairs)
+    a, b = sim.alias("sa"), sim.alias("sb")
+    if n_pairs <= ATTACH_BROADCAST_IDS_MAX:
+        a, b = F.broadcast(a), F.broadcast(b)
     exact = _overlap(pairs, n_pairs, shingles)
-    eq = F.size(
-        F.filter(
-            F.zip_with(F.col("sa.minhash"), F.col("sb.minhash"), lambda x, y: x == y),
-            lambda v: v,
-        )
-    )
     scored = (
         exact.join(a, exact.id_a == F.col("sa.file_id"))
         .join(b, exact.id_b == F.col("sb.file_id"))
@@ -235,7 +214,6 @@ def verify_candidates(
             "id_a",
             "id_b",
             "jaccard",
-            (eq / F.size(F.col("sa.minhash"))).alias("minhash_est"),
             F.bit_count(F.col("sa.simhash").bitwiseXOR(F.col("sb.simhash"))).cast("int").alias("hamming"),
             "containment",
         )

@@ -126,7 +126,8 @@ def run_dedupe(
     # ---- stage 3: clustering ----
     t0 = time.perf_counter()
     clusters = stage("clusters", S.CLUSTERS, lambda: C.connected_components(pairs, nodes=sigs.select("file_id")))
-    counts["clusters"] = clusters.select("cluster_id").distinct().count()
+    # each component has exactly one row labelled with its own (minimum) id
+    counts["clusters"] = clusters.filter(F.col("file_id") == F.col("cluster_id")).count()
     times["cluster"] = time.perf_counter() - t0
 
     rows_key = {"sign": "files", "dedupe": "pairs", "cluster": "clusters"}

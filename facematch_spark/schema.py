@@ -57,7 +57,6 @@ PAIRS = T.StructType(
         T.StructField("id_a", T.LongType(), False),
         T.StructField("id_b", T.LongType(), False),
         T.StructField("jaccard", T.DoubleType(), True),
-        T.StructField("minhash_est", T.DoubleType(), True),
         T.StructField("hamming", T.IntegerType(), True),
         T.StructField("containment", T.DoubleType(), True),
         T.StructField("method", T.StringType(), False),

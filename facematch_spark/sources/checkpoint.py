@@ -111,9 +111,10 @@ class StageStore:
         the head; ``pending`` = head rows whose file_id is not checkpointed
         (the rows ``pending_inputs`` returns; reported only when a checkpoint
         exists). One sha256 projection over the head scan (cheap next to
-        signing, and only on resume-with-checkpoint) + two narrow joins on
-        (file_id, sha256) longs/strings — no content moves. Works identically
-        on the Iceberg and Parquet paths (needs no snapshot metadata)."""
+        signing, and only on resume-with-checkpoint) + one full-outer join
+        on file_id of (file_id, sha256) longs/strings, counted in a single
+        aggregate — no content moves. Works identically on the Iceberg and
+        Parquet paths (needs no snapshot metadata)."""
         if not self.exists("signatures"):
             return {"updated": 0, "deleted": 0}
         done = self.read(spark, "signatures", S.SIGNATURES).select("file_id", "sha256")

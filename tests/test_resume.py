@@ -147,6 +147,37 @@ def test_crash_after_signing_resumes_to_fresh_result(spark, small_df, tmp_path_f
     assert any((a in new_ids) != (b in new_ids) for a, b, *_ in rows(fresh.pairs, pair_cols))
 
 
+def test_pairs_table_with_minhash_est_resumes(spark, small_df, tmp_path_factory):
+    """A store whose pairs table still carries the ``minhash_est`` column
+    that verification once wrote resumes: the table is read back, not
+    rewritten, with exactly the PAIRS columns. The column went without a
+    ``config_hash`` or ``KERNEL_VERSION`` change, so the store keeps its key."""
+    from pyspark.sql import types as T
+
+    from facematch_spark.functions.hashing import KERNEL_VERSION
+
+    assert (CFG.config_hash, KERNEL_VERSION) == ("10ec291078cb", 2)
+    store = StageStore(str(tmp_path_factory.mktemp("ckpt_minhash_est")), CFG)
+    first = run_dedupe(spark, small_df, CFG, store=store)
+    pdf = first.pairs.toPandas()
+    expect = sorted(map(tuple, pdf.itertuples(index=False)))
+    pdf.insert(3, "minhash_est", pdf["jaccard"])
+    fields = list(S.PAIRS.fields)
+    fields.insert(3, T.StructField("minhash_est", T.DoubleType(), True))
+    store.write("pairs", spark.createDataFrame(pdf, schema=T.StructType(fields)))
+
+    def files(stage):
+        root = store.path(stage)
+        return sorted((f, os.stat(os.path.join(root, f)).st_mtime_ns) for f in os.listdir(root))
+
+    before = files("pairs")
+    res = run_dedupe(spark, small_df, CFG, store=store)
+    assert files("pairs") == before
+    assert res.pairs.columns == S.PAIRS.fieldNames()
+    assert sorted(map(tuple, res.pairs.collect())) == expect
+    assert res.counts == first.counts
+
+
 def test_metrics_lineage_written(spark, small_df, store_and_runs):
     store, _, _ = store_and_runs
     m = store.read_metrics(spark)

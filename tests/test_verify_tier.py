@@ -1,9 +1,10 @@
 """Both sides of every verify gate give the same rows.
 
 ``verify.exact_overlap`` is the one exact tier; ``verify_candidates`` joins
-the candidate files' signatures onto its output for the MinHash / SimHash
-metrics. Each case forces one size gate to the branch the test fixtures
-never reach on their own (at scale, the shuffle plans) and asserts
+the candidate files' SimHash onto its output for the Hamming distance. Each
+case forces one size gate to the branch the test fixtures never reach on
+their own (at scale, the shuffle plans: ``ATTACH_BROADCAST_IDS_MAX`` flips
+both the candidate-id cut and the SimHash join) and asserts
 bit-identical rows — pairs AND metric doubles — against the default plans,
 for the PPJoin query and for ``run_dedupe``.
 """
@@ -68,10 +69,7 @@ def default_rows(spark, docs_df, tiny_df, tmp_path_factory):
     return ngram, pipeline
 
 
-@pytest.mark.parametrize(
-    "gate",
-    ["BROADCAST_SHINGLE_LIMIT", "ATTACH_BROADCAST_IDS_MAX", "ATTACH_BROADCAST_SIGS_MAX_PAIRS"],
-)
+@pytest.mark.parametrize("gate", ["BROADCAST_SHINGLE_LIMIT", "ATTACH_BROADCAST_IDS_MAX"])
 def test_broadcast_and_fallback_tiers_agree(
     spark, docs_df, tiny_df, default_rows, monkeypatch, tmp_path_factory, gate
 ):

@@ -7,8 +7,8 @@ actually complete and scale" evidence.
 
 Branches exercised:
   A. the shipped pipeline (``run_dedupe``: sign → LSH → exact verify →
-     cluster) on the FULL 1M-doc corpus with the attach broadcast/semi gates
-     forced OFF (shuffled id semi-joins and signature joins — the
+     cluster) on the FULL 1M-doc corpus with the attach broadcast gate
+     forced OFF (shuffled id semi-joins and SimHash joins — the
      10^12-file plan);
   B. distributed connected components on a >1M-edge graph (the sf0.1
      co-purchase graph, 1.196M edges — naturally past the 1M driver
@@ -90,10 +90,9 @@ def main() -> None:
     # run A checkpoints its stages as the CLI does, in a fresh store
     store_root = tempfile.mkdtemp(prefix="fm_probe_store_", dir=local_dir)
 
-    # ---- A: run_dedupe on 1M docs, attach gates forced to the full-shuffle branch
-    ids_gate, sigs_gate = V.ATTACH_BROADCAST_IDS_MAX, V.ATTACH_BROADCAST_SIGS_MAX_PAIRS
+    # ---- A: run_dedupe on 1M docs, attach gate forced to the full-shuffle branch
+    ids_gate = V.ATTACH_BROADCAST_IDS_MAX
     V.ATTACH_BROADCAST_IDS_MAX = 0
-    V.ATTACH_BROADCAST_SIGS_MAX_PAIRS = 0
     try:
         if "A" not in runs:
             raise StopIteration
@@ -109,7 +108,6 @@ def main() -> None:
         pass
     finally:
         V.ATTACH_BROADCAST_IDS_MAX = ids_gate
-        V.ATTACH_BROADCAST_SIGS_MAX_PAIRS = sigs_gate
         shutil.rmtree(store_root, ignore_errors=True)
     drop()
 
